@@ -1,7 +1,14 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.util.control.NonFatal
+import org.apache.commons.io.FileUtils
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import graft.core._
 import graft.operators._
 import graft.sources.DocSource
@@ -10,11 +17,15 @@ import graft.sources.DocSource
   * plus the north-rule flagship job — S2 covering + PIP spatial join +
   * tile assignment over the synthetic interleaved docs table — measured
   * at two parallelism levels (local[N/4] vs local[N]) as the sandbox
-  * stand-in for N vs 4N executors (BASELINE.md).
+  * stand-in for N vs 4N executors (BASELINE.md), then the skew-join A/B,
+  * the kNN amortization curves, a 2x/3x input sweep and a forced-spill A/B.
   *
-  * Prints ONE JSON line:
+  * Writes the full artifact to SPARK_GRAFT_BENCH_FULL (default
+  * BENCH/bench_full_<utc-stamp>.json) and prints ONE compact JSON line:
   *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},
   *    "pipeline":{"docs":…,"docs_per_sec":…, "scaling":{…}}, "sf":"…"}
+  * A headline query that throws is recorded as {"error":"<msg>"} and left
+  * out of `value`.
   */
 object Bench {
   private val headline = Seq(
@@ -26,7 +37,7 @@ object Bench {
   /** Bench-only heavy-operator queries (not driver-gated: a 10^3-shape
     * oracle would be megabytes of SQL; correctness is covered by the
     * differential specs in S2JoinsSpec/PlanAuditSpec). */
-  private val extraQueries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
+  private val extraQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // UNBOUNDED closest-shapes kNN against 10^3 shapes: exercises the
     // ring-escalation CellIntervalIndex prefilter (per-row work scales
     // with local density, not shape count)
@@ -67,22 +78,58 @@ object Bench {
       S2Joins.knnJoinLarge(docs, targets, k = 5, radii = Seq(0.1, 0.4))
     }))
 
-  private def session(cores: Int, aqe: Boolean = true): SparkSession = {
-    val s = SparkSession.builder()
+  /** A fresh local session at `cores`, with `conf` applied last. Driver
+    * memory must be sized at JVM launch (local mode); config here would be
+    * silently ignored. */
+  private def session(cores: Int, conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      // AQE stays ON for the headline queries (it is the production
-      // default) but OFF for the scaling phase: the flagship's only
-      // shuffle is ~|regions|x|tiles| rows, so AQE's runtime re-planning
-      // is pure fixed overhead (~0.2 s/job measured) that 32 cores cannot
-      // amortize — it would be measured as false scaling loss.
-      .config("spark.sql.adaptive.enabled", aqe.toString)
       .config("spark.ui.enabled", "false")
-      // driver memory must be sized at JVM launch (local mode); config here
-      // would be silently ignored
-      .getOrCreate()
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  // AQE stays ON for the headline queries (it is the production default)
+  // but OFF for the flagship phases: the flagship's only shuffle is
+  // ~|regions|x|tiles| rows, so AQE's runtime re-planning is pure fixed
+  // overhead (~0.2 s/job measured) that 32 cores cannot amortize — it
+  // would be measured as false scaling loss.
+  private val aqeOff = "spark.sql.adaptive.enabled" -> "false"
+
+  /** Runs `f` once; returns its result and its wall seconds. */
+  private def timed[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = f
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One finished task: stage, shuffle-read bytes, executor run time (ms)
+    * and bytes spilled from memory and to disk. */
+  private final case class TaskStat(stage: Int, readBytes: Long, runMs: Long,
+                                    spillMem: Long, spillDisk: Long)
+
+  /** Per-task tally of one session's jobs. */
+  private final class TaskTally(sc: SparkContext) extends SparkListener {
+    private val tasks = new java.util.concurrent.ConcurrentLinkedQueue[TaskStat]()
+    sc.addSparkListener(this)
+
+    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+      val m = te.taskMetrics
+      if (m != null) tasks.add(TaskStat(te.stageId, m.shuffleReadMetrics.totalBytesRead,
+        m.executorRunTime, m.memoryBytesSpilled, m.diskBytesSpilled))
+      ()
+    }
+
+    /** Tasks finished since the last drain. Waits out the async listener
+      * bus first: the trailing task-end events are often the stragglers
+      * themselves. */
+    def drain(): Seq[TaskStat] = {
+      ListenerBridge.waitUntilListenersProcessed(sc)
+      Iterator.continually(tasks.poll()).takeWhile(_ != null).toList
+    }
   }
 
   /** Materialize the synthetic interleaved docs table once (generation is
@@ -101,6 +148,22 @@ object Bench {
   /** Input path, versioned by layout so a cached 64-file materialization
     * from an older build is not silently reused. */
   def docsPath(n: Long): String = s"/tmp/graft_bench_docs_${n}_p256"
+
+  /** Full scan of the two columns the flagship reads. */
+  private def scan(spark: SparkSession, path: String): Unit = {
+    spark.read.parquet(path).agg(sum(col("lat") + col("lng"))).head()
+    ()
+  }
+
+  /** The n-doc input table, materialized if missing, with the page cache
+    * warmed on the columns the flagship reads (untimed; also flushes any
+    * writeback from a fresh materialize out of the way). */
+  private def inputTable(spark: SparkSession, n: Long): String = {
+    val path = docsPath(n)
+    if (!new java.io.File(s"$path/_SUCCESS").exists()) materializeDocs(spark, n, path)
+    scan(spark, path)
+    path
+  }
 
   def benchRegions: Seq[(Int, S2Region)] = Seq(
     1 -> S2TextFormat.parsePolygon("0:0, 0:35, 30:35, 30:0"),
@@ -130,6 +193,10 @@ object Bench {
       .agg(sum("count")).head().getLong(0)
   }
 
+  /** One flagship session's timed reps and its adjacent ALU ceiling
+    * (ops/s) and best scan seconds. */
+  private final case class Session(reps: Seq[Double], ceil: Double, scanSec: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -140,6 +207,13 @@ object Bench {
     // effects) and cost more signal than the better amortization of the
     // ~0.35 s fixed per-job cost bought.
     val benchDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "192000000").toLong
+    val scaleSweep = sys.env.getOrElse("SPARK_GRAFT_SCALE_SWEEP", "1") != "0"
+    // run-stamped by default, so no run overwrites an earlier complete one
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", {
+      val stamp = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
+        .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
+      s"BENCH/bench_full_$stamp.json"
+    })
 
     // pure-CPU thread-scaling ceiling measured adjacent to each session:
     // this VM's vCPUs show steal/turbo variance, so raw 4x is unattainable
@@ -159,13 +233,37 @@ object Bench {
         acc
       }
       val ts = Array.fill(threads)(new Thread(() => { work(per); () }))
-      val t0 = System.nanoTime()
-      ts.foreach(_.start()); ts.foreach(_.join())
-      threads * per / ((System.nanoTime() - t0) / 1e9)
+      threads * per / timed { ts.foreach(_.start()); ts.foreach(_.join()) }._2
+    }
+
+    // the full artifact's fields in emission order, checkpointed after
+    // each phase: a run killed mid-sweep (timeout, disk pressure)
+    // still leaves a parseable artifact with everything measured so far;
+    // the final write replaces the snapshot and drops the "partial" marker
+    val artifact = collection.mutable.ArrayBuffer[(String, String)]()
+    def writeArtifact(partial: Option[String]): Unit = {
+      val fields = partial.map(p => "partial" -> jsonStr(p)).toSeq ++ artifact :+
+        ("sf" -> jsonStr(sfDir))
+      val json = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      // temp file + atomic rename: a kill mid-write never leaves a
+      // truncated artifact in place of the previous snapshot
+      try {
+        val p = Paths.get(fullPath).toAbsolutePath
+        Files.createDirectories(p.getParent)
+        val tmp = p.resolveSibling(s"${p.getFileName}.tmp")
+        try {
+          Files.write(tmp, json.getBytes(UTF_8))
+          Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE)
+        } finally Files.deleteIfExists(tmp)
+        ()
+      } catch {
+        case e: Exception =>
+          System.err.println(s"bench: could not write $fullPath: $e")
+      }
     }
 
     // ---- phase 1: headline queries at full parallelism ----
-    var spark = session(cpus)
+    val spark = session(cpus)
     // the headline runs in ONE contiguous interval with no per-query
     // ceiling normalization (unlike the scaling phase), so a loaded
     // interval inflates every query; the adjacent probes make that
@@ -173,20 +271,21 @@ object Bench {
     // (compare probe G-ops/s across rounds before reading the queries)
     val headlineProbeStart = cpuRate(cpus)
     // warmup (JIT + codegen caches) on the small SF
-    try SparkEntry.queries("q1_agg")(spark, sfDir).count() catch { case _: Throwable => }
+    try SparkEntry.queries("q1_agg")(spark, sfDir).count()
+    catch { case NonFatal(e) => System.err.println(s"bench: warm-up q1_agg failed: $e") }
     // best-of-2 per query: the first rep doubles as that query's own JIT /
     // codegen / shuffle-file warmup, and the min removes one-sided
     // interval contamination that a single timed rep is fully exposed to
-    // (the q1_agg warmup above only covers scan+agg kernels).
-    val results = headline.map { name =>
+    // (the q1_agg warmup above only covers scan+agg kernels). A query
+    // that throws gets its error recorded, not a time.
+    val results: Seq[(String, Either[Throwable, Double])] = headline.map { name =>
       val fn = SparkEntry.queries.getOrElse(name, extraQueries(name))
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val r1 = once()
-      name -> math.min(r1, once())
+      def once(): Double = timed(fn(spark, sfDir).count())._2
+      name -> (try Right(math.min(once(), once())) catch {
+        case NonFatal(e) =>
+          System.err.println(s"bench: $name failed: $e")
+          Left(e)
+      })
     }
     val headlineProbeEnd = cpuRate(cpus)
 
@@ -200,12 +299,7 @@ object Bench {
     // flipped each round) with REPS timed reps per session, so any noise
     // interval hits both levels symmetrically; report the MEDIAN per level
     // (best + all reps kept in the JSON).
-    val docsPath = Bench.docsPath(benchDocs)
-    if (!new java.io.File(s"$docsPath/_SUCCESS").exists())
-      materializeDocs(spark, benchDocs, docsPath)
-    // warm the page cache on the columns the pipeline reads (untimed);
-    // also flushes any writeback from a fresh materialize out of the way
-    spark.read.parquet(docsPath).agg(sum(col("lat") + col("lng"))).head()
+    val docsPath = inputTable(spark, benchDocs)
     spark.stop()
 
     def median(xs: Seq[Double]): Double = {
@@ -257,8 +351,8 @@ object Bench {
     // pass overlaps decode with compute, so vs-hw can read > 1; both
     // component ceilings and scan times are recorded so the bound is
     // recomputable from the artifact.
-    def sessionReps(cores: Int): (Seq[Double], Double, Double) = {
-      val s = session(cores, aqe = false)
+    def sessionReps(cores: Int): Session = {
+      val s = session(cores, aqeOff)
       val warm = pipeline(s, docsPath) // warmup (JIT, codegen, broadcast)
       // cross-parallelism equality gate: lo and hi sessions must agree
       if (!matchedSet) { matched = warm; matchedSet = true }
@@ -269,47 +363,36 @@ object Bench {
       // lingering writeback) worth ~2x on a bad interval
       pipeline(s, docsPath)
       val ceil = cpuRate(cores)
-      def scanOnce(): Double = {
-        val t0 = System.nanoTime()
-        s.read.parquet(docsPath).agg(sum(col("lat") + col("lng"))).head()
-        (System.nanoTime() - t0) / 1e9
-      }
-      scanOnce() // untimed (agg codegen; the decode path is already warm)
-      val scanSec = math.min(scanOnce(), scanOnce())
+      scan(s, docsPath) // untimed (agg codegen; the decode path is already warm)
+      val scanSec = math.min(timed(scan(s, docsPath))._2, timed(scan(s, docsPath))._2)
       val times = (1 to repsPerRound).map { _ =>
-        val t0 = System.nanoTime()
-        val m = pipeline(s, docsPath)
+        val (m, sec) = timed(pipeline(s, docsPath))
         require(m == matched, s"result drift: $m vs $matched")
-        (System.nanoTime() - t0) / 1e9
+        sec
       }
       s.stop()
-      (times, ceil, scanSec)
+      Session(times, ceil, scanSec)
     }
-    val repsLo = collection.mutable.ArrayBuffer[Double]()
-    val repsHi = collection.mutable.ArrayBuffer[Double]()
-    val ceilLo = collection.mutable.ArrayBuffer[Double]()
-    val ceilHi = collection.mutable.ArrayBuffer[Double]()
-    val scanLo = collection.mutable.ArrayBuffer[Double]()
-    val scanHi = collection.mutable.ArrayBuffer[Double]()
-    for (r <- 0 until rounds) {
-      val order = if (r % 2 == 0) Seq(lowCores, cpus) else Seq(cpus, lowCores)
-      for (cores <- order) {
-        val (ts, c, sc) = sessionReps(cores)
-        if (cores == cpus) { repsHi ++= ts; ceilHi += c; scanHi += sc }
-        else { repsLo ++= ts; ceilLo += c; scanLo += sc }
-      }
+    val sessions = for {
+      r <- 0 until rounds
+      cores <- if (r % 2 == 0) Seq(lowCores, cpus) else Seq(cpus, lowCores)
+    } yield cores -> sessionReps(cores)
+    val (hi, lo) = sessions.partition(_._1 == cpus) match {
+      case (h, l) => (h.map(_._2), l.map(_._2))
     }
+    val repsHi = hi.flatMap(_.reps)
+    val repsLo = lo.flatMap(_.reps)
 
-    val (keptHi, rejHi) = rejectOutliers(repsHi.toSeq)
-    val (keptLo, rejLo) = rejectOutliers(repsLo.toSeq)
+    val (keptHi, rejHi) = rejectOutliers(repsHi)
+    val (keptLo, rejLo) = rejectOutliers(repsLo)
     val tHi = median(keptHi)
     val tLo = median(keptLo)
     val speedup = tLo / tHi
     val ratio = cpus.toDouble / lowCores
     val efficiency = speedup / ratio
-    val aluSpeedup = median(ceilHi.toSeq) / median(ceilLo.toSeq)
-    val scanSecLo = median(scanLo.toSeq)
-    val scanSecHi = median(scanHi.toSeq)
+    val aluSpeedup = median(hi.map(_.ceil)) / median(lo.map(_.ceil))
+    val scanSecLo = median(lo.map(_.scanSec))
+    val scanSecHi = median(hi.map(_.scanSec))
     val scanSpeedup = scanSecLo / scanSecHi
     // attainable speedup: scan component floored at the measured scan,
     // compute component floored at the ALU ceiling (serial composition)
@@ -317,16 +400,18 @@ object Bench {
       tLo / (scanSecHi + math.max(0.0, tLo - scanSecLo) / aluSpeedup)
     val normEfficiency = if (hwSpeedup > 0) speedup / hwSpeedup else efficiency
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    def queriesJson(round: Double => Double, err: Throwable => String): String =
+      results.map { case (k, v) =>
+        s""""$k":""" + v.fold(e => s"""{"error":${jsonStr(err(e))}}""", t => round(t).toString)
+      }.mkString("{", ",", "}")
+    val total = results.flatMap(_._2.toOption).sum
     def arr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
     val pipelineJson =
       s"""{"docs":$benchDocs,"matched":$matched,"cores_hi":$cpus,"cores_lo":$lowCores,""" +
       s""""protocol":"interleaved ${rounds}x$repsPerRound median, reject > ${outlierFactor}x level best",""" +
       s""""sec_hi":$tHi,"sec_lo":$tLo,""" +
       s""""sec_hi_best":${repsHi.min},"sec_lo_best":${repsLo.min},""" +
-      s""""reps_hi":${arr(repsHi.toSeq)},"reps_lo":${arr(repsLo.toSeq)},""" +
+      s""""reps_hi":${arr(repsHi)},"reps_lo":${arr(repsLo)},""" +
       s""""reps_hi_rejected":${arr(rejHi)},"reps_lo_rejected":${arr(rejLo)},""" +
       s""""docs_per_sec_hi":${benchDocs / tHi},"docs_per_sec_lo":${benchDocs / tLo},""" +
       s""""speedup":$speedup,"scaling_efficiency":$efficiency,""" +
@@ -334,43 +419,21 @@ object Bench {
       s""""scan_sec_lo":$scanSecLo,"scan_sec_hi":$scanSecHi,""" +
       s""""hw_ceiling_speedup":$hwSpeedup,"scaling_efficiency_vs_hw":$normEfficiency}"""
 
-    // checkpoint the full artifact after each phase: a run killed mid-
-    // sweep (driver timeout, disk pressure) still leaves a parseable
-    // artifact with everything measured so far; the final write replaces
-    // the snapshot and drops the "partial" marker
-    def writeFullArtifact(json: String): Unit = {
-      val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-        "BENCH/bench_full_r05.json")
-      try {
-        val p = java.nio.file.Paths.get(fullPath)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p, json.getBytes("UTF-8"))
-        ()
-      } catch {
-        case e: Exception =>
-          System.err.println(s"bench: could not write $fullPath: $e")
-      }
-    }
-
-    writeFullArtifact(
-      s"""{"partial":"after_scaling","metric":"total","value":$total,""" +
-      s""""unit":"sec","queries":$qs,""" +
-      s""""headline_cpu_probe_gops":{"start":${headlineProbeStart / 1e9},""" +
-      s""""end":${headlineProbeEnd / 1e9}},""" +
-      s""""pipeline":$pipelineJson,"sf":"$sfDir"}""")
+    artifact ++= Seq(
+      "metric" -> "\"total\"", "value" -> total.toString, "unit" -> "\"sec\"",
+      "queries" -> queriesJson(identity, _.toString.take(500)),
+      "headline_cpu_probe_gops" ->
+        s"""{"start":${headlineProbeStart / 1e9},"end":${headlineProbeEnd / 1e9}}""",
+      "pipeline" -> pipelineJson)
+    writeArtifact(Some("after_scaling"))
 
     // ---- phase 3: skew-join A/B + kNN fixed-cost amortization ----
     // (round-3 verdict items 3 and 4: prove the salted term join beats
     // the unsalted plan on clustered data, and that the heavy kNN
     // entries' fixed costs amortize — docs/sec RISES with input size.)
-    val spark3 = session(cpus)
-    import org.apache.spark.sql.DataFrame
-    def timed(f: => Long): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def geoDocs(n: Long, clusterFrac: Double = 0.8, nClusters: Int = 20): DataFrame = {
+    def geoDocs(s: SparkSession, n: Long, clusterFrac: Double, nClusters: Int = 20): DataFrame = {
       val d = S2Joins.withCellId(
-        DocSource.docs(spark3, n, nClusters = nClusters, clusterFrac = clusterFrac)
+        DocSource.docs(s, n, nClusters = nClusters, clusterFrac = clusterFrac)
           .select("doc_id", "lat", "lng"),
         col("lat"), col("lng")).cache()
       d.count() // materialize: generation is not part of the measured job
@@ -388,62 +451,37 @@ object Bench {
     // heaviest shuffle stage's max/median per-task shuffle-read ratio.
     val skewDocsN = sys.env.getOrElse("SPARK_GRAFT_SKEW_DOCS", "4000000").toLong
     val (skewJson, skewCompact) = {
+      val spark3 = session(cpus, aqeOff,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.shuffle.partitions" -> "256")
       import spark3.implicits._
-      // per-task (shuffle-read bytes, executorRunTime) of every shuffle
-      // stage: bytes = reducer DATA balance; runtime = COMPUTE balance
-      // (the hot term's task also runs the PIP refine for its whole
-      // candidate block, so runtime skew is the straggler the bytes
-      // ratio predicts)
-      val stageReads = new java.util.concurrent.ConcurrentHashMap[Int, java.util.Vector[(Long, Long)]]()
-      spark3.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null && m.shuffleReadMetrics.totalBytesRead > 0) stageReads
-            .computeIfAbsent(te.stageId, _ => new java.util.Vector[(Long, Long)]())
-            .add((m.shuffleReadMetrics.totalBytesRead, m.executorRunTime))
-        }
-      })
-      def heaviestStageRatios(): (Double, Double) = {
-        import scala.jdk.CollectionConverters._
-        val heaviest = stageReads.asScala.values
-          .maxBy(_.asScala.map(_._1.toDouble).sum).asScala.toSeq
-        def maxOverMedian(xs: Seq[Double]): Double = {
-          // floor the median at 1 (byte / millisecond): half the reducers
-          // finishing in 0 ms is possible on a skewed stage, and a 0
-          // denominator would emit Infinity into the JSON artifact
-          val s = xs.sorted; s.last / math.max(1.0, s(s.size / 2))
-        }
-        (maxOverMedian(heaviest.map(_._1.toDouble)),
-          maxOverMedian(heaviest.map(_._2.toDouble)))
+      val tally = new TaskTally(spark3.sparkContext)
+      def maxOverMedian(xs: Seq[Double]): Double = {
+        // floor the median at 1 (byte / millisecond): half the reducers
+        // finishing in 0 ms is possible on a skewed stage, and a 0
+        // denominator would emit Infinity into the JSON artifact
+        val s = xs.sorted; s.last / math.max(1.0, s(s.size / 2))
       }
-      val saved = Seq("spark.sql.adaptive.enabled",
-        "spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
-        .map(k => k -> spark3.conf.get(k))
-      spark3.conf.set("spark.sql.adaptive.enabled", "false")
-      spark3.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark3.conf.set("spark.sql.shuffle.partitions", "256")
-      val docs = geoDocs(skewDocsN, clusterFrac = 0.9, nClusters = 2)
-      val polys = Seq((1,
-        graft.SparkEntry.skewPolyText))
-        .toDF("qid", "poly")
+      val docs = geoDocs(spark3, skewDocsN, clusterFrac = 0.9, nClusters = 2)
+      val polys = Seq((1, SparkEntry.skewPolyText)).toDF("qid", "poly")
+      // wall, then the heaviest shuffle stage's max/median per-task
+      // shuffle-read bytes (reducer DATA balance) and run time (COMPUTE
+      // balance: the hot term's task also runs the PIP refine for its
+      // whole candidate block, so runtime skew is the straggler the bytes
+      // ratio predicts)
       def run(threshold: Long): (Double, Double, Double) = {
-        stageReads.clear()
         val sec = timed(S2Joins.termPolygonJoin(docs, polys,
           saltThreshold = threshold, saltSampleFraction = 0.01,
-          minDetectBytes = 0L).count())
-        // drain the async listener bus: the trailing task-end events are
-        // often the stragglers themselves
-        org.apache.spark.sql.graftbridge.ListenerBridge
-          .waitUntilListenersProcessed(spark3.sparkContext)
-        val (readRatio, cpuRatio) = heaviestStageRatios()
-        (sec, readRatio, cpuRatio)
+          minDetectBytes = 0L).count())._2
+        val heaviest = tally.drain().filter(_.readBytes > 0).groupBy(_.stage).values
+          .maxBy(_.map(_.readBytes.toDouble).sum)
+        (sec, maxOverMedian(heaviest.map(_.readBytes.toDouble)),
+          maxOverMedian(heaviest.map(_.runMs.toDouble)))
       }
       run(0L) // warmup (JIT, shuffle files) — unsalted shape
       val (u1, ur, uc) = run(0L); val (u2, _, _) = run(0L)
       val (s1, sr, sc) = run(100000L); val (s2, _, _) = run(100000L)
       val unsalted = math.min(u1, u2); val salted = math.min(s1, s2)
-      docs.unpersist()
-      saved.foreach { case (k, v) => spark3.conf.set(k, v) }
+      spark3.stop()
       val full =
         s"""{"docs":$skewDocsN,"shuffle_partitions":256,"broadcast":"off","aqe":"off",""" +
         s""""unsalted_sec":$unsalted,"salted_sec":$salted,""" +
@@ -463,9 +501,10 @@ object Bench {
     // clustered data are a density property, not a fixed-cost one — the
     // uniform table isolates what this phase is meant to prove.
     val knnScaleJson = {
+      val spark3 = session(cpus)
       val rnd = new scala.util.Random(5)
       val targets10k = (0 until 10000).map { i =>
-        (i, graft.core.V3.fromLatLngDegrees(
+        (i, V3.fromLatLngDegrees(
           rnd.nextDouble() * 170 - 85, rnd.nextDouble() * 360 - 180))
       }
       // each curve point is min-of-2 after a JIT warmup — same
@@ -473,39 +512,36 @@ object Bench {
       // rejection: the reps are identical deterministic work, so the
       // slower one measures the interval (steal), not the engine, and a
       // single contaminated point would fake a curve inflection
+      def point(n: Long, sec: Double): String =
+        s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec}}"""
       def knn10kAt(n: Long): String = {
-        val docs = geoDocs(n, clusterFrac = 0.0)
+        val docs = geoDocs(spark3, n, clusterFrac = 0.0)
         S2Joins.knnJoin(docs, targets10k.take(500), k = 3).count() // warm JIT
         val sec = Seq.fill(2)(
-          timed(S2Joins.knnJoin(docs, targets10k, k = 3).count())).min
+          timed(S2Joins.knnJoin(docs, targets10k, k = 3).count())._2).min
         docs.unpersist()
-        s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec}}"""
+        point(n, sec)
       }
       def knnLargeAt(n: Long): String = {
-        val docs = geoDocs(n, clusterFrac = 0.0)
+        val docs = geoDocs(spark3, n, clusterFrac = 0.0)
         val step = math.max(1L, n / 2000) // ~2k targets at every size
         val targets = docs.where(col("doc_id").substr(4, 9).cast("long") % step === 0)
           .select(col("doc_id").substr(4, 9).cast("int").as("qid"),
             (col("lat") * 0.97).as("t_lat"), (col("lng") * 0.97).as("t_lng"))
         val sec = Seq.fill(2)(timed(
-          S2Joins.knnJoinLarge(docs, targets, k = 5, radii = Seq(0.1, 0.4)).count())).min
+          S2Joins.knnJoinLarge(docs, targets, k = 5, radii = Seq(0.1, 0.4)).count())._2).min
         docs.unpersist()
-        s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec}}"""
+        point(n, sec)
       }
       val base = sys.env.getOrElse("SPARK_GRAFT_KNN_SCALE_BASE", "1000000").toLong
       val k10 = Seq(base, 2 * base, 4 * base).map(knn10kAt)
       val kLg = Seq(base / 2, base, 2 * base).map(knnLargeAt)
+      spark3.stop()
       s"""{"knn_10k":[${k10.mkString(",")}],"knn_large":[${kLg.mkString(",")}]}"""
     }
-    spark3.stop()
 
-    writeFullArtifact(
-      s"""{"partial":"after_skew_knn","metric":"total","value":$total,""" +
-      s""""unit":"sec","queries":$qs,""" +
-      s""""headline_cpu_probe_gops":{"start":${headlineProbeStart / 1e9},""" +
-      s""""end":${headlineProbeEnd / 1e9}},""" +
-      s""""pipeline":$pipelineJson,"skew_join":$skewJson,""" +
-      s""""knn_scale":$knnScaleJson,"sf":"$sfDir"}""")
+    artifact ++= Seq("skew_join" -> skewJson, "knn_scale" -> knnScaleJson)
+    writeArtifact(Some("after_skew_knn"))
 
     // ---- phase 4: scale sweep + forced-spill (round-5 scale-proofing:
     // the flagship at 2x and 3x its 18 GB input — 10x parquet bytes does
@@ -515,75 +551,43 @@ object Bench {
     // cell-keyed table produces the identical total order while spilling
     // to disk.) ----
     val bytesPerDoc = 101L // measured: 192M docs ≈ 18 GiB parquet
-    def rmDir(path: String): Unit = {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
-    }
-    var sweepPlan = ""
-    val sweepJson =
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE_SWEEP", "1") == "0") "[]"
+    val (sweepJson, sweepPlan) =
+      if (!scaleSweep) ("[]", "")
       else {
-        val spark4 = session(cpus, aqe = false)
-        val spillMem = new java.util.concurrent.atomic.AtomicLong()
-        val spillDisk = new java.util.concurrent.atomic.AtomicLong()
-        spark4.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) {
-              spillMem.addAndGet(m.memoryBytesSpilled)
-              spillDisk.addAndGet(m.diskBytesSpilled); ()
-            }
-          }
-        })
-        sweepPlan = S2Joins.regionTileCounts(
+        val spark4 = session(cpus, aqeOff)
+        val tally = new TaskTally(spark4.sparkContext)
+        val plan = S2Joins.regionTileCounts(
           spark4.read.parquet(docsPath), benchRegions, benchTiles)
           .queryExecution.executedPlan.toString.take(4000)
         val base =
           s"""{"docs":$benchDocs,"sec":$tHi,"docs_per_sec":${benchDocs / tHi},"matched":$matched}"""
+        // the base table stays: each point needs room for its own table
+        // next to it, and one that does not fit is skipped before any
+        // delete or write
         val entries = Seq(benchDocs * 2, benchDocs * 3).map { n =>
-          try {
-            // the 3x point needs the base table's space back; the next
-            // bench run re-materializes it (docsPath is existence-checked)
-            if (n == benchDocs * 3) rmDir(docsPath)
-            val need = (n * bytesPerDoc * 21) / 20 + (5L << 30)
-            val usable = new java.io.File("/tmp").getUsableSpace
-            if (usable < need)
-              s"""{"docs":$n,"skipped":"insufficient disk: need $need bytes, usable $usable"}"""
-            else {
-              val path = Bench.docsPath(n)
-              if (!new java.io.File(s"$path/_SUCCESS").exists())
-                materializeDocs(spark4, n, path)
-              spark4.read.parquet(path)
-                .agg(sum(col("lat") + col("lng"))).head() // warm page cache
-              var matchedN = 0L
-              def once(): Double = {
-                val t0 = System.nanoTime()
-                matchedN = pipeline(spark4, path)
-                (System.nanoTime() - t0) / 1e9
-              }
-              once() // JIT/codegen warmup rep
-              spillMem.set(0); spillDisk.set(0)
-              val sec = math.min(once(), once())
-              org.apache.spark.sql.graftbridge.ListenerBridge
-                .waitUntilListenersProcessed(spark4.sparkContext)
-              val out = s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec},""" +
-                s""""matched":$matchedN,"spill_mem_bytes":${spillMem.get},""" +
-                s""""spill_disk_bytes":${spillDisk.get}}"""
-              rmDir(path)
-              out
-            }
+          val need = (n * bytesPerDoc * 21) / 20 + (5L << 30)
+          val usable = new java.io.File("/tmp").getUsableSpace
+          if (usable < need)
+            s"""{"docs":$n,"skipped":"insufficient disk: need $need bytes, usable $usable"}"""
+          else try {
+            val path = inputTable(spark4, n)
+            timed(pipeline(spark4, path)) // JIT/codegen warmup rep
+            tally.drain()
+            val reps = Seq.fill(2)(timed(pipeline(spark4, path)))
+            val tasks = tally.drain()
+            val sec = reps.map(_._2).min
+            FileUtils.deleteQuietly(new java.io.File(path))
+            s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec},""" +
+              s""""matched":${reps.last._1},"spill_mem_bytes":${tasks.map(_.spillMem).sum},""" +
+              s""""spill_disk_bytes":${tasks.map(_.spillDisk).sum}}"""
           } catch {
             case e: Exception =>
-              try rmDir(Bench.docsPath(n)) catch { case _: Exception => }
-              s"""{"docs":$n,"skipped":"error: ${e.toString.replace('"', '\'').take(200)}"}"""
+              FileUtils.deleteQuietly(new java.io.File(Bench.docsPath(n)))
+              s"""{"docs":$n,"skipped":${jsonStr("error: " + e.toString.take(200))}}"""
           }
         }
         spark4.stop()
-        s"[$base,${entries.mkString(",")}]"
+        (s"[$base,${entries.mkString(",")}]", plan)
       }
 
     // forced-spill A/B: identical 24M-row sort of the cell-keyed table in
@@ -592,26 +596,15 @@ object Bench {
     // partition order), and in-partition sortedness. Proves the operators
     // run through Spark's external-spill machinery unchanged.
     val forcedSpillJson =
-      if (sys.env.getOrElse("SPARK_GRAFT_SCALE_SWEEP", "1") == "0") "{}"
+      if (!scaleSweep) "{}"
       else {
         val probeDocs = sys.env.getOrElse("SPARK_GRAFT_SPILL_DOCS", "24000000").toLong
         def sortProbe(forceSpill: Boolean): (Long, Long, Boolean, Long) = {
-          val b = SparkSession.builder()
-            .master(s"local[$cpus]")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.sql.adaptive.enabled", "false")
-            .config("spark.ui.enabled", "false")
-          if (forceSpill)
-            b.config("spark.shuffle.spill.numElementsForceSpillThreshold", "131072")
-          val s = b.getOrCreate()
-          s.sparkContext.setLogLevel("ERROR")
-          val disk = new java.util.concurrent.atomic.AtomicLong()
-          s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = te.taskMetrics
-              if (m != null) { disk.addAndGet(m.diskBytesSpilled); () }
-            }
-          })
+          val conf = Seq("spark.sql.shuffle.partitions" -> "8", aqeOff) ++
+            (if (forceSpill) Seq("spark.shuffle.spill.numElementsForceSpillThreshold" -> "131072")
+             else Nil)
+          val s = session(cpus, conf: _*)
+          val tally = new TaskTally(s.sparkContext)
           val docs = S2Joins.withCellId(
             DocSource.docs(s, probeDocs).select("doc_id", "lat", "lng"),
             col("lat"), col("lng"))
@@ -639,10 +632,9 @@ object Bench {
           val combined = parts.foldLeft(1125899906842597L) { (acc, p) =>
             acc * 6364136223846793005L + p._3 }
           val sortedOk = parts.forall(_._4)
-          org.apache.spark.sql.graftbridge.ListenerBridge
-            .waitUntilListenersProcessed(s.sparkContext)
+          val disk = tally.drain().map(_.spillDisk).sum
           s.stop()
-          (total, combined, sortedOk, disk.get)
+          (total, combined, sortedOk, disk)
         }
         val (cN, cH, cOk, cDisk) = sortProbe(forceSpill = false)
         val (fN, fH, fOk, fDisk) = sortProbe(forceSpill = true)
@@ -658,23 +650,14 @@ object Bench {
 
     // ---- emit: FULL artifact to a file, ONE compact line (< 2000 bytes,
     // the driver's tail-capture window) printed LAST ----
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""headline_cpu_probe_gops":{"start":${headlineProbeStart / 1e9},""" +
-      s""""end":${headlineProbeEnd / 1e9}},""" +
-      s""""pipeline":$pipelineJson,"skew_join":$skewJson,"knn_scale":$knnScaleJson,""" +
-      s""""scale_sweep":$sweepJson,"forced_spill":$forcedSpillJson,""" +
-      s""""pipeline_executed_plan":${jsonStr(sweepPlan)},""" +
-      s""""sf":"$sfDir"}"""
-    writeFullArtifact(fullJson)
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      "BENCH/bench_full_r05.json")
-    // compact final line: every number rounded, no rep arrays (those live
-    // in the full artifact) — r4's line overflowed the 2000-byte tail
-    // window and the artifact of record was left unparseable
-    val qsC = results.map { case (k, v) => "\"" + k + "\":" + r4d(v) }
-      .mkString("{", ",", "}")
-    val sweepC = sweepJson // already compact: <= 3 entries of plain numbers
+    artifact ++= Seq("scale_sweep" -> sweepJson, "forced_spill" -> forcedSpillJson,
+      "pipeline_executed_plan" -> jsonStr(sweepPlan))
+    writeArtifact(None)
+    // compact final line: every number rounded, no rep arrays and only an
+    // error's class name (the rest lives in the full artifact) — r4's line
+    // overflowed the 2000-byte tail window and the artifact of record was
+    // left unparseable
+    val qsC = queriesJson(r4d, _.getClass.getSimpleName)
     val compact =
       s"""{"metric":"total","value":${r4d(total)},"unit":"sec","queries":$qsC,""" +
       s""""pipeline":{"docs":$benchDocs,"sec_hi":${r4d(tHi)},"sec_lo":${r4d(tLo)},""" +
@@ -682,14 +665,17 @@ object Bench {
       s""""scaling_efficiency":${r4d(efficiency)},"hw_ceiling_speedup":${r4d(hwSpeedup)},""" +
       s""""scaling_efficiency_vs_hw":${r4d(normEfficiency)}},""" +
       s""""skew_join":$skewCompact,""" +
-      s""""scale_sweep":$sweepC,"forced_spill":$forcedSpillJson,""" +
-      s""""sf":"$sfDir","full_json":"$fullPath"}"""
+      s""""scale_sweep":$sweepJson,"forced_spill":$forcedSpillJson,""" +
+      s""""sf":${jsonStr(sfDir)},"full_json":${jsonStr(fullPath)}}"""
     println(compact)
   }
 
   private def r4d(x: Double): Double = math.rint(x * 10000) / 10000
 
-  private def jsonStr(s: String): String =
+  /** JSON string literal: escapes backslash, quote and ALL control chars
+    * (< 0x20) — a tab or CR in an error message or an oracle SQL text
+    * would otherwise make a reader's json.load fail. */
+  private[graft] def jsonStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

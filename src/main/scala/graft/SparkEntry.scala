@@ -69,7 +69,7 @@ object SparkEntry {
   // poleward (max lat ~84.3 on the north edge), so boundary proximity to
   // the doc grid is generic-position rather than designed — validated
   // oracle-exact at all three SFs like q_s2_edge_intersect.
-  private[graft] val skewPolyText = // shared by Bench/SkewBench/PlanAuditSpec skew fixtures
+  private[graft] val skewPolyText = // shared by Bench/PlanAuditSpec skew fixtures
     "-20.005:-150.005, -20.005:10.005, 60.005:10.005, 60.005:-150.005"
   private lazy val PSkew: Array[V3] = S2TextFormat.parsePoints(skewPolyText)
 

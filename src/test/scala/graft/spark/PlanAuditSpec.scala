@@ -156,6 +156,34 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!phys.contains("CartesianProduct"), phys)
   }
 
+  test("knnJoinLarge runs its per-round rank filter as a map-side WindowGroupLimit") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    val docs = S2Joins.withCellId(
+      DocSource.docs(spark, 20000L, clusterFrac = 0.0).select("doc_id", "lat", "lng"),
+      col("lat"), col("lng"))
+    val targets = docs.where(col("doc_id").substr(4, 9).cast("long") % 50 === 0)
+      .select(col("doc_id").substr(4, 9).cast("int").as("qid"),
+        (col("lat") * 0.97).as("t_lat"), (col("lng") * 0.97).as("t_lng"))
+    val out = S2Joins.knnJoinLarge(docs, targets, k = 5, radii = Seq(0.1, 0.4))
+    assert(out.count() == 400L * 5)
+    // the rank filter sits below AQE query stages and, once the ladder
+    // takes more than one round, below the cached per-round results
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case _ => p.children.flatMap(walk)
+    })
+    val nodes = walk(out.queryExecution.executedPlan)
+    assert(nodes.exists {
+      case w: WindowGroupLimitExec => w.mode == Partial
+      case _ => false
+    }, nodes.map(_.nodeName).distinct.mkString(", "))
+  }
+
   test("q_s2_sql_join driver gate plans term-join, not BNLJ/cartesian") {
     // the actual gate query text (pure SQL through S2SpatialJoinRule)
     for (name <- Seq("q_s2_sql_join", "q_s2_sql_within")) {
