@@ -5,51 +5,20 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** SparkSessionExtensions entry point: makes every native S2 expression
   * SQL-callable in any session built with
   *   .config("spark.sql.extensions", "graft.S2Extensions")
-  * (or injected programmatically). The expressions themselves carry
-  * codegen, so SQL users get the same whole-stage-compiled kernels as the
-  * Column API. */
+  * (or injected programmatically). The names come from
+  * [[graft.functions.S2.functionTable]], the same table
+  * [[graft.functions.S2.registerAll]] registers. The expressions themselves
+  * carry codegen, so SQL users get the same whole-stage-compiled kernels as
+  * the Column API. */
 class S2Extensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-  import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-  import graft.functions._
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
+  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def inject(name: String, usage: String)(b: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name, usage), b))
-
-    inject("s2_cellid", "leaf cell id of (latDeg, lngDeg)") { es =>
-      S2CellIdFromLatLngDeg(Cast(es(0), DoubleType), Cast(es(1), DoubleType)) }
-    inject("s2_cellid_xyz", "leaf cell id of direction vector") { es =>
-      S2CellIdFromXYZ(Cast(es(0), DoubleType), Cast(es(1), DoubleType),
-        Cast(es(2), DoubleType)) }
-    inject("s2_parent", "ancestor cell at level") { es =>
-      S2Parent(Cast(es(0), LongType), Cast(es(1), IntegerType)) }
-    inject("s2_level", "cell level")(es => S2Level(es.head))
-    inject("s2_token", "order-preserving hex token")(es => S2Token(es.head))
-    inject("s2_cell_from_token", "token -> cell id")(es => S2FromToken(es.head))
-    inject("s2_order_key", "signed-order Hilbert key")(es => S2OrderKey(es.head))
-    inject("s2_range_min", "first leaf of cell")(es => S2RangeMin(es.head))
-    inject("s2_range_max", "last leaf of cell")(es => S2RangeMax(es.head))
-    inject("s2_cell_center_lat", "cell center latitude (deg)")(es => S2CellCenterLat(es.head))
-    inject("s2_cell_center_lng", "cell center longitude (deg)")(es => S2CellCenterLng(es.head))
-    // spatial predicates + term generators (see S2SpatialJoinRule: a JOIN
-    // whose condition is one of these predicates plans as a term equi-join)
-    inject("s2_contains", "exact point-in-polygon(polyText, latDeg, lngDeg)") { es =>
-      S2ContainsPoint(es(0), Cast(es(1), DoubleType), Cast(es(2), DoubleType)) }
-    inject("s2_within_distance", "points within radiusRad(latA,lngA,latB,lngB,r)") { es =>
-      S2WithinDistance(Cast(es(0), DoubleType), Cast(es(1), DoubleType),
-        Cast(es(2), DoubleType), Cast(es(3), DoubleType), Cast(es(4), DoubleType)) }
-    inject("s2_point_index_terms", "ancestor index terms of a point") { es =>
-      S2PointIndexTermsExpr(Cast(es(0), DoubleType), Cast(es(1), DoubleType)) }
-    inject("s2_poly_query_terms", "query terms of a polygon region") { es =>
-      S2PolyQueryTermsExpr(es(0)) }
-    inject("s2_cap_query_terms", "query terms of a cap region") { es =>
-      S2CapQueryTermsExpr(Cast(es(0), DoubleType), Cast(es(1), DoubleType),
-        Cast(es(2), DoubleType)) }
+    graft.functions.S2.functionTable.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), builder))
+    }
     // plan-time rewrite: spatial-predicate joins -> term join + refine
     ext.injectOptimizerRule(_ => graft.plans.S2SpatialJoinRule)
   }

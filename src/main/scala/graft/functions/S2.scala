@@ -1,15 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import graft.core._
 
 /** Column-level API of the engine, in the style of
-  * org.apache.spark.sql.functions. Hot scalar kernels are native Catalyst
-  * expressions (codegen'd); geometry-typed operators (coverings, term
-  * generation, PIP against polygon text) are deterministic Scala UDFs
-  * whose kernels are the exact core implementations. */
+  * org.apache.spark.sql.functions. Cell-id kernels, the spatial predicates
+  * (PIP against polygon text, within-distance) and term generation are
+  * native Catalyst expressions (codegen'd; terms use the one default
+  * scheme, [[S2SpatialKernels.indexer]]). The remaining geometry-typed
+  * operators (coverings, neighbors, metrics) are deterministic Scala UDFs
+  * whose kernels are the exact core implementations. [[functionTable]] is
+  * the one list of SQL names, shared by [[registerAll]] and
+  * [[graft.S2Extensions]]. */
 object S2 {
   import ColumnBridge.{column => toCol, expression => toExpr}
 
@@ -99,50 +105,19 @@ object S2 {
   }
 
   // ---- term indexer (the equi-joinable spatial join keys) ----
-  private val defaultIndexer = new S2TermIndexer()
-
   /** Index terms for a point document (reference
     * s2region_term_indexer.cc:155-213). */
-  val pointIndexTermsUdf = udf { (lat: Double, lng: Double) =>
-    val p = V3.fromLatLngDegrees(lat, lng)
-    defaultIndexer.indexTermsForPoint(p.x, p.y, p.z)
-  }
   def pointIndexTerms(latDeg: Column, lngDeg: Column): Column =
-    pointIndexTermsUdf(latDeg, lngDeg)
-
-  val pointIndexTermsXYZUdf = udf { (x: Double, y: Double, z: Double) =>
-    defaultIndexer.indexTermsForPoint(x, y, z)
-  }
-  def pointIndexTermsXYZ(x: Column, y: Column, z: Column): Column =
-    pointIndexTermsXYZUdf(x, y, z)
+    toCol(S2PointIndexTermsExpr(toExpr(latDeg.cast("double")), toExpr(lngDeg.cast("double"))))
 
   /** Query terms for a polygon-text region. */
-  val polygonQueryTermsUdf = udf { (polyText: String) =>
-    defaultIndexer.queryTerms(PolyCache.get(polyText))
-  }
-  def polygonQueryTerms(polyText: Column): Column = polygonQueryTermsUdf(polyText)
+  def polygonQueryTerms(polyText: Column): Column =
+    toCol(S2PolyQueryTermsExpr(toExpr(polyText)))
 
   /** Query terms for a cap region. */
-  val capQueryTermsUdf = udf { (lat: Double, lng: Double, radiusRad: Double) =>
-    defaultIndexer.queryTerms(
-      S2Cap.fromCenterAngle(V3.fromLatLngDegrees(lat, lng), radiusRad))
-  }
   def capQueryTerms(lat: Column, lng: Column, radiusRad: Column): Column =
-    capQueryTermsUdf(lat, lng, radiusRad)
-
-  /** Exact point-in-polygon against a polygon in text format (crossing
-    * parity, reference s2loop.cc:605-617). */
-  val containsUdf = udf { (polyText: String, lat: Double, lng: Double) =>
-    PolyCache.get(polyText).contains(V3.fromLatLngDegrees(lat, lng))
-  }
-  def polygonContains(polyText: Column, latDeg: Column, lngDeg: Column): Column =
-    containsUdf(polyText, latDeg, lngDeg)
-
-  val containsXYZUdf = udf { (polyText: String, x: Double, y: Double, z: Double) =>
-    PolyCache.get(polyText).contains(V3(x, y, z).normalize)
-  }
-  def polygonContainsXYZ(polyText: Column, x: Column, y: Column, z: Column): Column =
-    containsXYZUdf(polyText, x, y, z)
+    toCol(S2CapQueryTermsExpr(toExpr(lat.cast("double")), toExpr(lng.cast("double")),
+      toExpr(radiusRad.cast("double"))))
 
   /** Neighbors of a cell at a given level. */
   val neighborsUdf = udf { (id: Long, level: Int) =>
@@ -223,50 +198,46 @@ object S2 {
     out.toArray
   }
 
-  /** Register SQL-callable names for the native expressions. */
-  def registerAll(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
-    val reg = spark.sessionState.functionRegistry
-    // Explicit casts stand in for the type coercion that ExpectsInputTypes
-    // (private[sql] in Spark 4) would normally inject for SQL literals.
-    reg.createOrReplaceTempFunction("s2_cellid",
-      es => S2CellIdFromLatLngDeg(Cast(es(0), DoubleType), Cast(es(1), DoubleType)), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_cellid_xyz",
-      es => S2CellIdFromXYZ(Cast(es(0), DoubleType), Cast(es(1), DoubleType),
-        Cast(es(2), DoubleType)), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_parent",
-      es => S2Parent(Cast(es(0), LongType), Cast(es(1), IntegerType)), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_level", es => S2Level(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_token", es => S2Token(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_cell_from_token",
-      es => S2FromToken(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_order_key",
-      es => S2OrderKey(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_range_min",
-      es => S2RangeMin(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_range_max",
-      es => S2RangeMax(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_cell_center_lat",
-      es => S2CellCenterLat(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_cell_center_lng",
-      es => S2CellCenterLng(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_contains",
-      es => S2ContainsPoint(es(0), Cast(es(1), DoubleType), Cast(es(2), DoubleType)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("s2_within_distance",
-      es => S2WithinDistance(Cast(es(0), DoubleType), Cast(es(1), DoubleType),
-        Cast(es(2), DoubleType), Cast(es(3), DoubleType), Cast(es(4), DoubleType)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("s2_point_index_terms",
-      es => S2PointIndexTermsExpr(Cast(es(0), DoubleType), Cast(es(1), DoubleType)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("s2_poly_query_terms",
-      es => S2PolyQueryTermsExpr(es(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("s2_cap_query_terms",
-      es => S2CapQueryTermsExpr(Cast(es(0), DoubleType), Cast(es(1), DoubleType),
-        Cast(es(2), DoubleType)), "scala_udf")
+  /** The SQL surface: (name, usage, builder) for every SQL-callable
+    * native expression. Explicit casts stand in for the type coercion that
+    * ExpectsInputTypes (private[sql] in Spark 4) would normally inject for
+    * SQL literals. */
+  val functionTable: Seq[(String, String, Seq[Expression] => Expression)] = {
+    def d(e: Expression): Expression = Cast(e, DoubleType)
+    Seq(
+      ("s2_cellid", "leaf cell id of (latDeg, lngDeg)",
+        es => S2CellIdFromLatLngDeg(d(es(0)), d(es(1)))),
+      ("s2_cellid_xyz", "leaf cell id of direction vector",
+        es => S2CellIdFromXYZ(d(es(0)), d(es(1)), d(es(2)))),
+      ("s2_parent", "ancestor cell at level",
+        es => S2Parent(Cast(es(0), LongType), Cast(es(1), IntegerType))),
+      ("s2_level", "cell level", es => S2Level(es.head)),
+      ("s2_token", "order-preserving hex token", es => S2Token(es.head)),
+      ("s2_cell_from_token", "token -> cell id", es => S2FromToken(es.head)),
+      ("s2_order_key", "signed-order Hilbert key", es => S2OrderKey(es.head)),
+      ("s2_range_min", "first leaf of cell", es => S2RangeMin(es.head)),
+      ("s2_range_max", "last leaf of cell", es => S2RangeMax(es.head)),
+      ("s2_cell_center_lat", "cell center latitude (deg)", es => S2CellCenterLat(es.head)),
+      ("s2_cell_center_lng", "cell center longitude (deg)", es => S2CellCenterLng(es.head)),
+      // spatial predicates + term generators (see S2SpatialJoinRule: a JOIN
+      // whose condition is one of these predicates plans as a term equi-join)
+      ("s2_contains", "exact point-in-polygon(polyText, latDeg, lngDeg)",
+        es => S2ContainsPoint(es(0), d(es(1)), d(es(2)))),
+      ("s2_within_distance", "points within radiusRad(latA,lngA,latB,lngB,r)",
+        es => S2WithinDistance(d(es(0)), d(es(1)), d(es(2)), d(es(3)), d(es(4)))),
+      ("s2_point_index_terms", "ancestor index terms of a point",
+        es => S2PointIndexTermsExpr(d(es(0)), d(es(1)))),
+      ("s2_poly_query_terms", "query terms of a polygon region",
+        es => S2PolyQueryTermsExpr(es(0))),
+      ("s2_cap_query_terms", "query terms of a cap region",
+        es => S2CapQueryTermsExpr(d(es(0)), d(es(1)), d(es(2)))))
   }
+
+  /** Register [[functionTable]] in an existing session. */
+  def registerAll(spark: SparkSession): Unit =
+    functionTable.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 
   /** Column forms of the SQL spatial predicates (the join-rewrite markers
     * S2SpatialJoinRule recognizes — see that rule's scaladoc). */

@@ -8,7 +8,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
 
-/** SQL-surface spatial predicates and their term generators.
+/** SQL-surface spatial predicates and their term generators: the one
+  * implementation of point/polygon/cap terms and point-in-polygon. The
+  * Column API ([[S2]]), the SQL function table, the term-join operators
+  * and [[graft.plans.S2SpatialJoinRule]] all build these expressions.
   *
   * The predicates ([[S2ContainsPoint]], [[S2WithinDistance]]) are honest
   * scalar expressions — usable in any WHERE clause — but their real
@@ -20,12 +23,16 @@ import graft.core._
   * plan would produce.
   *
   * The term generators ([[S2PointIndexTermsExpr]] etc.) are the native
-  * column forms of S2TermIndexer — also SQL-callable directly for users
-  * building their own candidate joins. */
+  * column forms of S2TermIndexer. Each carries its indexer as a non-child
+  * field, default [[S2SpatialKernels.indexer]], which generated code
+  * reaches as a reference object (as [[S2StabMatch]] ships its index) —
+  * so a caller-chosen scheme survives whole-stage codegen. Plans print
+  * only their children: the indexer has no stable string form. */
 
 /** Shared kernels (static forwarders make these callable from generated
-  * Java). A single default-parameter indexer instance is deliberate: the
-  * rewrite is only correct when both join sides use the SAME term scheme. */
+  * Java). [[indexer]] is the engine's one default term scheme: a term
+  * join is only correct when both sides use the SAME scheme, so every
+  * default caller shares this instance. */
 object S2SpatialKernels {
   val indexer = new S2TermIndexer()
 
@@ -42,16 +49,16 @@ object S2SpatialKernels {
   private def toArrayData(terms: Array[String]): ArrayData =
     new GenericArrayData(terms.map(t => UTF8String.fromString(t).asInstanceOf[Any]))
 
-  def pointIndexTerms(lat: Double, lng: Double): ArrayData = {
+  def pointIndexTerms(ix: S2TermIndexer, lat: Double, lng: Double): ArrayData = {
     val p = V3.fromLatLngDegrees(lat, lng)
-    toArrayData(indexer.indexTermsForPoint(p.x, p.y, p.z))
+    toArrayData(ix.indexTermsForPoint(p.x, p.y, p.z))
   }
 
-  def polyQueryTerms(polyText: UTF8String): ArrayData =
-    toArrayData(indexer.queryTerms(PolyCache.get(polyText.toString)))
+  def polyQueryTerms(ix: S2TermIndexer, polyText: UTF8String): ArrayData =
+    toArrayData(ix.queryTerms(PolyCache.get(polyText.toString)))
 
-  def capQueryTerms(lat: Double, lng: Double, radiusRad: Double): ArrayData =
-    toArrayData(indexer.queryTerms(
+  def capQueryTerms(ix: S2TermIndexer, lat: Double, lng: Double, radiusRad: Double): ArrayData =
+    toArrayData(ix.queryTerms(
       S2Cap.fromCenterAngle(V3.fromLatLngDegrees(lat, lng), radiusRad)))
 }
 
@@ -94,16 +101,20 @@ case class S2WithinDistance(latA: Expression, lngA: Expression,
 /** s2_point_index_terms(latDeg, lngDeg) — the ancestor index terms of a
   * point document (reference s2region_term_indexer.cc:155-175): plain
   * tokens at levels minLevel..maxLevel, never marker-prefixed. */
-case class S2PointIndexTermsExpr(left: Expression, right: Expression)
+case class S2PointIndexTermsExpr(left: Expression, right: Expression,
+                                 indexer: S2TermIndexer = S2SpatialKernels.indexer)
     extends BinaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "s2_point_index_terms"
   override protected def nullSafeEval(lat: Any, lng: Any): Any =
-    S2SpatialKernels.pointIndexTerms(lat.asInstanceOf[Double], lng.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    S2SpatialKernels.pointIndexTerms(indexer, lat.asInstanceOf[Double], lng.asInstanceOf[Double])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
     defineCodeGen(ctx, ev, (la, ln) =>
-      s"graft.functions.S2SpatialKernels.pointIndexTerms($la, $ln)")
+      s"graft.functions.S2SpatialKernels.pointIndexTerms($ix, $la, $ln)")
+  }
+  override protected def stringArgs: Iterator[Any] = children.iterator
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -114,31 +125,40 @@ case class S2PointIndexTermsExpr(left: Expression, right: Expression)
   * covering, so each intersecting (point, polygon) pair shares EXACTLY
   * one term — the property that lets [[graft.plans.S2SpatialJoinRule]]
   * skip pair deduplication. */
-case class S2PolyQueryTermsExpr(child: Expression) extends UnaryExpression {
+case class S2PolyQueryTermsExpr(child: Expression,
+                                indexer: S2TermIndexer = S2SpatialKernels.indexer)
+    extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "s2_poly_query_terms"
   override protected def nullSafeEval(poly: Any): Any =
-    S2SpatialKernels.polyQueryTerms(poly.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, p => s"graft.functions.S2SpatialKernels.polyQueryTerms($p)")
+    S2SpatialKernels.polyQueryTerms(indexer, poly.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
+    defineCodeGen(ctx, ev, p => s"graft.functions.S2SpatialKernels.polyQueryTerms($ix, $p)")
+  }
+  override protected def stringArgs: Iterator[Any] = children.iterator
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** s2_cap_query_terms(latDeg, lngDeg, radiusRad) — query terms of the cap
   * around a point; the within-distance analogue of
   * [[S2PolyQueryTermsExpr]] (same single-shared-term property). */
-case class S2CapQueryTermsExpr(first: Expression, second: Expression, third: Expression)
+case class S2CapQueryTermsExpr(first: Expression, second: Expression, third: Expression,
+                               indexer: S2TermIndexer = S2SpatialKernels.indexer)
     extends TernaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "s2_cap_query_terms"
   override protected def nullSafeEval(lat: Any, lng: Any, r: Any): Any =
-    S2SpatialKernels.capQueryTerms(lat.asInstanceOf[Double],
+    S2SpatialKernels.capQueryTerms(indexer, lat.asInstanceOf[Double],
       lng.asInstanceOf[Double], r.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
     defineCodeGen(ctx, ev, (la, ln, r) =>
-      s"graft.functions.S2SpatialKernels.capQueryTerms($la, $ln, $r)")
+      s"graft.functions.S2SpatialKernels.capQueryTerms($ix, $la, $ln, $r)")
+  }
+  override protected def stringArgs: Iterator[Any] = children.iterator
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(first = f, second = s, third = t)
 }

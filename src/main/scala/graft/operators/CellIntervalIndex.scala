@@ -9,8 +9,8 @@ import graft.core._
   *
   * Build flattens the labeled leaf ranges (on the sign-flipped Hilbert
   * order, so plain signed comparison is correct across all 6 faces) into
-  * DISJOINT elementary segments, each carrying its full (label, interior,
-  * level) list. A lookup is then exactly one binary search + O(hits) —
+  * DISJOINT elementary segments, each carrying its full (label, interior)
+  * list. A lookup is then exactly one binary search + O(hits) —
   * no scan bound that degenerates when coverings contain face-level cells
   * (a covering of a hemisphere produces ~2^61-wide intervals; any
   * "bounded backward scan" scheme collapses to O(n) there).
@@ -25,8 +25,7 @@ final class CellIntervalIndex private (
     private val segEnd: Array[Long],          // inclusive segment ends
     private val segOff: Array[Int],           // offset into entry arrays
     private val entryLabel: Array[Int],       // per (segment, entry)
-    private val entryInterior: Array[Boolean],
-    private val entryLevel: Array[Int]
+    private val entryInterior: Array[Boolean]
 ) extends Serializable {
 
   def size: Int = segStart.length
@@ -47,16 +46,6 @@ final class CellIntervalIndex private (
     while (l < r) { val m = (l + r) >>> 1; if (segStart(m) <= ord) l = m + 1 else r = m }
     val i = l - 1
     if (i >= 0 && segEnd(i) >= ord) i else -1
-  }
-
-  /** Visit (label, interior, level) of every covering entry containing the
-    * leaf order-key. Entries are pre-deduplicated per label at build. */
-  def visit(leafOrd: Long)(f: (Int, Boolean, Int) => Unit): Unit = {
-    val s = findSeg(leafOrd)
-    if (s < 0) return
-    var i = segOff(s)
-    val end = segOff(s + 1)
-    while (i < end) { f(entryLabel(i), entryInterior(i), entryLevel(i)); i += 1 }
   }
 
   /** Labels containing the leaf cell (distinct ascending). */
@@ -129,8 +118,8 @@ final class CellIntervalIndex private (
 object CellIntervalIndex {
   /** Build from (label, covering, interiorCovering) triples. */
   def build(entries: Seq[(Int, Array[Long], Array[Long])]): CellIntervalIndex = {
-    // (lo, hi, label, level, interior) raw intervals
-    val raw = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Int, Boolean)]
+    // (lo, hi, label, interior) raw intervals
+    val raw = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Boolean)]
     for ((lab, covering, interiorCells) <- entries) {
       val interiorSet = interiorCells.toSet
       val coveringSet = covering.toSet
@@ -139,18 +128,18 @@ object CellIntervalIndex {
       for ((c, isInt) <- all) {
         raw += ((S2CellId.orderKey(S2CellId.rangeMin(c)),
                  S2CellId.orderKey(S2CellId.rangeMax(c)),
-                 lab, S2CellId.level(c), isInt))
+                 lab, isInt))
       }
     }
     // sweep: elementary segments between consecutive boundary points
     // boundaries: each interval contributes [lo, hi+1). The active set is
     // maintained INCREMENTALLY as a per-label aggregate (interval count,
-    // interior count, level histogram) in a sorted map — intervals are
-    // added at their lo boundary and removed at hi+1 via a hi-sorted
-    // pointer, so per-segment cost is O(emitted entries + adds/removes),
+    // interior count) in a sorted map — intervals are added at their lo
+    // boundary and removed at hi+1 via a hi-sorted pointer, so
+    // per-segment cost is O(emitted entries + adds/removes),
     // not O(depth) re-aggregation. With 10^4 broadcast caps the former
     // per-segment groupBy dominated index construction ~5x.
-    val bounds = raw.flatMap { case (lo, hi, _, _, _) =>
+    val bounds = raw.flatMap { case (lo, hi, _, _) =>
       Seq(lo, if (hi == Long.MaxValue) Long.MaxValue else hi + 1)
     }.distinct.sorted.toArray
     val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -158,7 +147,6 @@ object CellIntervalIndex {
     val offs = scala.collection.mutable.ArrayBuffer.empty[Int]
     val eLab = scala.collection.mutable.ArrayBuffer.empty[Int]
     val eInt = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    val eLvl = scala.collection.mutable.ArrayBuffer.empty[Int]
     val byLo = raw.sortBy(_._1).toArray
     val byHi = raw.sortBy(_._2).toArray
     var loPtr = 0
@@ -166,26 +154,18 @@ object CellIntervalIndex {
     final class Agg {
       var count = 0
       var interior = 0
-      val lvl = new Array[Int](32) // level histogram (0..31)
-      def minLevel: Int = {
-        var l = 0
-        while (l < 32 && lvl(l) == 0) l += 1
-        l
-      }
     }
     val active = new java.util.TreeMap[Int, Agg]()
-    def add(t: (Long, Long, Int, Int, Boolean)): Unit = {
+    def add(t: (Long, Long, Int, Boolean)): Unit = {
       var a = active.get(t._3)
       if (a == null) { a = new Agg; active.put(t._3, a) }
       a.count += 1
-      if (t._5) a.interior += 1
-      a.lvl(t._4) += 1
+      if (t._4) a.interior += 1
     }
-    def remove(t: (Long, Long, Int, Int, Boolean)): Unit = {
+    def remove(t: (Long, Long, Int, Boolean)): Unit = {
       val a = active.get(t._3)
       a.count -= 1
-      if (t._5) a.interior -= 1
-      a.lvl(t._4) -= 1
+      if (t._4) a.interior -= 1
       if (a.count == 0) { active.remove(t._3); () }
     }
     var bi = 0
@@ -201,14 +181,13 @@ object CellIntervalIndex {
           val en = it.next()
           eLab += en.getKey
           eInt += en.getValue.interior > 0
-          eLvl += en.getValue.minLevel
         }
       }
       bi += 1
     }
     offs += eLab.length
     new CellIntervalIndex(starts.toArray, ends.toArray, offs.toArray,
-      eLab.toArray, eInt.toArray, eLvl.toArray)
+      eLab.toArray, eInt.toArray)
   }
 
   /** Build from regions: covering + interior covering via the reference

@@ -138,24 +138,23 @@ object Density {
   * continent-sized region's coarse covering term matches a huge doc set;
   * without intervention that term's hash partition is a straggler. */
 object Skew {
-  /** Detect hot terms; returns (term → saltFactor). `sampleFraction` < 1
-    * samples the term stream before counting (counts are scaled back up) —
-    * at 100 TB a full groupBy-count just to find stragglers is itself a
-    * large job, and stragglers by definition survive sampling. */
-  def hotTerms(docTerms: DataFrame, termCol: String, threshold: Long,
-               maxSalt: Int = 32, sampleFraction: Double = 1.0): Map[String, Int] = {
-    val src = if (sampleFraction < 1.0)
-      docTerms.sample(withReplacement = false, sampleFraction, seed = 42L)
-    else docTerms
-    val scale = 1.0 / sampleFraction
-    src.groupBy(col(termCol)).count()
-      .where(col("count") * scale > threshold)
+  /** Largest salt factor a hot term gets (its replication on the small
+    * side of [[saltedTermJoin]]). */
+  private val MaxSalt = 32
+
+  /** Detect hot terms; returns (term → saltFactor) for every term seen
+    * more than `threshold` times, salted count/threshold + 1 ways (at
+    * least 2, at most [[MaxSalt]]). Callers that want a sampled estimate
+    * sample upstream and scale `threshold` — at 100 TB a full
+    * groupBy-count just to find stragglers is itself a large job, and
+    * stragglers by definition survive sampling. */
+  def hotTerms(docTerms: DataFrame, termCol: String, threshold: Long): Map[String, Int] =
+    docTerms.groupBy(col(termCol)).count()
+      .where(col("count") > threshold)
       .collect()
       .map(r => r.getString(0) ->
-        math.min(maxSalt,
-          math.max(2, ((r.getLong(1) * scale).toLong / threshold).toInt + 1)))
+        math.min(MaxSalt, math.max(2, (r.getLong(1) / threshold).toInt + 1)))
       .toMap
-  }
 
   /** Salted equi-join: big side gets `salt = hash(rowKey) % s(term)`;
     * small side replicates each hot term s(term) times. Non-hot terms join

@@ -3,16 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core._
+import graft.functions.{S2, S2SpatialKernels}
 
 /** Region×region joins and measures: both sides carry *regions* (as
   * normalized cell-union arrays), intersection decided by the
   * S2RegionTermIndexer scheme — two regions share ≥1 term iff their
   * coverings intersect (/root/reference/src/s2/s2region_term_indexer.cc:27-72) —
   * then refined with the exact sorted-merge cell-union intersection
-  * (/root/reference/src/s2/s2cell_union.cc:355-439). */
+  * (/root/reference/src/s2/s2cell_union.cc:355-439). Every join here
+  * uses the engine's one term scheme, [[S2SpatialKernels.indexer]]. */
 object RegionJoins {
 
-  private val indexer = new S2TermIndexer()
+  private val indexer = S2SpatialKernels.indexer
 
   val indexTermsUdf = udf { (cells: Array[Long]) =>
     indexer.indexTermsForCovering(cells) }
@@ -20,20 +22,31 @@ object RegionJoins {
     indexer.queryTermsForCovering(cells) }
   val unionIntersectsUdf = udf { (a: Array[Long], b: Array[Long]) =>
     S2CellUnion.intersectsUnion(a, b) }
-  val unionContainsUdf = udf { (a: Array[Long], b: Array[Long]) =>
-    S2CellUnion.containsUnion(a, b) }
+  /** Index terms of a polygon-text region (its query terms are
+    * [[S2.polygonQueryTerms]]). */
+  private val polyIndexTermsUdf = udf { (text: String) =>
+    indexer.indexTerms(graft.functions.PolyCache.get(text)) }
+
+  /** The term scheme's candidate pairs: `l` rows explode `indexTerms`,
+    * `r` rows explode `queryTerms`, the sides equi-join on the term, and
+    * the pairs are deduplicated on (lid, rid) — two regions may share
+    * several terms. Every column of `l` and `r` rides the join. */
+  private def termCandidates(l: DataFrame, indexTerms: Column, lid: String,
+                             r: DataFrame, queryTerms: Column, rid: String): DataFrame =
+    l.withColumn("term", explode(indexTerms))
+      .join(r.withColumn("term", explode(queryTerms)), "term").drop("term")
+      .dropDuplicates(lid, rid)
 
   /** Inner join of two region tables on covering intersection. Both sides
     * arbitrary size; one term equi-join shuffle + exact cell-union refine.
     * Left columns (leftId, leftCells) vs right (rightId, rightCells). */
   def intersectsJoin(left: DataFrame, leftId: String, leftCells: String,
                      right: DataFrame, rightId: String, rightCells: String): DataFrame = {
-    val l = left.select(col(leftId).as("lid"), col(leftCells).as("lcells"))
-      .withColumn("term", explode(indexTermsUdf(col("lcells"))))
-    val r = right.select(col(rightId).as("rid"), col(rightCells).as("rcells"))
-      .withColumn("term", explode(queryTermsUdf(col("rcells"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("lid", "rid")
+    termCandidates(
+      left.select(col(leftId).as("lid"), col(leftCells).as("lcells")),
+      indexTermsUdf(col("lcells")), "lid",
+      right.select(col(rightId).as("rid"), col(rightCells).as("rcells")),
+      queryTermsUdf(col("rcells")), "rid")
       .where(unionIntersectsUdf(col("lcells"), col("rcells")))
       .select("lid", "rid")
   }
@@ -55,8 +68,7 @@ object RegionJoins {
   def edgeCrossingJoin(left: DataFrame, leftId: String,
                        right: DataFrame, rightId: String,
                        lat1: String = "lat1", lng1: String = "lng1",
-                       lat2: String = "lat2", lng2: String = "lng2",
-                       segIndexer: S2TermIndexer = new S2TermIndexer()): DataFrame = {
+                       lat2: String = "lat2", lng2: String = "lng2"): DataFrame = {
     def cap(la1: Double, ln1: Double, la2: Double, ln2: Double): S2Cap = {
       val u = V3.fromLatLngDegrees(la1, ln1)
       val v = V3.fromLatLngDegrees(la2, ln2)
@@ -65,9 +77,9 @@ object RegionJoins {
       S2Cap.fromCenterAngle(center, math.min(math.Pi, center.angle(u) + 1e-14))
     }
     val segIdxTerms = udf { (la1: Double, ln1: Double, la2: Double, ln2: Double) =>
-      segIndexer.indexTerms(cap(la1, ln1, la2, ln2)) }
+      indexer.indexTerms(cap(la1, ln1, la2, ln2)) }
     val segQryTerms = udf { (la1: Double, ln1: Double, la2: Double, ln2: Double) =>
-      segIndexer.queryTerms(cap(la1, ln1, la2, ln2)) }
+      indexer.queryTerms(cap(la1, ln1, la2, ln2)) }
     val crosses = udf {
       (a1La: Double, a1Ln: Double, a2La: Double, a2Ln: Double,
        b1La: Double, b1Ln: Double, b2La: Double, b2Ln: Double) =>
@@ -75,18 +87,15 @@ object RegionJoins {
           V3.fromLatLngDegrees(a1La, a1Ln), V3.fromLatLngDegrees(a2La, a2Ln),
           V3.fromLatLngDegrees(b1La, b1Ln), V3.fromLatLngDegrees(b2La, b2Ln)) > 0
     }
-    val l = left.select(col(leftId).as("id_a"),
-      col(lat1).cast("double").as("_la1"), col(lng1).cast("double").as("_ln1"),
-      col(lat2).cast("double").as("_la2"), col(lng2).cast("double").as("_ln2"))
-      .withColumn("term",
-        explode(segIdxTerms(col("_la1"), col("_ln1"), col("_la2"), col("_ln2"))))
-    val r = right.select(col(rightId).as("id_b"),
-      col(lat1).cast("double").as("_rb1"), col(lng1).cast("double").as("_rn1"),
-      col(lat2).cast("double").as("_rb2"), col(lng2).cast("double").as("_rn2"))
-      .withColumn("term",
-        explode(segQryTerms(col("_rb1"), col("_rn1"), col("_rb2"), col("_rn2"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("id_a", "id_b")
+    termCandidates(
+      left.select(col(leftId).as("id_a"),
+        col(lat1).cast("double").as("_la1"), col(lng1).cast("double").as("_ln1"),
+        col(lat2).cast("double").as("_la2"), col(lng2).cast("double").as("_ln2")),
+      segIdxTerms(col("_la1"), col("_ln1"), col("_la2"), col("_ln2")), "id_a",
+      right.select(col(rightId).as("id_b"),
+        col(lat1).cast("double").as("_rb1"), col(lng1).cast("double").as("_rn1"),
+        col(lat2).cast("double").as("_rb2"), col(lng2).cast("double").as("_rn2")),
+      segQryTerms(col("_rb1"), col("_rn1"), col("_rb2"), col("_rn2")), "id_b")
       .where(crosses(col("_la1"), col("_ln1"), col("_la2"), col("_ln2"),
         col("_rb1"), col("_rn1"), col("_rb2"), col("_rn2")))
       .select("id_a", "id_b")
@@ -98,19 +107,14 @@ object RegionJoins {
     * reference s2polygon.h:296-343). */
   def polygonIntersectsJoin(left: DataFrame, leftId: String, leftPoly: String,
                             right: DataFrame, rightId: String, rightPoly: String): DataFrame = {
-    val idxTerms = udf { (text: String) =>
-      indexer.indexTerms(graft.functions.PolyCache.get(text)) }
-    val qryTerms = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text)) }
     val exact = udf { (a: String, b: String) =>
       graft.functions.PolyCache.get(a)
         .intersectsPolygon(graft.functions.PolyCache.get(b)) }
-    val l = left.select(col(leftId).as("lid"), col(leftPoly).as("lpoly"))
-      .withColumn("term", explode(idxTerms(col("lpoly"))))
-    val r = right.select(col(rightId).as("rid"), col(rightPoly).as("rpoly"))
-      .withColumn("term", explode(qryTerms(col("rpoly"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("lid", "rid")
+    termCandidates(
+      left.select(col(leftId).as("lid"), col(leftPoly).as("lpoly")),
+      polyIndexTermsUdf(col("lpoly")), "lid",
+      right.select(col(rightId).as("rid"), col(rightPoly).as("rpoly")),
+      S2.polygonQueryTerms(col("rpoly")), "rid")
       .where(exact(col("lpoly"), col("rpoly")))
       .select("lid", "rid")
   }
@@ -146,16 +150,11 @@ object RegionJoins {
   def overlapFractionsJoin(left: DataFrame, leftId: String, leftPoly: String,
                            right: DataFrame, rightId: String, rightPoly: String,
                            minFraction: Double = 0.0): DataFrame = {
-    val idxTerms = udf { (text: String) =>
-      indexer.indexTerms(graft.functions.PolyCache.get(text)) }
-    val qryTerms = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text)) }
-    val l = left.select(col(leftId).as("lid"), col(leftPoly).as("lpoly"))
-      .withColumn("term", explode(idxTerms(col("lpoly"))))
-    val r = right.select(col(rightId).as("rid"), col(rightPoly).as("rpoly"))
-      .withColumn("term", explode(qryTerms(col("rpoly"))))
-    l.join(r, "term").drop("term")
-      .dropDuplicates("lid", "rid")
+    termCandidates(
+      left.select(col(leftId).as("lid"), col(leftPoly).as("lpoly")),
+      polyIndexTermsUdf(col("lpoly")), "lid",
+      right.select(col(rightId).as("rid"), col(rightPoly).as("rpoly")),
+      S2.polygonQueryTerms(col("rpoly")), "rid")
       .withColumn("fr", overlapFractionsUdf(col("lpoly"), col("rpoly")))
       .where(col("fr._1") > 0 && col("fr._1") >= minFraction)
       .select(col("lid"), col("rid"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.functions.S2
+import graft.functions.{S2, S2SpatialKernels}
 
 /** Distributed spatial joins over S2 cell keys — the engine's flagship
   * operators (SURVEY.md §2.10). Three physical strategies, chosen by the
@@ -84,11 +84,9 @@ object S2Joins {
     * reference defaults; s2region_term_indexer.cc:155-175). */
   def docIndexTerms(docs: DataFrame, indexer: S2TermIndexer,
                     latCol: String = "lat", lngCol: String = "lng"): DataFrame = {
-    val termsUdf = udf { (lat: Double, lng: Double) =>
-      val p = V3.fromLatLngDegrees(lat, lng)
-      indexer.indexTermsForPoint(p.x, p.y, p.z)
-    }
-    docs.withColumn("term", explode(termsUdf(col(latCol), col(lngCol))))
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
+    docs.withColumn("term", explode(toCol(graft.functions.S2PointIndexTermsExpr(
+      toExpr(col(latCol).cast("double")), toExpr(col(lngCol).cast("double")), indexer))))
   }
 
   /** Full term-join pipeline for polygon regions given as text: emits
@@ -134,18 +132,15 @@ object S2Joins {
     * A/B harnesses). */
   def termPolygonJoin(docs: DataFrame, polys: DataFrame,
                       polyTextCol: String = "poly", qidCol: String = "qid",
-                      indexer: S2TermIndexer = new S2TermIndexer(),
                       saltThreshold: Long = 2000000L,
                       saltSampleFraction: Double = 0.001,
                       minDetectBytes: Long = 64L << 20): DataFrame = {
-    val queryTermsUdf = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text))
-    }
+    val indexer = S2SpatialKernels.indexer
     val slim = docs.select(col("doc_id"),
       col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
     val d = docIndexTerms(slim, indexer)
     val q = polys.select(col(qidCol), col(polyTextCol),
-      explode(queryTermsUdf(col(polyTextCol))).as("term"))
+      explode(S2.polygonQueryTerms(col(polyTextCol))).as("term"))
     val salts: Map[String, Int] =
       if (saltThreshold <= 0 ||
           (minDetectBytes > 0 &&
@@ -170,7 +165,7 @@ object S2Joins {
       // once, so each candidate pair arrives exactly once — the invariant
       // S2SpatialJoinRule proves and SpatialSqlJoinSpec fuzz-tests. Dropping
       // the dedup removes a full shuffle of the candidate set.
-      .where(S2.polygonContains(col(polyTextCol), col("lat"), col("lng")))
+      .where(S2.contains(col(polyTextCol), col("lat"), col("lng")))
       .select(col("doc_id"), col(qidCol))
     docs.join(matches, "doc_id")
   }
@@ -627,14 +622,11 @@ object S2Joins {
                    maxFallbackTargets: Int = 100000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
-    val indexer = new S2TermIndexer()
     val docTerms = docIndexTerms(
       docs.select(col(idCol), col(latCol).cast("double").as(latCol),
-        col(lngCol).cast("double").as(lngCol)), indexer, latCol, lngCol)
+        col(lngCol).cast("double").as(lngCol)),
+      S2SpatialKernels.indexer, latCol, lngCol)
       .select(col(idCol), col(latCol), col(lngCol), col("term"))
-    val capTerms = udf { (lat: Double, lng: Double, r: Double) =>
-      indexer.queryTerms(S2Cap.fromCenterAngle(V3.fromLatLngDegrees(lat, lng), r))
-    }
     val dist2 = udf { (tLat: Double, tLng: Double, lat: Double, lng: Double) =>
       (V3.fromLatLngDegrees(tLat, tLng) - V3.fromLatLngDegrees(lat, lng)).norm2
     }
@@ -657,7 +649,7 @@ object S2Joins {
     for (r <- fullRadii if unsatCount != 0) {
       val chord2 = S1ChordAngle.fromRadians(r)
       val q = unsatisfied.withColumn("term",
-        explode(capTerms(col(tLatCol), col(tLngCol), lit(r))))
+        explode(S2.capQueryTerms(col(tLatCol), col(tLngCol), lit(r))))
       // No (qid, doc) dedup needed: a point doc's index terms are plain
       // ancestor tokens, and the only plain tokens a cap query emits are
       // its covering cells — a normalized DISJOINT union, of which at

@@ -117,14 +117,11 @@ class PlanAuditSpec extends AnyFunSuite {
   test("salted term join still plans as a single equi-join (no BNLJ)") {
     import spark.implicits._
     val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
-    val indexer = new S2TermIndexer()
-    val docTerms = S2Joins.docIndexTerms(docs, indexer)
+    val docTerms = S2Joins.docIndexTerms(docs, graft.functions.S2SpatialKernels.indexer)
     val hot = Skew.hotTerms(docTerms, "term", threshold = 50)
     val polys = Seq((1, "0:0, 0:35, 30:35, 30:0")).toDF("qid", "poly")
-    val queryTermsUdf = udf { (text: String) =>
-      indexer.queryTerms(graft.functions.PolyCache.get(text)) }
     val q = polys.select(col("qid"),
-      explode(queryTermsUdf(col("poly"))).as("term"))
+      explode(graft.functions.S2.polygonQueryTerms(col("poly"))).as("term"))
     val joined = Skew.saltedTermJoin(docTerms, q, "term", col("doc_id"), hot)
     joined.collect()
     val plan = joined.queryExecution.executedPlan.toString

@@ -117,6 +117,25 @@ class S2JoinsSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
+  test("docIndexTerms honours its indexer under whole-stage codegen") {
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    // a range source (not a local relation, which the optimizer folds)
+    // keeps the explode inside a codegen stage; lat/lng reach faces 4-5
+    val pts = spark.range(60).select(col("id").cast("string").as("doc_id"),
+      (col("id") * 2.9 - 85.0).as("lat"), (col("id") * 5.9 - 175.0).as("lng"))
+    def termsPerDoc(indexer: S2TermIndexer): Set[Int] = {
+      val terms = S2Joins.docIndexTerms(pts, indexer)
+      val plan = terms.queryExecution.executedPlan
+      assert(plan.collect { case w: WholeStageCodegenExec => w }
+        .exists(_.child.exists(_.isInstanceOf[GenerateExec])), plan)
+      val rows = terms.select("doc_id").collect().map(_.getString(0))
+      assert(rows.distinct.length == 60)
+      rows.groupBy(identity).values.map(_.length).toSet
+    }
+    assert(termsPerDoc(new S2TermIndexer(minLevel = 8)) == Set(9))
+    assert(termsPerDoc(graft.functions.S2SpatialKernels.indexer) == Set(13))
+  }
+
   test("knnJoin matches brute-force k nearest") {
     val targets = Seq(
       1 -> V3.fromLatLngDegrees(10, 20),
