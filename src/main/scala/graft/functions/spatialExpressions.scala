@@ -23,11 +23,13 @@ import graft.core._
   * plan would produce.
   *
   * The term generators ([[S2PointIndexTermsExpr]] etc.) are the native
-  * column forms of S2TermIndexer. Each carries its indexer as a non-child
-  * field, default [[S2SpatialKernels.indexer]], which generated code
-  * reaches as a reference object (as [[S2StabMatch]] ships its index) —
-  * so a caller-chosen scheme survives whole-stage codegen. Plans print
-  * only their children: the indexer has no stable string form. */
+  * column forms of S2TermIndexer. The query-side generators use the one
+  * default scheme, [[S2SpatialKernels.indexer]]. [[S2PointIndexTermsExpr]]
+  * carries its indexer as a non-child field (same default), which
+  * generated code reaches as a reference object (as [[S2StabMatch]] ships
+  * its index), so a caller-chosen document scheme survives whole-stage
+  * codegen. Plans print only its children: the indexer has no stable
+  * string form. */
 
 /** Shared kernels (static forwarders make these callable from generated
   * Java). [[indexer]] is the engine's one default term scheme: a term
@@ -54,11 +56,11 @@ object S2SpatialKernels {
     toArrayData(ix.indexTermsForPoint(p.x, p.y, p.z))
   }
 
-  def polyQueryTerms(ix: S2TermIndexer, polyText: UTF8String): ArrayData =
-    toArrayData(ix.queryTerms(PolyCache.get(polyText.toString)))
+  def polyQueryTerms(polyText: UTF8String): ArrayData =
+    toArrayData(indexer.queryTerms(PolyCache.get(polyText.toString)))
 
-  def capQueryTerms(ix: S2TermIndexer, lat: Double, lng: Double, radiusRad: Double): ArrayData =
-    toArrayData(ix.queryTerms(
+  def capQueryTerms(lat: Double, lng: Double, radiusRad: Double): ArrayData =
+    toArrayData(indexer.queryTerms(
       S2Cap.fromCenterAngle(V3.fromLatLngDegrees(lat, lng), radiusRad)))
 }
 
@@ -125,40 +127,31 @@ case class S2PointIndexTermsExpr(left: Expression, right: Expression,
   * covering, so each intersecting (point, polygon) pair shares EXACTLY
   * one term — the property that lets [[graft.plans.S2SpatialJoinRule]]
   * skip pair deduplication. */
-case class S2PolyQueryTermsExpr(child: Expression,
-                                indexer: S2TermIndexer = S2SpatialKernels.indexer)
-    extends UnaryExpression {
+case class S2PolyQueryTermsExpr(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "s2_poly_query_terms"
   override protected def nullSafeEval(poly: Any): Any =
-    S2SpatialKernels.polyQueryTerms(indexer, poly.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
-    defineCodeGen(ctx, ev, p => s"graft.functions.S2SpatialKernels.polyQueryTerms($ix, $p)")
-  }
-  override protected def stringArgs: Iterator[Any] = children.iterator
+    S2SpatialKernels.polyQueryTerms(poly.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, p => s"graft.functions.S2SpatialKernels.polyQueryTerms($p)")
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** s2_cap_query_terms(latDeg, lngDeg, radiusRad) — query terms of the cap
   * around a point; the within-distance analogue of
   * [[S2PolyQueryTermsExpr]] (same single-shared-term property). */
-case class S2CapQueryTermsExpr(first: Expression, second: Expression, third: Expression,
-                               indexer: S2TermIndexer = S2SpatialKernels.indexer)
+case class S2CapQueryTermsExpr(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "s2_cap_query_terms"
   override protected def nullSafeEval(lat: Any, lng: Any, r: Any): Any =
-    S2SpatialKernels.capQueryTerms(indexer, lat.asInstanceOf[Double],
+    S2SpatialKernels.capQueryTerms(lat.asInstanceOf[Double],
       lng.asInstanceOf[Double], r.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (la, ln, r) =>
-      s"graft.functions.S2SpatialKernels.capQueryTerms($ix, $la, $ln, $r)")
-  }
-  override protected def stringArgs: Iterator[Any] = children.iterator
+      s"graft.functions.S2SpatialKernels.capQueryTerms($la, $ln, $r)")
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(first = f, second = s, third = t)
 }

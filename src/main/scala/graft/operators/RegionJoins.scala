@@ -14,18 +14,16 @@ import graft.functions.{S2, S2SpatialKernels}
   * uses the engine's one term scheme, [[S2SpatialKernels.indexer]]. */
 object RegionJoins {
 
-  private val indexer = S2SpatialKernels.indexer
-
   val indexTermsUdf = udf { (cells: Array[Long]) =>
-    indexer.indexTermsForCovering(cells) }
+    S2SpatialKernels.indexer.indexTermsForCovering(cells) }
   val queryTermsUdf = udf { (cells: Array[Long]) =>
-    indexer.queryTermsForCovering(cells) }
+    S2SpatialKernels.indexer.queryTermsForCovering(cells) }
   val unionIntersectsUdf = udf { (a: Array[Long], b: Array[Long]) =>
     S2CellUnion.intersectsUnion(a, b) }
   /** Index terms of a polygon-text region (its query terms are
     * [[S2.polygonQueryTerms]]). */
   private val polyIndexTermsUdf = udf { (text: String) =>
-    indexer.indexTerms(graft.functions.PolyCache.get(text)) }
+    S2SpatialKernels.indexer.indexTerms(graft.functions.PolyCache.get(text)) }
 
   /** The term scheme's candidate pairs: `l` rows explode `indexTerms`,
     * `r` rows explode `queryTerms`, the sides equi-join on the term, and
@@ -77,9 +75,9 @@ object RegionJoins {
       S2Cap.fromCenterAngle(center, math.min(math.Pi, center.angle(u) + 1e-14))
     }
     val segIdxTerms = udf { (la1: Double, ln1: Double, la2: Double, ln2: Double) =>
-      indexer.indexTerms(cap(la1, ln1, la2, ln2)) }
+      S2SpatialKernels.indexer.indexTerms(cap(la1, ln1, la2, ln2)) }
     val segQryTerms = udf { (la1: Double, ln1: Double, la2: Double, ln2: Double) =>
-      indexer.queryTerms(cap(la1, ln1, la2, ln2)) }
+      S2SpatialKernels.indexer.queryTerms(cap(la1, ln1, la2, ln2)) }
     val crosses = udf {
       (a1La: Double, a1Ln: Double, a2La: Double, a2Ln: Double,
        b1La: Double, b1Ln: Double, b2La: Double, b2Ln: Double) =>

@@ -135,10 +135,9 @@ object S2Joins {
                       saltThreshold: Long = 2000000L,
                       saltSampleFraction: Double = 0.001,
                       minDetectBytes: Long = 64L << 20): DataFrame = {
-    val indexer = S2SpatialKernels.indexer
     val slim = docs.select(col("doc_id"),
       col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
-    val d = docIndexTerms(slim, indexer)
+    val d = docIndexTerms(slim, S2SpatialKernels.indexer)
     val q = polys.select(col(qidCol), col(polyTextCol),
       explode(S2.polygonQueryTerms(col(polyTextCol))).as("term"))
     val salts: Map[String, Int] =
@@ -152,7 +151,7 @@ object S2Joins {
         val f = math.min(1.0, math.max(saltSampleFraction, 0.0))
         val src = if (f < 1.0)
           slim.sample(withReplacement = false, f, seed = 42L) else slim
-        Skew.hotTerms(docIndexTerms(src, indexer).select("term"), "term",
+        Skew.hotTerms(docIndexTerms(src, S2SpatialKernels.indexer).select("term"), "term",
           threshold = math.max(1L, (saltThreshold * f).toLong))
       }
     val joined =

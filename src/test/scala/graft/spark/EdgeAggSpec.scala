@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.functions.S2
 import graft.operators._
 import graft.sources.DocSource
 
@@ -235,6 +236,24 @@ class EdgeAggSpec extends AnyFunSuite {
     assert(row.getString(0) ==
       S2CellId.toToken(S2CellId.parent(S2CellId.fromLatLngDegrees(48.8566, 2.3522), 10)))
     assert(row.getInt(1) == 30)
+    // term generators and PIP through the extension equal the Column API
+    // on a face 4-5 row (negative cell id)
+    import s2.implicits._
+    val poly = "-40:-130, -40:-110, -20:-110, -20:-130"
+    val face5 = Seq((-30.0, -120.0, 0.01, poly)).toDF("lat", "lng", "r", "poly")
+    face5.createOrReplaceTempView("face5_row")
+    assert(S2CellId.fromLatLngDegrees(-30.0, -120.0) < 0)
+    val sql = s2.sql(
+      """SELECT s2_point_index_terms(lat, lng), s2_poly_query_terms(poly),
+                s2_cap_query_terms(lat, lng, r), s2_contains(poly, lat, lng)
+         FROM face5_row""").head()
+    val api = face5.select(S2.pointIndexTerms($"lat", $"lng"), S2.polygonQueryTerms($"poly"),
+      S2.capQueryTerms($"lat", $"lng", $"r"), S2.contains($"poly", $"lat", $"lng")).head()
+    for (i <- 0 until 3) {
+      assert(sql.getSeq[String](i).nonEmpty)
+      assert(sql.getSeq[String](i) == api.getSeq[String](i), s"column $i")
+    }
+    assert(sql.getBoolean(3) && api.getBoolean(3))
     } finally {
       prior.foreach { p =>
         SparkSession.setDefaultSession(p)

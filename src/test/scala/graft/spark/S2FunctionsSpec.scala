@@ -76,43 +76,6 @@ class S2FunctionsSpec extends AnyFunSuite {
     assert(got == Seq(true, false, true, false))
   }
 
-  test("S2Extensions SQL functions match the Column API on a face 4-5 row") {
-    // a genuinely new session applies the injections: clear the suite's
-    // shared one (built without the extension), restore it afterwards
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-functions-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.S2Extensions())
-      .getOrCreate()
-    try {
-      import ext.implicits._
-      val poly = "-40:-130, -40:-110, -20:-110, -20:-130"
-      val row = Seq((-30.0, -120.0, 0.01, poly)).toDF("lat", "lng", "r", "poly")
-      row.createOrReplaceTempView("face5_row")
-      assert(CID.fromLatLngDegrees(-30.0, -120.0) < 0)
-      val sql = ext.sql(
-        """SELECT s2_point_index_terms(lat, lng), s2_poly_query_terms(poly),
-                  s2_cap_query_terms(lat, lng, r), s2_contains(poly, lat, lng)
-           FROM face5_row""").head()
-      val api = row.select(S2.pointIndexTerms($"lat", $"lng"), S2.polygonQueryTerms($"poly"),
-        S2.capQueryTerms($"lat", $"lng", $"r"), S2.contains($"poly", $"lat", $"lng")).head()
-      for (i <- 0 until 3) {
-        assert(sql.getSeq[String](i).nonEmpty)
-        assert(sql.getSeq[String](i) == api.getSeq[String](i), s"column $i")
-      }
-      assert(sql.getBoolean(3) && api.getBoolean(3))
-    } finally {
-      prior.foreach { p =>
-        SparkSession.setDefaultSession(p)
-        SparkSession.setActiveSession(p)
-      }
-    }
-  }
-
   test("whole-stage codegen keeps s2 expressions inline") {
     import spark.implicits._
     val df = spark.range(100)
