@@ -21,7 +21,6 @@ case class S2StabMatch(first: Expression, second: Expression, third: Expression,
     extends TernaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = false
   override def nullIntolerant: Boolean = true
 
   // O(1) label -> region lookup for the refine path (labels are small
@@ -110,7 +109,6 @@ case class S2TileAssign(child: Expression, index: CellIntervalIndex,
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = false
   override def nullIntolerant: Boolean = true
 
   def kernel(cellId: Long): Int = {

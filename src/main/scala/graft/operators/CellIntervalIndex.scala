@@ -55,20 +55,6 @@ final class CellIntervalIndex private (
     java.util.Arrays.copyOfRange(entryLabel, segOff(s), segOff(s + 1))
   }
 
-  /** (label, interiorHit) pairs for a leaf: interior=true if any covering
-    * entry containing it is an interior cell — callers skip the exact
-    * refine for those (coverer interior-covering optimization). */
-  def candidates(leafOrd: Long): Array[(Int, Boolean)] = {
-    val s = findSeg(leafOrd)
-    if (s < 0) return Array.empty
-    val out = new Array[(Int, Boolean)](segOff(s + 1) - segOff(s))
-    var i = segOff(s); var k = 0
-    while (i < segOff(s + 1)) {
-      out(k) = (entryLabel(i), entryInterior(i)); i += 1; k += 1
-    }
-    out
-  }
-
   /** Total leaf-cell overlap weight per label for a covering; used by
     * mostIntersecting. Iterates segments overlapping each covering cell —
     * O(log n + touched segments). */

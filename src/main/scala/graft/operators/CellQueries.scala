@@ -1,10 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.DataFrame
 import graft.core._
-import scala.jdk.CollectionConverters._
 
 /** Closest-cell and furthest-edge queries — S2ClosestCellQuery
   * (/root/reference/src/s2/s2closest_cell_query.h:89) and
@@ -50,39 +47,21 @@ object CellQueries {
                        maxDist2: Double = 4.0,
                        idCol: String = "doc_id",
                        latCol: String = "lat", lngCol: String = "lng"): DataFrame = {
-    val spark = docs.sparkSession
     val resolved: Array[(Int, Array[S2Cell])] =
       targets.map { case (tid, cells) => (tid, cells.map(S2Cell(_))) }.toArray
-    val bT = spark.sparkContext.broadcast(resolved)
-    val in = docs.select(col(idCol), col(latCol).cast("double"), col(lngCol).cast("double"))
-    val outSchema = StructType(Seq(
-      in.schema.fields(0).copy(name = "doc_id"),
-      StructField("target_id", IntegerType, nullable = false),
-      StructField("dist2", DoubleType, nullable = false),
-      StructField("rank", IntegerType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { it =>
+    val bT = docs.sparkSession.sparkContext.broadcast(resolved)
+    EdgeQueries.rankedPerDoc(docs, k, "target_id", descending = false,
+        idCol, latCol, lngCol) { () =>
       val ts = bT.value
-      it.flatMap { r =>
-        val p = V3.fromLatLngDegrees(r.getDouble(1), r.getDouble(2))
-        val best = new java.util.TreeMap[(Double, Int), Null](
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      (p: V3, best: EdgeQueries.TopK) => {
         var i = 0
         while (i < ts.length) {
           val d = unionDistance2(p, ts(i)._2)
-          if (d <= maxDist2) {
-            best.put((d, ts(i)._1), null)
-            if (best.size > k) { best.pollLastEntry(); () }
-          }
+          if (d <= maxDist2) best.offer(d, ts(i)._1)
           i += 1
         }
-        val id = r.get(0)
-        var rank = 0
-        best.keySet().asScala.iterator.map { case (d, tid) =>
-          rank += 1; Row(id, tid, d, rank)
-        }
       }
-    }(enc)
+    }
   }
 
   /** For each doc row, the `k` FURTHEST shapes (max squared-chord distance
@@ -94,22 +73,12 @@ object CellQueries {
                          minDist2: Double = 0.0,
                          idCol: String = "doc_id",
                          latCol: String = "lat", lngCol: String = "lng"): DataFrame = {
-    val spark = docs.sparkSession
-    val bS = spark.sparkContext.broadcast(shapes.toArray)
-    val in = docs.select(col(idCol), col(latCol).cast("double"), col(lngCol).cast("double"))
-    val outSchema = StructType(Seq(
-      in.schema.fields(0).copy(name = "doc_id"),
-      StructField("shape_id", IntegerType, nullable = false),
-      StructField("dist2", DoubleType, nullable = false),
-      StructField("rank", IntegerType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { it =>
+    val bS = docs.sparkSession.sparkContext.broadcast(shapes.toArray)
+    // offered as (-dist2, shape_id): iteration yields decreasing distance
+    EdgeQueries.rankedPerDoc(docs, k, "shape_id", descending = true,
+        idCol, latCol, lngCol) { () =>
       val ss = bS.value
-      it.flatMap { r =>
-        val p = V3.fromLatLngDegrees(r.getDouble(1), r.getDouble(2))
-        // order by (-dist2, shape_id): iteration yields decreasing distance
-        val best = new java.util.TreeMap[(Double, Int), Null](
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      (p: V3, best: EdgeQueries.TopK) => {
         var i = 0
         while (i < ss.length) {
           val sh = ss(i)
@@ -126,18 +95,10 @@ object CellQueries {
               e += 1
             }
           }
-          if (d >= minDist2) {
-            best.put((-d, sh.id), null)
-            if (best.size > k) { best.pollLastEntry(); () }
-          }
+          if (d >= minDist2) best.offer(-d, sh.id)
           i += 1
         }
-        val id = r.get(0)
-        var rank = 0
-        best.keySet().asScala.iterator.map { case (negD, sid) =>
-          rank += 1; Row(id, sid, -negD, rank)
-        }
       }
-    }(enc)
+    }
   }
 }

@@ -107,32 +107,16 @@ object EdgeQueries {
     val bS = spark.sparkContext.broadcast(shapesArr)
     val bIdx = spark.sparkContext.broadcast((rings, ringChord2))
 
-    val in = docs.select(col(idCol), col(latCol).cast("double"), col(lngCol).cast("double"))
-    val outSchema = StructType(Seq(
-      in.schema.fields(0).copy(name = "doc_id"),
-      StructField("shape_id", IntegerType, nullable = false),
-      StructField("dist2", DoubleType, nullable = false),
-      StructField("rank", IntegerType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    in.mapPartitions { it =>
+    rankedPerDoc(docs, k, "shape_id", descending = false, idCol, latCol, lngCol) { () =>
       val ss = bS.value
       val (ringsL, chord2L) = bIdx.value
-      it.flatMap { r =>
-        val lat = r.getDouble(1); val lng = r.getDouble(2)
-        val p = V3.fromLatLngDegrees(lat, lng)
-        // bounded insertion list ordered by (dist2, shape_id) — already
-        // the final ranking, so ranks are emitted locally (no window)
-        val best = new java.util.TreeMap[(Double, Int), Null](
-          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      (p: V3, best: TopK) => {
         def consider(si: Int): Unit = {
           val d = ss(si).distance2(p)
-          if (d <= maxDist2) {
-            best.put((d, ss(si).id), null)
-            if (best.size > k) { best.pollLastEntry(); () }
-          }
+          if (d <= maxDist2) best.offer(d, ss(si).id)
         }
         if (ringsL != null) {
-          val ord = S2CellId.orderKey(S2CellId.fromLatLngDegrees(lat, lng))
+          val ord = S2CellId.orderKey(S2CellId.fromPoint(p.x, p.y, p.z))
           var ring = 0
           var done = false
           while (!done) {
@@ -144,7 +128,7 @@ object EdgeQueries {
             // it (candidates are a superset of shapes within the ring
             // radius, but coarse coverings admit farther false positives)
             done = ring == ringsL.length - 1 ||
-              (best.size >= k && best.lastKey()._1 <= chord2L(ring)) ||
+              (best.size >= k && best.worstKey <= chord2L(ring)) ||
               (maxDist2 <= chord2L(ring) && best.size < k) // bounded: nothing else can qualify
             ring += 1
           }
@@ -152,10 +136,62 @@ object EdgeQueries {
           var i = 0
           while (i < ss.length) { consider(i); i += 1 }
         }
+      }
+    }
+  }
+
+  /** The (id, lat, lng) projection every per-doc query scans: coordinates
+    * cast to double, rows with a null coordinate dropped (the rule
+    * [[S2Joins.knnJoin]] and [[S2Joins.regionTileCounts]] follow). */
+  private def pointRows(docs: DataFrame, idCol: String,
+                        latCol: String, lngCol: String): DataFrame =
+    docs.where(col(latCol).isNotNull && col(lngCol).isNotNull)
+      .select(col(idCol), col(latCol).cast("double"), col(lngCol).cast("double"))
+
+  /** Bounded top-k of (key, label), ordered by key then label ascending
+    * (total order on doubles). One instance is reused for every row of a
+    * partition. */
+  private[operators] final class TopK(k: Int) {
+    private val best = new java.util.TreeMap[(Double, Int), Null](
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+    def clear(): Unit = best.clear()
+    def offer(key: Double, label: Int): Unit = {
+      best.put((key, label), null)
+      if (best.size > k) { best.pollLastEntry(); () }
+    }
+    def size: Int = best.size
+    def worstKey: Double = best.lastKey()._1
+    def iterator: Iterator[(Double, Int)] = best.keySet().asScala.iterator
+  }
+
+  /** Ranked per-doc scan shared by the closest/furthest queries: for each
+    * doc with coordinates, `fill` (built once per partition) offers the
+    * candidates for the doc's point to an empty [[TopK]]; the kept entries
+    * are emitted as (doc_id, `labelCol`, dist2, rank) with ranks 1..n in
+    * key order. A `descending` scan offers negated distances, so its ranks
+    * run from the furthest, and emits the positive distance. Narrow map,
+    * no shuffle. */
+  private[operators] def rankedPerDoc(docs: DataFrame, k: Int, labelCol: String,
+                                      descending: Boolean,
+                                      idCol: String, latCol: String, lngCol: String)(
+      fill: () => (V3, TopK) => Unit): DataFrame = {
+    val in = pointRows(docs, idCol, latCol, lngCol)
+    val outSchema = StructType(Seq(
+      in.schema.fields(0).copy(name = "doc_id"),
+      StructField(labelCol, IntegerType, nullable = false),
+      StructField("dist2", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false)))
+    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
+    in.mapPartitions { it =>
+      val f = fill()
+      val best = new TopK(k)
+      it.flatMap { r =>
+        best.clear()
+        f(V3.fromLatLngDegrees(r.getDouble(1), r.getDouble(2)), best)
         val id = r.get(0)
         var rank = 0
-        best.keySet().asScala.iterator.map { case (d, sid) =>
-          rank += 1; Row(id, sid, d, rank)
+        best.iterator.map { case (key, label) =>
+          rank += 1; Row(id, label, if (descending) -key else key, rank)
         }
       }
     }(enc)
@@ -174,7 +210,7 @@ object EdgeQueries {
                               idCol: String = "doc_id",
                               latCol: String = "lat", lngCol: String = "lng"): DataFrame = {
     val bS = docs.sparkSession.sparkContext.broadcast(shapes.toArray)
-    val in = docs.select(col(idCol), col(latCol).cast("double"), col(lngCol).cast("double"))
+    val in = pointRows(docs, idCol, latCol, lngCol)
     val outSchema = StructType(Seq(
       in.schema.fields(0).copy(name = "doc_id"),
       StructField("shape_id", IntegerType, nullable = false)))

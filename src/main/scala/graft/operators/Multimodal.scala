@@ -10,16 +10,17 @@ import org.apache.spark.sql.types._
   * transforms.
   *
   * [[MediaCodec]] carries TWO decode paths behind the same batch seam:
-  * REAL JDK codecs — PNG/JPEG/BMP via javax.imageio, WAV/PCM via
-  * javax.sound.sampled — used by the *Real operators and the
-  * q_media_real / q_media_audio gates, and a deterministic synthetic
-  * decode (seeded by content hash) kept for parity tests and for media
-  * formats the JDK cannot parse (the video frame path still synthesizes:
-  * no mp4 demuxer ships with the JDK — a production build swaps in
-  * javacv/ffmpeg behind the identical batch interface). Everything
-  * Spark-side is shared and real: schemas, batched per-partition
-  * execution (one codec context per partition, not per row), partition
-  * sizing, and the metadata/feature column contracts.
+  * REAL codecs — PNG/JPEG/BMP via javax.imageio, WAV/PCM via
+  * javax.sound.sampled, and video through pure-JDK RIFF/AVI and
+  * ISO-BMFF/MP4 demuxers (`demuxVideo`) whose Motion-PNG/Motion-JPEG
+  * frames decode via javax.imageio — used by the *Real operators and the
+  * q_media_real / q_media_audio / q_media_video / q_media_mp4 gates, and
+  * a deterministic synthetic decode (seeded by content hash) kept for
+  * parity tests and as the fallback for media the real path cannot parse
+  * (other video codecs would need ffmpeg/javacv behind the identical
+  * batch interface). Everything Spark-side is shared and real: schemas,
+  * batched per-partition execution (one codec context per partition, not
+  * per row), partition sizing, and the metadata/feature column contracts.
   */
 object Multimodal {
 
@@ -84,9 +85,9 @@ object Multimodal {
 
     /** SYNTHETIC decode of one video frame at a byte+offset key:
       * deterministic pixels seeded by (content hash, frame offset) so
-      * adjacent frames of the same video differ. The JDK ships no mp4
-      * demuxer — a production build swaps in ffmpeg/javacv here behind
-      * the same (bytes, offset) -> pixels signature. */
+      * adjacent frames of the same video differ. The real AVI/MP4 path is
+      * [[decodeFrameReal]]; this twin keeps the same (bytes, offset) ->
+      * pixels signature. */
     def decodeFrame(bytes: Array[Byte], offsetMs: Long, w: Int, h: Int): Array[Float] = {
       val tag = java.nio.ByteBuffer.allocate(8).putLong(offsetMs).array()
       decodeImage((if (bytes == null) Array.emptyByteArray else bytes) ++ tag, w, h)

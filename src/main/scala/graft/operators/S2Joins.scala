@@ -6,8 +6,8 @@ import graft.core._
 import graft.functions.{S2, S2SpatialKernels}
 
 /** Distributed spatial joins over S2 cell keys — the engine's flagship
-  * operators (SURVEY.md §2.10). Three physical strategies, chosen by the
-  * caller (or `containsJoin` auto):
+  * operators (SURVEY.md §2.10). Two physical strategies for region joins,
+  * chosen by the caller:
   *
   *  1. broadcast  — regions side fits in memory: build a
   *     [[CellIntervalIndex]] of all region coverings, broadcast it, and
@@ -24,8 +24,10 @@ import graft.functions.{S2, S2SpatialKernels}
   *     term, so the spatial join becomes a plain equi-join Catalyst can
   *     hash/sort-merge + AQE-skew-split, followed by the exact refine.
   *
-  *  3. range      — both sides large and Hilbert-sorted: covering cells
-  *     against leaf cells as an interval containment join on order keys.
+  * The same two shapes carry tile assignment ([[tileAssign]], fused with
+  * the broadcast join in [[regionTileCounts]]) and the kNN joins
+  * ([[knnJoin]] broadcasts the targets, [[knnJoinLarge]] runs a radius
+  * ladder of term joins).
   *
   * All joins carry every payload column (notably `spans`) untouched —
   * the span-sequence invariant is preserved structurally because spans are
@@ -61,18 +63,24 @@ object S2Joins {
   def broadcastContainsJoin(docs: DataFrame, regions: Seq[(Int, S2Region)],
                             latCol: String = "lat", lngCol: String = "lng",
                             maxCellsPerRegion: Int = 64): DataFrame = {
+    // No size()>0 pre-filter — explode of an empty array emits no rows,
+    // and a filter would be pushed into the scan and evaluate the kernel
+    // twice.
+    docs.withColumn("qid", explode(regionHits(regions, latCol, lngCol, maxCellsPerRegion)))
+  }
+
+  /** The labels of the regions containing each row's point (null for a
+    * row with a null `cell_ord`, lat or lng): one native stab-and-refine
+    * expression per row (codegen, no arg boxing) over the rows'
+    * `cell_ord`; interior covering cells skip the exact test. The index
+    * rides the serialized plan (small: dimension-side coverings). */
+  private[graft] def regionHits(regions: Seq[(Int, S2Region)], latCol: String,
+                                lngCol: String, maxCellsPerRegion: Int = 64): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    val index = CellIntervalIndex.fromRegions(regions, maxCellsPerRegion)
-    // single native stab-and-refine expression per row (codegen, no arg
-    // boxing): emits only the matching labels; interior covering cells
-    // skip the exact test. The index rides the serialized plan (small:
-    // dimension-side coverings). No size()>0 pre-filter — explode of an
-    // empty array emits no rows, and a filter would be pushed into the
-    // scan and evaluate the kernel twice.
-    val stab = toCol(graft.functions.S2StabMatch(
+    toCol(graft.functions.S2StabMatch(
       toExpr(col("cell_ord")), toExpr(col(latCol).cast("double")),
-      toExpr(col(lngCol).cast("double")), index, regions.toArray))
-    docs.withColumn("qid", explode(stab))
+      toExpr(col(lngCol).cast("double")),
+      CellIntervalIndex.fromRegions(regions, maxCellsPerRegion), regions.toArray))
   }
 
   // =======================================================================
@@ -352,8 +360,9 @@ object S2Joins {
     * target t when its distance provably exceeds t's k-th distance — which
     * requires a bound on that k-th distance first. Two passes:
     *
-    *  1. certify: one counting pass over docs through a geometric ladder
-    *     of per-target cap coverings; each doc exact-distance-buckets
+    *  1. certify: one counting pass over docs through a fixed geometric
+    *     ladder of per-target cap coverings (`LadderRadii`, the default
+    *     ladder of [[knnJoinLarge]]); each doc exact-distance-buckets
     *     itself into the smallest ring that contains it, giving per-target
     *     ring histograms. The smallest ring r_t holding ≥ k docs certifies
     *     kth(t) ≤ chord(r_t).
@@ -362,8 +371,9 @@ object S2Joins {
     *     top-k member qualifies, so results are exact.
     *
     * Targets the ladder cannot certify (< k docs within the largest ring)
-    * fall back to the full scan — by construction they live in near-empty
-    * space, and the fallback is never worse than the unpruned path.
+    * are scanned against every doc in pass 2 — by construction they live
+    * in near-empty space, and that scan is never worse than the unpruned
+    * path. Docs with a null coordinate are skipped.
     * Per-doc work scales with local target density, not target count
     * (asserted sublinear by the 10⁴-target differential in S2JoinsSpec via
     * `distEvals`).
@@ -380,15 +390,18 @@ object S2Joins {
               idCol: String = "doc_id",
               latCol: String = "lat", lngCol: String = "lng",
               prefilterFrom: Int = 64,
-              ringRadii: Seq[Double] = Seq(0.005, 0.02, 0.08, 0.32),
               distEvals: org.apache.spark.util.LongAccumulator = null): DataFrame = {
     val ts = targets.toArray
     if (ts.length < prefilterFrom)
       knnFinish(knnPartialScan(docs, ts, (0 until ts.length).toArray, k,
         idCol, latCol, lngCol, null, distEvals), k)
     else
-      knnJoinPruned(docs, ts, k, idCol, latCol, lngCol, ringRadii, distEvals)
+      knnJoinPruned(docs, ts, k, idCol, latCol, lngCol, distEvals)
   }
+
+  /** The radius ladder (radians) of both kNN joins: [[knnJoin]]'s
+    * certification rings and [[knnJoinLarge]]'s default rounds. */
+  private val LadderRadii = Seq(0.005, 0.02, 0.08, 0.32)
 
   /** Shared heap ordering: keep the k smallest by (dist2, id asc); the
     * max-heap orders lexicographically so the worst kept element sits on
@@ -481,23 +494,25 @@ object S2Joins {
     }(enc)
   }
 
-  /** Global top-k finish over the partial heap output: one small shuffle
-    * of ≤ partitions×targets×k scalar rows + a window over that tiny set. */
-  private def knnFinish(partial: DataFrame, k: Int): DataFrame = {
+  /** Global top-k finish: ranks each target's rows by (dist2, doc id
+    * ascending) — the one tie order of both kNN joins — and keeps ranks
+    * ≤ k. Over [[knnPartialScan]]'s output this is one small shuffle of
+    * ≤ partitions×targets×k scalar rows + a window over that tiny set. */
+  private def knnFinish(partial: DataFrame, k: Int,
+                        qidCol: String = "qid", idCol: String = "doc_id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("dist2"), col("doc_id"))
+    val w = Window.partitionBy(qidCol).orderBy(col("dist2"), col(idCol))
     partial.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
   /** Ring-certified pruned kNN (see [[knnJoin]] scaladoc for the scheme). */
   private def knnJoinPruned(docs: DataFrame, ts: Array[(Int, V3)], k: Int,
                             idCol: String, latCol: String, lngCol: String,
-                            ringRadii: Seq[Double],
                             distEvals: org.apache.spark.util.LongAccumulator): DataFrame = {
     val spark = docs.sparkSession
     val nT = ts.length
-    val nRings = ringRadii.length
-    val radii = ringRadii.toArray
+    val nRings = LadderRadii.length
+    val radii = LadderRadii.toArray
     val ringChord2 = radii.map(S1ChordAngle.fromRadians)
     // ring indexes are independent: build them on driver threads (the
     // coverer is per-thread — it is cheap, not thread-shared state)
@@ -600,10 +615,10 @@ object S2Joins {
     * radius (candidates at radius r include every doc within r). Each
     * round is one term equi-join + per-target top-k — the large×large
     * analogue of [[knnJoin]]'s broadcast path. The ladder always finishes
-    * with a whole-sphere round, so every target with ≥ k docs anywhere
-    * certifies inside the distributed join; only targets with < k docs in
-    * the entire table fall to the (count-gated) driver-side broadcast
-    * fallback.
+    * with a whole-sphere round whose candidates are every doc with
+    * coordinates, so that round certifies every target it returns rows
+    * for: the k nearest docs, or all of them when fewer than k exist.
+    * Targets with a null coordinate get no rows.
     *
     * Contract: `idCol` must be UNIQUE in `docs` — the per-round candidate
     * stream relies on the exactly-one-shared-term invariant instead of a
@@ -617,36 +632,33 @@ object S2Joins {
                    tLatCol: String = "t_lat", tLngCol: String = "t_lng",
                    idCol: String = "doc_id",
                    latCol: String = "lat", lngCol: String = "lng",
-                   radii: Seq[Double] = Seq(0.005, 0.02, 0.08, 0.32),
-                   maxFallbackTargets: Int = 100000): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = docs.sparkSession
+                   radii: Seq[Double] = LadderRadii): DataFrame = {
     val docTerms = docIndexTerms(
       docs.select(col(idCol), col(latCol).cast("double").as(latCol),
         col(lngCol).cast("double").as(lngCol)),
       S2SpatialKernels.indexer, latCol, lngCol)
       .select(col(idCol), col(latCol), col(lngCol), col("term"))
+    // the same double arithmetic as knnJoin's (p - t).norm2, so both
+    // joins see bit-equal distances and break ties identically
     val dist2 = udf { (tLat: Double, tLng: Double, lat: Double, lng: Double) =>
       (V3.fromLatLngDegrees(tLat, tLng) - V3.fromLatLngDegrees(lat, lng)).norm2
     }
-    val w = Window.partitionBy(qidCol).orderBy(col("dist2"), col(idCol))
 
     var unsatisfied = targets.select(col(qidCol),
       col(tLatCol).cast("double").as(tLatCol), col(tLngCol).cast("double").as(tLngCol))
+      .where(col(tLatCol).isNotNull && col(tLngCol).isNotNull)
     var results: DataFrame = null
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // the ladder always ends at pi: the final round's cap covers the whole
-    // sphere, so every target with >= k docs ANYWHERE certifies inside the
-    // distributed join — the driver-side fallback below can only see
-    // targets for which fewer than k docs exist at all (or user-truncated
-    // ladders), never "the radii under-covered"
+    // the ladder always ends at pi: that cap's covering is denormalized to
+    // all 1,536 level-4 cells and every doc's index terms include its
+    // level-4 ancestor, so the last round sees every doc with coordinates
+    // and needs no certification check
     val fullRadii = if (radii.lastOption.contains(math.Pi)) radii else radii :+ math.Pi
-    // per round: ONE action (the eager count of still-unsatisfied targets,
-    // which also materializes its cache); candidates are cached because
-    // both the certification aggregate and the result join read them
+    // per earlier round: ONE action (the eager count of still-unsatisfied
+    // targets, which also materializes its cache); candidates are cached
+    // because both the certification aggregate and the result join read them
     var unsatCount = -1L
-    for (r <- fullRadii if unsatCount != 0) {
-      val chord2 = S1ChordAngle.fromRadians(r)
+    for ((r, round) <- fullRadii.zipWithIndex if unsatCount != 0) {
       val q = unsatisfied.withColumn("term",
         explode(S2.capQueryTerms(col(tLatCol), col(tLngCol), lit(r))))
       // No (qid, doc) dedup needed: a point doc's index terms are plain
@@ -659,52 +671,35 @@ object S2Joins {
       // run the rank filter map-side: each input task forwards at most k
       // rows per target into the window exchange, so the shuffled volume
       // is O(tasks × targets × k), independent of candidate count.
-      val cands = docTerms.join(q, "term").drop("term")
-        .withColumn("dist2", dist2(col(tLatCol), col(tLngCol), col(latCol), col(lngCol)))
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .cache()
-      cached += cands
-      // certified iff k candidates exist and the k-th is inside radius r
-      val perTarget = cands.groupBy(qidCol)
-        .agg(count(lit(1)).as("n"), max("dist2").as("kth"))
-        .where(col("n") >= k && col("kth") <= chord2)
-      val roundResult = cands.join(perTarget.select(qidCol), qidCol)
-        .select(qidCol, idCol, "dist2", "rank").cache()
-      cached += roundResult
+      val cands = knnFinish(docTerms.join(q, "term").drop("term")
+        .withColumn("dist2", dist2(col(tLatCol), col(tLngCol), col(latCol), col(lngCol))),
+        k, qidCol, idCol)
+      val roundResult =
+        if (round == fullRadii.length - 1) cands.select(qidCol, idCol, "dist2", "rank")
+        else {
+          cands.cache()
+          cached += cands
+          // certified iff k candidates exist and the k-th is inside radius r
+          val perTarget = cands.groupBy(qidCol)
+            .agg(count(lit(1)).as("n"), max("dist2").as("kth"))
+            .where(col("n") >= k && col("kth") <= S1ChordAngle.fromRadians(r))
+          unsatisfied = unsatisfied.join(perTarget.select(qidCol), Seq(qidCol),
+            "left_anti").cache()
+          cached += unsatisfied
+          val certified = cands.join(perTarget.select(qidCol), qidCol)
+            .select(qidCol, idCol, "dist2", "rank").cache()
+          cached += certified
+          unsatCount = unsatisfied.count()
+          certified
+        }
       results = if (results == null) roundResult
         else results.unionByName(roundResult)
-      unsatisfied = unsatisfied.join(perTarget.select(qidCol), Seq(qidCol),
-        "left_anti").cache()
-      cached += unsatisfied
-      unsatCount = unsatisfied.count()
-    }
-    // stragglers: only targets with < k docs in the whole table reach here
-    // (the pi round certifies everything else). Count-gate the collect so a
-    // pathological input fails loudly instead of exhausting driver memory.
-    val leftoverCount = math.max(0L, unsatCount)
-    require(leftoverCount <= maxFallbackTargets,
-      s"knnJoinLarge: $leftoverCount targets uncertified after the radius " +
-        s"ladder (cap $maxFallbackTargets) — fewer than k=$k docs exist for " +
-        "them; raise maxFallbackTargets or filter such targets upstream")
-    val leftovers = unsatisfied.collect()
-    if (leftovers.nonEmpty) {
-      val ts = leftovers.map(row =>
-        (row.get(0).asInstanceOf[Number].intValue(),
-          V3.fromLatLngDegrees(row.getDouble(1), row.getDouble(2)))).toSeq
-      val fb = knnJoin(docs, ts, k, idCol, latCol, lngCol)
-        .select(col("qid").as(qidCol), col("doc_id").as(idCol), col("dist2"), col("rank"))
-      results = if (results == null) fb else results.unionByName(fb)
     }
     // materialize before releasing the per-round caches the plan reads
-    val out = if (results == null) spark.emptyDataFrame
-      else {
-        val rows = results.cache()
-        rows.count()
-        rows
-      }
+    val rows = results.cache()
+    rows.count()
     cached.foreach(df => { df.unpersist(blocking = false); () })
-    out
+    rows
   }
 
   /** Distance join: docs within `radiusRad` of any target cap center.

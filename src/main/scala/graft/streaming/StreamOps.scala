@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.S2
-import graft.operators.CellIntervalIndex
+import graft.operators.S2Joins
 import graft.core._
 
 /** Structured-Streaming surface of the engine: continuous spatial ingest
@@ -40,18 +40,8 @@ object StreamOps {
     * whose covering contains it (broadcast interval index — same
     * zero-shuffle plan as the batch join, applied continuously). */
   def streamingContainsTag(stream: DataFrame, regions: Seq[(Int, S2Region)],
-                           latCol: String = "lat", lngCol: String = "lng"): DataFrame = {
-    val index = CellIntervalIndex.fromRegions(regions)
-    val b = stream.sparkSession.sparkContext.broadcast(index)
-    val bR = stream.sparkSession.sparkContext.broadcast(regions.toMap)
-    val tag = udf { (ord: Long, lat: Double, lng: Double) =>
-      b.value.candidates(ord).collect {
-        case (lab, in) if in ||
-          bR.value(lab).contains(V3.fromLatLngDegrees(lat, lng)) => lab
-      }
-    }
-    stream.withColumn("region_hits", tag(col("cell_ord"), col(latCol), col(lngCol)))
-  }
+                           latCol: String = "lat", lngCol: String = "lng"): DataFrame =
+    stream.withColumn("region_hits", S2Joins.regionHits(regions, latCol, lngCol))
 
   /** Per-cell running state via mapGroupsWithState: maintains (count,
     * last-seen timestamp) per level-k cell with processing-time timeout —

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -122,6 +122,28 @@ class EdgeAggSpec extends AnyFunSuite {
       .select("doc_id", "shape_id").collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
     assert(exact == kernel)
+  }
+
+  test("per-doc distance queries skip a doc with a null coordinate") {
+    import spark.implicits._
+    val pts = Seq(("a", Option(10.0), 20.0), ("b", Option(-30.0), -120.0),
+      ("nolat", Option.empty[Double], 5.0)).toDF("doc_id", "lat", "lng")
+    val valid = pts.where(col("lat").isNotNull)
+    val shapes = Seq(
+      EdgeQueries.Shape(1, Array(
+        V3.fromLatLngDegrees(0, 0), V3.fromLatLngDegrees(0, 30)), closed = false),
+      EdgeQueries.Shape(2, Array(V3.fromLatLngDegrees(-40, -100)), closed = false))
+    val cells = Seq(7 -> Array(S2CellId.parent(S2CellId.fromLatLngDegrees(0, 0), 5)))
+    val queries: Seq[DataFrame => DataFrame] = Seq(
+      EdgeQueries.closestShapesJoin(_, shapes, k = 1),
+      CellQueries.closestCellsJoin(_, cells, k = 1),
+      CellQueries.furthestShapesJoin(_, shapes, k = 1),
+      EdgeQueries.exactWithinDistanceJoin(_, shapes, r2 = 4.0))
+    queries.foreach { q =>
+      val got = q(pts).collect().toSet
+      assert(got.map(_.getString(0)) == Set("a", "b"))
+      assert(got == q(valid).collect().toSet)
+    }
   }
 
   test("cell union aggregator merges group coverings; bound and centroid aggs are sane") {

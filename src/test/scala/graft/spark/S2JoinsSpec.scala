@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -243,11 +243,10 @@ class S2JoinsSpec extends AnyFunSuite {
     import spark.implicits._
     // every target sits in doc-empty ocean — the old 'few by construction'
     // assumption is maximally violated; the pi round must certify them all
-    // distributed, so the count-gated fallback sees zero targets
+    // distributed
     val targets = (0 until 30).map(i => (i, -60.0 + i * 0.3, -120.0 + i * 0.5))
     val tDf = targets.toDF("qid", "t_lat", "t_lng")
-    // cap of 0 would trip on ANY fallback -> proves nothing was collected
-    val large = S2Joins.knnJoinLarge(docs, tDf, k = 4, maxFallbackTargets = 0)
+    val large = S2Joins.knnJoinLarge(docs, tDf, k = 4)
       .select("qid", "doc_id", "rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSet
     val bcast = S2Joins.knnJoin(docs,
@@ -263,13 +262,10 @@ class S2JoinsSpec extends AnyFunSuite {
     val tiny = S2Joins.withCellId(
       Seq(("a", 10.0, 10.0), ("b", 11.0, 11.0)).toDF("doc_id", "lat", "lng"),
       col("lat"), col("lng"))
-    val tDf = Seq((1, 10.0, 10.0), (2, 50.0, 50.0)).toDF("qid", "t_lat", "t_lng")
-    // k=5 > 2 docs: no target can certify; with cap 0 the gate must fire
-    val e = intercept[IllegalArgumentException] {
-      S2Joins.knnJoinLarge(tiny, tDf, k = 5, maxFallbackTargets = 0)
-    }
-    assert(e.getMessage.contains("uncertified"))
-    // with the default cap the fallback finishes them exactly
+    // k=5 > 2 docs: the pi round returns every doc; a target with a null
+    // coordinate gets no rows
+    val tDf = Seq((1, Option(10.0), 10.0), (2, Option(50.0), 50.0),
+      (3, Option.empty[Double], 0.0)).toDF("qid", "t_lat", "t_lng")
     val got = S2Joins.knnJoinLarge(tiny, tDf, k = 5)
       .select("qid", "doc_id").collect().map(r => (r.getInt(0), r.getString(1))).toSet
     assert(got == Set((1, "a"), (1, "b"), (2, "a"), (2, "b")))
@@ -278,14 +274,26 @@ class S2JoinsSpec extends AnyFunSuite {
   test("regionTileCounts (fused pass) = broadcastContainsJoin + tileAssign + groupBy") {
     val regions = graft.Bench.benchRegions
     val tiles = graft.Bench.benchTiles
-    val fused = S2Joins.regionTileCounts(docs, regions, tiles)
+    def fused(d: DataFrame, rs: Seq[(Int, S2Region)]) = S2Joins.regionTileCounts(d, rs, tiles)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    val compositional = S2Joins.tileAssign(
-        S2Joins.broadcastContainsJoin(docs, regions), tiles)
+    def compositional(d: DataFrame, rs: Seq[(Int, S2Region)]) = S2Joins.tileAssign(
+        S2Joins.broadcastContainsJoin(d, rs), tiles)
       .groupBy("qid", "tile_id").count()
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    assert(fused == compositional)
-    assert(fused.nonEmpty)
+    val plain = fused(docs, regions)
+    assert(plain == compositional(docs, regions))
+    assert(plain.nonEmpty)
+    // null-coordinate docs match no region, not even the full sphere, in
+    // both plans
+    import spark.implicits._
+    val withNulls = S2Joins.withCellId(docs.select("doc_id", "lat", "lng").unionByName(
+        Seq(("null-lat", Option.empty[Double], Option(1.0)),
+          ("null-lng", Option(1.0), Option.empty[Double])).toDF("doc_id", "lat", "lng")),
+      col("lat"), col("lng"))
+    val sphere = regions :+ (99 -> (S2Cap.fromCenterAngle(V3(1, 0, 0), math.Pi): S2Region))
+    val got = fused(withNulls, sphere)
+    assert(got == compositional(withNulls, sphere))
+    assert(got.filter(_._1 == 99).toSeq.map(_._3).sum == docs.count())
   }
 
   test("tileAssign picks the containing tile; disjoint level-2 tiling partitions all docs") {
