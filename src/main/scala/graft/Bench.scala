@@ -18,12 +18,17 @@ import graft.sources.DocSource
   * tile assignment over the synthetic interleaved docs table — measured
   * at two parallelism levels (local[N/4] vs local[N]) as the sandbox
   * stand-in for N vs 4N executors (BASELINE.md), then the skew-join A/B,
-  * the kNN amortization curves, a 2x/3x input sweep and a forced-spill A/B.
+  * the kNN amortization curves, a 2x/3x row sweep over unions of the base
+  * table and a forced-spill A/B. Writes only the base table
+  * (/tmp/graft_bench_docs_*) and the artifact.
   *
-  * Writes the full artifact to SPARK_GRAFT_BENCH_FULL (default
-  * BENCH/bench_full_<utc-stamp>.json) and prints ONE compact JSON line:
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_FULL (the
+  * full artifact, default BENCH/bench_full_<utc-stamp>.json) and
+  * SPARK_GRAFT_BENCH_SIZE (`full`, the default, or `small`). Prints ONE
+  * compact JSON line last:
   *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},
-  *    "pipeline":{"docs":…,"docs_per_sec":…, "scaling":{…}}, "sf":"…"}
+  *    "pipeline":{"docs":…,"docs_per_sec_hi":…,…}, …,
+  *    "phase_s":{"<phase>":<wall sec>,…}, "sf":"…"}
   * A headline query that throws is recorded as {"error":"<msg>"} and left
   * out of `value`.
   */
@@ -78,6 +83,20 @@ object Bench {
       S2Joins.knnJoinLarge(docs, targets, k = 5, radii = Seq(0.1, 0.4))
     }))
 
+  /** Every size-dependent setting: flagship docs, interleaved rounds and
+    * timed reps per session, skew A/B docs, kNN curve base and forced-spill
+    * sort rows. */
+  private final case class Size(docs: Long, rounds: Int, reps: Int,
+                                skewDocs: Long, knnBase: Long, spillRows: Long)
+  private val sizes = Map(
+    // 192M docs (~18 GB parquet): page-cache-resident with headroom; 384M
+    // doubled the IO-variance exposure (13 s outlier reps) for little
+    // amortization. 4 rounds (8 reps/level): the 4th costs ~80 s but
+    // tightens the medians where vCPU steal is one-sided (same build:
+    // vs_hw 0.79 noisy, 0.87 quiet).
+    "full" -> Size(192000000L, 4, 2, 4000000L, 1000000L, 24000000L),
+    "small" -> Size(2000000L, 1, 1, 200000L, 50000L, 1000000L))
+
   /** A fresh local session at `cores`, with `conf` applied last. Driver
     * memory must be sized at JVM launch (local mode); config here would be
     * silently ignored. */
@@ -107,9 +126,9 @@ object Bench {
   }
 
   /** One finished task: stage, shuffle-read bytes, executor run time (ms)
-    * and bytes spilled from memory and to disk. */
+    * and bytes spilled to disk. */
   private final case class TaskStat(stage: Int, readBytes: Long, runMs: Long,
-                                    spillMem: Long, spillDisk: Long)
+                                    spillDisk: Long)
 
   /** Per-task tally of one session's jobs. */
   private final class TaskTally(sc: SparkContext) extends SparkListener {
@@ -119,7 +138,7 @@ object Bench {
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
       if (m != null) tasks.add(TaskStat(te.stageId, m.shuffleReadMetrics.totalBytesRead,
-        m.executorRunTime, m.memoryBytesSpilled, m.diskBytesSpilled))
+        m.executorRunTime, m.diskBytesSpilled))
       ()
     }
 
@@ -132,22 +151,8 @@ object Bench {
     }
   }
 
-  /** Materialize the synthetic interleaved docs table once (generation is
-    * not part of the measured job — the north rule measures covering +
-    * PIP join + tile assignment over an existing table).
-    *
-    * 256 files (not 64): at 32 cores, 64 input splits = 2 task waves, and
-    * per-task duration skew leaves cores idle at each wave tail — a real
-    * scaling-efficiency loss that 8 cores (8 waves) amortizes. 8 waves at
-    * 32 cores / 32 at 8 cores smooths both. Same reasoning as oversizing
-    * `spark.sql.files.maxPartitionBytes` down on a real cluster. */
-  def materializeDocs(spark: SparkSession, n: Long, path: String): Unit =
-    DocSource.docs(spark, n, parallelism = 256)
-      .write.mode("overwrite").parquet(path)
-
-  /** Input path, versioned by layout so a cached 64-file materialization
-    * from an older build is not silently reused. */
-  def docsPath(n: Long): String = s"/tmp/graft_bench_docs_${n}_p256"
+  private val tableDir = new java.io.File("/tmp")
+  private val tablePrefix = "graft_bench_docs_"
 
   /** Full scan of the two columns the flagship reads. */
   private def scan(spark: SparkSession, path: String): Unit = {
@@ -155,12 +160,19 @@ object Bench {
     ()
   }
 
-  /** The n-doc input table, materialized if missing, with the page cache
-    * warmed on the columns the flagship reads (untimed; also flushes any
-    * writeback from a fresh materialize out of the way). */
+  /** The n-doc input table, materialized once (generation is not part of
+    * the measured job) and reused while its `_SUCCESS` marker exists, with
+    * the page cache warmed on the columns the flagship reads (untimed;
+    * also flushes any writeback from a fresh materialize out of the way).
+    *
+    * 256 files (not 64; the path names the layout): at 32 cores, 64 input
+    * splits = 2 task waves, and per-task duration skew leaves cores idle
+    * at each wave tail — a real scaling-efficiency loss that 8 cores (8
+    * waves) amortizes. 8 waves at 32 cores / 32 at 8 cores smooths both. */
   private def inputTable(spark: SparkSession, n: Long): String = {
-    val path = docsPath(n)
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) materializeDocs(spark, n, path)
+    val path = s"${tableDir}/$tablePrefix${n}_p256"
+    if (!new java.io.File(s"$path/_SUCCESS").exists())
+      DocSource.docs(spark, n, parallelism = 256).write.mode("overwrite").parquet(path)
     scan(spark, path)
     path
   }
@@ -187,33 +199,33 @@ object Bench {
     * compositional broadcastContainsJoin + tileAssign + groupBy plan,
     * which PipelineDemo still exercises end-to-end). Returns total
     * matched rows. */
-  def pipeline(spark: SparkSession, docsPath: String): Long = {
-    val docs = spark.read.parquet(docsPath)
+  def pipeline(docs: DataFrame): Long =
     S2Joins.regionTileCounts(docs, benchRegions, benchTiles)
       .agg(sum("count")).head().getLong(0)
-  }
 
   /** One flagship session's timed reps and its adjacent ALU ceiling
     * (ops/s) and best scan seconds. */
   private final case class Session(reps: Seq[Double], ceil: Double, scanSec: Double)
 
   def main(args: Array[String]): Unit = {
+    val sizeName = sys.env.getOrElse("SPARK_GRAFT_BENCH_SIZE", "full")
+    val size = sizes.getOrElse(sizeName, throw new IllegalArgumentException(
+      s"SPARK_GRAFT_BENCH_SIZE must be one of ${sizes.keys.mkString(", ")}, not '$sizeName'"))
+    val benchDocs = size.docs
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(8, Runtime.getRuntime.availableProcessors()).toString).toInt
-    // 192M docs (~18 GB parquet): page-cache-resident with headroom.
-    // A 384M variant was tried and rejected — doubling the input doubled
-    // the IO-variance exposure (13 s outlier reps from cache/writeback
-    // effects) and cost more signal than the better amortization of the
-    // ~0.35 s fixed per-job cost bought.
-    val benchDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "192000000").toLong
-    val scaleSweep = sys.env.getOrElse("SPARK_GRAFT_SCALE_SWEEP", "1") != "0"
     // run-stamped by default, so no run overwrites an earlier complete one
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", {
       val stamp = java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
         .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
       s"BENCH/bench_full_$stamp.json"
     })
+    // a killed run can leave a table without _SUCCESS: never reused, so delete it
+    Option(tableDir.listFiles).getOrElse(Array.empty[java.io.File])
+      .filter(d => d.isDirectory && d.getName.startsWith(tablePrefix) &&
+        !new java.io.File(d, "_SUCCESS").exists())
+      .foreach(FileUtils.deleteDirectory)
 
     // pure-CPU thread-scaling ceiling measured adjacent to each session:
     // this VM's vCPUs show steal/turbo variance, so raw 4x is unattainable
@@ -236,14 +248,26 @@ object Bench {
       threads * per / timed { ts.foreach(_.start()); ts.foreach(_.join()) }._2
     }
 
+    // wall seconds of each finished phase; phases run back to back
+    val phaseSec = collection.mutable.ArrayBuffer[(String, Double)]()
+    var phaseStart = System.nanoTime()
+    def endPhase(name: String): Unit = {
+      val now = System.nanoTime()
+      phaseSec += name -> (now - phaseStart) / 1e9
+      phaseStart = now
+    }
+    def phaseJson(round: Double => Double): String =
+      phaseSec.map { case (k, v) => s""""$k":${round(v)}""" }.mkString("{", ",", "}")
+
     // the full artifact's fields in emission order, checkpointed after
-    // each phase: a run killed mid-sweep (timeout, disk pressure)
-    // still leaves a parseable artifact with everything measured so far;
-    // the final write replaces the snapshot and drops the "partial" marker
+    // each phase: a run killed mid-way (timeout) still leaves a parseable
+    // artifact with everything measured so far and the phases' wall
+    // seconds; the final write replaces the snapshot and drops the
+    // "partial" marker
     val artifact = collection.mutable.ArrayBuffer[(String, String)]()
     def writeArtifact(partial: Option[String]): Unit = {
-      val fields = partial.map(p => "partial" -> jsonStr(p)).toSeq ++ artifact :+
-        ("sf" -> jsonStr(sfDir))
+      val fields = partial.map(p => "partial" -> jsonStr(p)).toSeq ++ artifact ++
+        Seq("phase_s" -> phaseJson(identity), "sf" -> jsonStr(sfDir))
       val json = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       // temp file + atomic rename: a kill mid-write never leaves a
       // truncated artifact in place of the previous snapshot
@@ -276,11 +300,14 @@ object Bench {
     // best-of-2 per query: the first rep doubles as that query's own JIT /
     // codegen / shuffle-file warmup, and the min removes one-sided
     // interval contamination that a single timed rep is fully exposed to
-    // (the q1_agg warmup above only covers scan+agg kernels). A query
-    // that throws gets its error recorded, not a time.
+    // (the q1_agg warmup above only covers scan+agg kernels). Each rep
+    // writes every output column to the noop sink (a count() would let
+    // Catalyst prune columns away). A query that throws gets its error
+    // recorded, not a time.
     val results: Seq[(String, Either[Throwable, Double])] = headline.map { name =>
       val fn = SparkEntry.queries.getOrElse(name, extraQueries(name))
-      def once(): Double = timed(fn(spark, sfDir).count())._2
+      def once(): Double =
+        timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
       name -> (try Right(math.min(once(), once())) catch {
         case NonFatal(e) =>
           System.err.println(s"bench: $name failed: $e")
@@ -288,6 +315,7 @@ object Bench {
       })
     }
     val headlineProbeEnd = cpuRate(cpus)
+    endPhase("headline")
 
     // ---- phase 2: flagship pipeline, interleaved lo/hi protocol ----
     // Round-1 protocol (best-of-2, all hi-core reps measured before any
@@ -301,6 +329,7 @@ object Bench {
     // (best + all reps kept in the JSON).
     val docsPath = inputTable(spark, benchDocs)
     spark.stop()
+    endPhase("materialize")
 
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -324,15 +353,9 @@ object Bench {
     }
 
     val lowCores = math.max(1, cpus / 4)
-    // 4 rounds (8 reps/level): the extra round costs ~80 s but visibly
-    // tightens the medians and doubles the ceiling samples on an interval
-    // where vCPU steal is one-sided (observed: same build measured
-    // vs_hw 0.79 under a noisy interval, 0.87 on a quiet one)
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROUNDS", "4").toInt
-    val repsPerRound = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     var matched = 0L
     var matchedSet = false
-    // one session at `cores`: 1 untimed warmup + repsPerRound timed reps,
+    // one session at `cores`: 1 untimed warmup + size.reps timed reps,
     // hw ceilings sampled adjacent (between warmup and timed reps). TWO
     // ceiling probes per session — ROOFLINE: the flagship is one fused
     // pass over the parquet scan of (lat, lng), so its attainable
@@ -353,7 +376,8 @@ object Bench {
     // recomputable from the artifact.
     def sessionReps(cores: Int): Session = {
       val s = session(cores, aqeOff)
-      val warm = pipeline(s, docsPath) // warmup (JIT, codegen, broadcast)
+      val docs = s.read.parquet(docsPath)
+      val warm = pipeline(docs) // warmup (JIT, codegen, broadcast)
       // cross-parallelism equality gate: lo and hi sessions must agree
       if (!matchedSet) { matched = warm; matchedSet = true }
       else require(warm == matched,
@@ -361,12 +385,12 @@ object Bench {
       // second untimed warmup: the first post-warmup rep was observed to
       // carry residual one-sided contamination (GC of the warmup run,
       // lingering writeback) worth ~2x on a bad interval
-      pipeline(s, docsPath)
+      pipeline(docs)
       val ceil = cpuRate(cores)
       scan(s, docsPath) // untimed (agg codegen; the decode path is already warm)
       val scanSec = math.min(timed(scan(s, docsPath))._2, timed(scan(s, docsPath))._2)
-      val times = (1 to repsPerRound).map { _ =>
-        val (m, sec) = timed(pipeline(s, docsPath))
+      val times = (1 to size.reps).map { _ =>
+        val (m, sec) = timed(pipeline(docs))
         require(m == matched, s"result drift: $m vs $matched")
         sec
       }
@@ -374,9 +398,10 @@ object Bench {
       Session(times, ceil, scanSec)
     }
     val sessions = for {
-      r <- 0 until rounds
+      r <- 0 until size.rounds
       cores <- if (r % 2 == 0) Seq(lowCores, cpus) else Seq(cpus, lowCores)
     } yield cores -> sessionReps(cores)
+    endPhase("scaling")
     val (hi, lo) = sessions.partition(_._1 == cpus) match {
       case (h, l) => (h.map(_._2), l.map(_._2))
     }
@@ -408,7 +433,7 @@ object Bench {
     def arr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
     val pipelineJson =
       s"""{"docs":$benchDocs,"matched":$matched,"cores_hi":$cpus,"cores_lo":$lowCores,""" +
-      s""""protocol":"interleaved ${rounds}x$repsPerRound median, reject > ${outlierFactor}x level best",""" +
+      s""""protocol":"interleaved ${size.rounds}x${size.reps} median, reject > ${outlierFactor}x level best",""" +
       s""""sec_hi":$tHi,"sec_lo":$tLo,""" +
       s""""sec_hi_best":${repsHi.min},"sec_lo_best":${repsLo.min},""" +
       s""""reps_hi":${arr(repsHi)},"reps_lo":${arr(repsLo)},""" +
@@ -449,7 +474,6 @@ object Bench {
     // backstop would mask our salting), 256 shuffle partitions
     // (cluster-representative task counts) — and records wall plus the
     // heaviest shuffle stage's max/median per-task shuffle-read ratio.
-    val skewDocsN = sys.env.getOrElse("SPARK_GRAFT_SKEW_DOCS", "4000000").toLong
     val (skewJson, skewCompact) = {
       val spark3 = session(cpus, aqeOff,
         "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.shuffle.partitions" -> "256")
@@ -461,7 +485,7 @@ object Bench {
         // denominator would emit Infinity into the JSON artifact
         val s = xs.sorted; s.last / math.max(1.0, s(s.size / 2))
       }
-      val docs = geoDocs(spark3, skewDocsN, clusterFrac = 0.9, nClusters = 2)
+      val docs = geoDocs(spark3, size.skewDocs, clusterFrac = 0.9, nClusters = 2)
       val polys = Seq((1, SparkEntry.skewPolyText)).toDF("qid", "poly")
       // wall, then the heaviest shuffle stage's max/median per-task
       // shuffle-read bytes (reducer DATA balance) and run time (COMPUTE
@@ -483,7 +507,7 @@ object Bench {
       val unsalted = math.min(u1, u2); val salted = math.min(s1, s2)
       spark3.stop()
       val full =
-        s"""{"docs":$skewDocsN,"shuffle_partitions":256,"broadcast":"off","aqe":"off",""" +
+        s"""{"docs":${size.skewDocs},"shuffle_partitions":256,"broadcast":"off","aqe":"off",""" +
         s""""unsalted_sec":$unsalted,"salted_sec":$salted,""" +
         s""""unsalted_max_over_median_read":$ur,"salted_max_over_median_read":$sr,""" +
         s""""unsalted_max_over_median_cpu":$uc,"salted_max_over_median_cpu":$sc,""" +
@@ -493,6 +517,7 @@ object Bench {
         s""""read_balance":"${r4d(ur)}->${r4d(sr)}","cpu_balance":"${r4d(uc)}->${r4d(sc)}"}"""
       (full, compact)
     }
+    endPhase("skew_join")
     // kNN amortization: fixed query shape, rising doc count; fixed costs
     // (driver ring-index build, JIT, ladder round scheduling) amortize,
     // so docs/sec should RISE with size (sub-linear wall growth). Docs
@@ -533,125 +558,101 @@ object Bench {
         docs.unpersist()
         point(n, sec)
       }
-      val base = sys.env.getOrElse("SPARK_GRAFT_KNN_SCALE_BASE", "1000000").toLong
+      val base = size.knnBase
       val k10 = Seq(base, 2 * base, 4 * base).map(knn10kAt)
       val kLg = Seq(base / 2, base, 2 * base).map(knnLargeAt)
       spark3.stop()
       s"""{"knn_10k":[${k10.mkString(",")}],"knn_large":[${kLg.mkString(",")}]}"""
     }
+    endPhase("knn_scale")
 
     artifact ++= Seq("skew_join" -> skewJson, "knn_scale" -> knnScaleJson)
     writeArtifact(Some("after_skew_knn"))
 
-    // ---- phase 4: scale sweep + forced-spill (round-5 scale-proofing:
-    // the flagship at 2x and 3x its 18 GB input — 10x parquet bytes does
-    // not fit the sandbox's ~62 GB free disk, so sizes are bounded by a
-    // LIVE disk check and skipped-with-reason rather than silently
-    // dropped — plus a forced-spill A/B proving a full sort of the
-    // cell-keyed table produces the identical total order while spilling
-    // to disk.) ----
-    val bytesPerDoc = 101L // measured: 192M docs ≈ 18 GiB parquet
-    val (sweepJson, sweepPlan) =
-      if (!scaleSweep) ("[]", "")
-      else {
-        val spark4 = session(cpus, aqeOff)
-        val tally = new TaskTally(spark4.sparkContext)
-        val plan = S2Joins.regionTileCounts(
-          spark4.read.parquet(docsPath), benchRegions, benchTiles)
-          .queryExecution.executedPlan.toString.take(4000)
-        val base =
-          s"""{"docs":$benchDocs,"sec":$tHi,"docs_per_sec":${benchDocs / tHi},"matched":$matched}"""
-        // the base table stays: each point needs room for its own table
-        // next to it, and one that does not fit is skipped before any
-        // delete or write
-        val entries = Seq(benchDocs * 2, benchDocs * 3).map { n =>
-          val need = (n * bytesPerDoc * 21) / 20 + (5L << 30)
-          val usable = new java.io.File("/tmp").getUsableSpace
-          if (usable < need)
-            s"""{"docs":$n,"skipped":"insufficient disk: need $need bytes, usable $usable"}"""
-          else try {
-            val path = inputTable(spark4, n)
-            timed(pipeline(spark4, path)) // JIT/codegen warmup rep
-            tally.drain()
-            val reps = Seq.fill(2)(timed(pipeline(spark4, path)))
-            val tasks = tally.drain()
-            val sec = reps.map(_._2).min
-            FileUtils.deleteQuietly(new java.io.File(path))
-            s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec},""" +
-              s""""matched":${reps.last._1},"spill_mem_bytes":${tasks.map(_.spillMem).sum},""" +
-              s""""spill_disk_bytes":${tasks.map(_.spillDisk).sum}}"""
-          } catch {
-            case e: Exception =>
-              FileUtils.deleteQuietly(new java.io.File(Bench.docsPath(n)))
-              s"""{"docs":$n,"skipped":${jsonStr("error: " + e.toString.take(200))}}"""
-          }
-        }
-        spark4.stop()
-        (s"[$base,${entries.mkString(",")}]", plan)
+    // ---- phase 4: scale sweep + forced-spill A/B ----
+    // The sweep runs the flagship over a union of k = 2, 3 scans of the
+    // base table: k x the rows, k x the matches, nothing written. It
+    // measures row scaling over a page-cache-resident input, not disk IO.
+    // The fused pass has no shuffle or sort to spill; the A/B below is the
+    // spill evidence.
+    val sweepJson = {
+      val s = session(cpus, aqeOff)
+      val points = Seq(2, 3).map { k =>
+        val docs = Seq.fill(k)(s.read.parquet(docsPath)).reduce(_ union _)
+        // first rep: JIT/codegen warmup
+        val reps = Seq.fill(3)(timed(pipeline(docs)))
+        reps.foreach { case (m, _) =>
+          require(m == k * matched, s"sweep x$k matched $m, want $k x $matched") }
+        val n = k * benchDocs
+        val sec = reps.tail.map(_._2).min
+        s"""{"docs":$n,"sec":$sec,"docs_per_sec":${n / sec},"matched":${k * matched}}"""
       }
+      s.stop()
+      val base =
+        s"""{"docs":$benchDocs,"sec":$tHi,"docs_per_sec":${benchDocs / tHi},"matched":$matched}"""
+      (base +: points).mkString("[", ",", "]")
+    }
+    endPhase("scale_sweep")
 
-    // forced-spill A/B: identical 24M-row sort of the cell-keyed table in
-    // two FRESH contexts — one with the sorter forced to spill every 128k
-    // rows — comparing total count, per-position rolling hash (in range-
-    // partition order), and in-partition sortedness. Proves the operators
-    // run through Spark's external-spill machinery unchanged.
-    val forcedSpillJson =
-      if (!scaleSweep) "{}"
-      else {
-        val probeDocs = sys.env.getOrElse("SPARK_GRAFT_SPILL_DOCS", "24000000").toLong
-        def sortProbe(forceSpill: Boolean): (Long, Long, Boolean, Long) = {
-          val conf = Seq("spark.sql.shuffle.partitions" -> "8", aqeOff) ++
-            (if (forceSpill) Seq("spark.shuffle.spill.numElementsForceSpillThreshold" -> "131072")
-             else Nil)
-          val s = session(cpus, conf: _*)
-          val tally = new TaskTally(s.sparkContext)
-          val docs = S2Joins.withCellId(
-            DocSource.docs(s, probeDocs).select("doc_id", "lat", "lng"),
-            col("lat"), col("lng"))
-            .select(graft.functions.S2.orderKey(col("cell_id")).as("ord"),
-              // synthetic doc_id is "docNNNNNNNNN" — strip the prefix
-              col("doc_id").substr(4, 9).cast("long").as("id"))
-            .sort(col("ord"), col("id"))
-          // per-partition positional fold over the fully-sorted result:
-          // (count, rolling hash, sorted-within) — partitions arrive in
-          // range order, so folding the per-partition hashes in partition
-          // order pins the exact total order of all 24M rows
-          val parts = docs.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-            var cnt = 0L; var h = 1125899906842597L; var ok = true
-            var prevOrd = Long.MinValue; var prevId = Long.MinValue
-            it.foreach { row =>
-              val ord = row.getLong(0); val id = row.getLong(1)
-              if (ord < prevOrd || (ord == prevOrd && id < prevId)) ok = false
-              prevOrd = ord; prevId = id
-              h = h * 6364136223846793005L + (ord * 31 + id)
-              cnt += 1
-            }
-            Iterator((pid, cnt, h, ok))
-          }.collect().sortBy(_._1)
-          val total = parts.map(_._2).sum
-          val combined = parts.foldLeft(1125899906842597L) { (acc, p) =>
-            acc * 6364136223846793005L + p._3 }
-          val sortedOk = parts.forall(_._4)
-          val disk = tally.drain().map(_.spillDisk).sum
-          s.stop()
-          (total, combined, sortedOk, disk)
-        }
-        val (cN, cH, cOk, cDisk) = sortProbe(forceSpill = false)
-        val (fN, fH, fOk, fDisk) = sortProbe(forceSpill = true)
-        // equality is the correctness claim — fail loudly if violated;
-        // a zero spill count only voids the evidence, so record it
-        require(cN == fN && cH == fH && cOk && fOk,
-          s"spilled sort diverged: ($cN,$cH,$cOk) vs ($fN,$fH,$fOk)")
-        s"""{"rows":$probeDocs,"control_disk_spill_bytes":$cDisk,""" +
-          s""""forced_disk_spill_bytes":$fDisk,"order_hash_equal":true,""" +
-          s""""sorted_within_partitions":true,""" +
-          s""""spill_engaged":${fDisk > 0}}"""
+    // forced-spill A/B: identical sort of the cell-keyed table (24M rows at
+    // full size) in two FRESH contexts — one with the sorter forced to
+    // spill every 128k rows — comparing total count, per-position rolling
+    // hash (in range-partition order), and in-partition sortedness. Proves
+    // the operators run through Spark's external-spill machinery unchanged.
+    val forcedSpillJson = {
+      def sortProbe(forceSpill: Boolean): (Long, Long, Boolean, Long) = {
+        val conf = Seq("spark.sql.shuffle.partitions" -> "8", aqeOff) ++
+          (if (forceSpill) Seq("spark.shuffle.spill.numElementsForceSpillThreshold" -> "131072")
+           else Nil)
+        val s = session(cpus, conf: _*)
+        val tally = new TaskTally(s.sparkContext)
+        val docs = S2Joins.withCellId(
+          DocSource.docs(s, size.spillRows).select("doc_id", "lat", "lng"),
+          col("lat"), col("lng"))
+          .select(graft.functions.S2.orderKey(col("cell_id")).as("ord"),
+            // synthetic doc_id is "docNNNNNNNNN" — strip the prefix
+            col("doc_id").substr(4, 9).cast("long").as("id"))
+          .sort(col("ord"), col("id"))
+        // per-partition positional fold over the fully-sorted result:
+        // (count, rolling hash, sorted-within) — partitions arrive in
+        // range order, so folding the per-partition hashes in partition
+        // order pins the exact total order of all rows
+        val parts = docs.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+          var cnt = 0L; var h = 1125899906842597L; var ok = true
+          var prevOrd = Long.MinValue; var prevId = Long.MinValue
+          it.foreach { row =>
+            val ord = row.getLong(0); val id = row.getLong(1)
+            if (ord < prevOrd || (ord == prevOrd && id < prevId)) ok = false
+            prevOrd = ord; prevId = id
+            h = h * 6364136223846793005L + (ord * 31 + id)
+            cnt += 1
+          }
+          Iterator((pid, cnt, h, ok))
+        }.collect().sortBy(_._1)
+        val total = parts.map(_._2).sum
+        val combined = parts.foldLeft(1125899906842597L) { (acc, p) =>
+          acc * 6364136223846793005L + p._3 }
+        val sortedOk = parts.forall(_._4)
+        val disk = tally.drain().map(_.spillDisk).sum
+        s.stop()
+        (total, combined, sortedOk, disk)
       }
+      val (cN, cH, cOk, cDisk) = sortProbe(forceSpill = false)
+      val (fN, fH, fOk, fDisk) = sortProbe(forceSpill = true)
+      // equality is the correctness claim — fail loudly if violated;
+      // a zero spill count only voids the evidence, so record it
+      require(cN == fN && cH == fH && cOk && fOk,
+        s"spilled sort diverged: ($cN,$cH,$cOk) vs ($fN,$fH,$fOk)")
+      s"""{"rows":${size.spillRows},"control_disk_spill_bytes":$cDisk,""" +
+        s""""forced_disk_spill_bytes":$fDisk,"order_hash_equal":true,""" +
+        s""""sorted_within_partitions":true,""" +
+        s""""spill_engaged":${fDisk > 0}}"""
+    }
+    endPhase("forced_spill")
 
     // ---- emit: FULL artifact to a file, ONE compact line (< 2000 bytes,
     // the driver's tail-capture window) printed LAST ----
-    artifact ++= Seq("scale_sweep" -> sweepJson, "forced_spill" -> forcedSpillJson,
-      "pipeline_executed_plan" -> jsonStr(sweepPlan))
+    artifact ++= Seq("scale_sweep" -> sweepJson, "forced_spill" -> forcedSpillJson)
     writeArtifact(None)
     // compact final line: every number rounded, no rep arrays and only an
     // error's class name (the rest lives in the full artifact) — r4's line
@@ -666,6 +667,7 @@ object Bench {
       s""""scaling_efficiency_vs_hw":${r4d(normEfficiency)}},""" +
       s""""skew_join":$skewCompact,""" +
       s""""scale_sweep":$sweepJson,"forced_spill":$forcedSpillJson,""" +
+      s""""phase_s":${phaseJson(r4d)},""" +
       s""""sf":${jsonStr(sfDir)},"full_json":${jsonStr(fullPath)}}"""
     println(compact)
   }

@@ -409,8 +409,10 @@ object Multimodal {
       * tables. Handles 64-bit largesize and size-0 (to-EOF) boxes, co64
       * chunk offsets, and the general stsc chunk→sample mapping. None
       * when the bytes are not an MP4 (must open with ftyp) or any sample
-      * table is structurally inconsistent. Works on any MP4 whose
-      * samples ImageIO can decode (the 'jpeg' Motion-JPEG entry here). */
+      * table is structurally inconsistent or overlaps (samples totalling
+      * more than the file). Works on any MP4 whose samples ImageIO can
+      * decode (the 'jpeg' Motion-JPEG entry here). Assumes a constant
+      * frame duration: usecPerSample is the first `stts` entry's. */
     def demuxMp4(bytes: Array[Byte]): Option[(Seq[Array[Byte]], Int, Int, Long)] = {
       if (bytes == null || bytes.length < 16) return None
       def str(p: Int): String = new String(bytes, p, 4, "US-ASCII")
@@ -509,11 +511,12 @@ object Multimodal {
         val frames = collection.mutable.ArrayBuffer[Array[Byte]]()
         var s = 0
         var c = 0 // 0-based chunk index
+        var total = 0L // a well-formed file's samples are disjoint: <= its length
+        // samples-per-chunk in effect for 1-based chunk c+1: the last stsc
+        // entry whose first_chunk <= c+1 (entries are sorted: a cursor)
+        var spc = t.stsc(0)._2
+        var i = 0
         while (s < t.sizes.length && c < t.chunkOffsets.length) {
-          // samples-per-chunk in effect for 1-based chunk c+1: the last
-          // stsc entry whose first_chunk <= c+1 (entries are sorted)
-          var spc = t.stsc(0)._2
-          var i = 0
           while (i < t.stsc.length && t.stsc(i)._1 <= c + 1) {
             spc = t.stsc(i)._2; i += 1
           }
@@ -521,7 +524,9 @@ object Multimodal {
           var j = 0L
           while (j < spc && s < t.sizes.length) {
             val len = t.sizes(s)
-            if (off < 0 || len < 0 || off + len > bytes.length) return None
+            total += len
+            if (off < 0 || len < 0 || off + len > bytes.length ||
+                total > bytes.length) return None
             frames += java.util.Arrays.copyOfRange(
               bytes, off.toInt, (off + len).toInt)
             off += len; s += 1; j += 1
@@ -546,8 +551,9 @@ object Multimodal {
     /** REAL video frame decode: demux the container (AVI or MP4), pick
       * the frame whose presentation time covers `offsetMs` (index =
       * offsetMs / msPerFrame, clamped), decode it via javax.imageio,
-      * bilinear-resize to w x h. None when the bytes are not a
-      * demuxable video or the frame is undecodable. */
+      * bilinear-resize to w x h (frames taken as equally long, see
+      * [[demuxMp4]]). None when the bytes are not a demuxable video or
+      * the frame is undecodable. */
     def decodeFrameReal(bytes: Array[Byte], offsetMs: Long, w: Int,
                         h: Int): Option[Array[Float]] =
       demuxVideo(bytes).flatMap { case (frames, _, _, usec) =>

@@ -251,32 +251,30 @@ object S2Joins {
     * This is the "genuine per-partition imperative logic" case: the whole
     * query is an aggregation whose groups are statically known.
     *
+    * Region labels are distinct; labels and tile ids may be negative or
+    * sparse. Both indexes are keyed by slot 0..n-1, tiles sorted by id (a
+    * repeated id's cells merged), so a most-intersecting tie still goes to
+    * the smallest tile id.
+    *
     * Executes EAGERLY (runs a job) and returns a small local DataFrame. */
   def regionTileCounts(docs: DataFrame, regions: Seq[(Int, S2Region)],
                        tiles: Seq[(Int, Array[Long])],
                        latCol: String = "lat", lngCol: String = "lng",
                        maxCellsPerRegion: Int = 64): DataFrame = {
     val spark = docs.sparkSession
-    val regIndex = CellIntervalIndex.fromRegions(regions, maxCellsPerRegion)
-    val tileIndex = CellIntervalIndex.build(
-      tiles.map { case (id, cells) => (id, cells, Array.empty[Long]) })
     val regArr = regions.toArray
-    val maxLab = regArr.iterator.map(_._1).max
-    val regByLabel = new Array[S2Region](maxLab + 1)
-    val slotByLabel = Array.fill(maxLab + 1)(-1)
-    regArr.zipWithIndex.foreach { case ((lab, r), i) =>
-      regByLabel(lab) = r; slotByLabel(lab) = i }
-    val tileIds = tiles.map(_._1).toArray
-    val maxTile = tileIds.max
-    val tileSlot = Array.fill(maxTile + 1)(-1)
-    tileIds.zipWithIndex.foreach { case (t, i) => tileSlot(t) = i }
-    val nR = regArr.length; val nT = tileIds.length
-    val bc = spark.sparkContext.broadcast(
-      (regIndex, tileIndex, regByLabel, slotByLabel, tileSlot))
+    val tileArr = tiles.groupBy(_._1).toArray.sortBy(_._1)
+      .map { case (id, ts) => (id, ts.flatMap(_._2).toArray) }
+    val regIndex = CellIntervalIndex.fromRegions(
+      regArr.indices.map(i => (i, regArr(i)._2)), maxCellsPerRegion)
+    val tileIndex = CellIntervalIndex.build(
+      tileArr.indices.map(i => (i, tileArr(i)._2, Array.empty[Long])))
+    val nR = regArr.length; val nT = tileArr.length
+    val bc = spark.sparkContext.broadcast((regIndex, tileIndex, regArr.map(_._2)))
 
     val in = docs.select(col(latCol).cast("double"), col(lngCol).cast("double"))
     val merged = in.queryExecution.toRdd.mapPartitions { it =>
-      val (rIdx, tIdx, regs, rSlot, tSlot) = bc.value
+      val (rIdx, tIdx, regs) = bc.value
       // slot layout: region-slot * (nT + 1) + tile-slot, last column =
       // outside-all-tiles default
       val counts = new Array[Long](nR * (nT + 1))
@@ -298,12 +296,8 @@ object S2Joins {
           val end = rIdx.entryEnd(seg)
           var tileSlotOfRow = -2 // lazily resolved once per matching row
           while (e < end) {
-            val lab = rIdx.labelAt(e)
-            var hit = rIdx.interiorAt(e)
-            if (!hit) {
-              val reg = if (lab <= regs.length - 1 && lab >= 0) regs(lab) else null
-              hit = reg != null && reg.contains(p)
-            }
+            val slot = rIdx.labelAt(e)
+            val hit = rIdx.interiorAt(e) || regs(slot).contains(p)
             if (hit) {
               if (tileSlotOfRow == -2) {
                 val ts = tIdx.segmentOf(ord)
@@ -311,15 +305,12 @@ object S2Joins {
                   if (ts < 0) -1
                   else {
                     val b = tIdx.entryBegin(ts)
-                    if (tIdx.entryEnd(ts) - b == 1) tSlot(tIdx.labelAt(b))
-                    else {
-                      val t = tIdx.mostIntersecting(Array(cellId), -1)
-                      if (t >= 0) tSlot(t) else -1
-                    }
+                    if (tIdx.entryEnd(ts) - b == 1) tIdx.labelAt(b)
+                    else tIdx.mostIntersecting(Array(cellId), -1)
                   }
               }
               val col = if (tileSlotOfRow >= 0) tileSlotOfRow else nT
-              counts(rSlot(lab) * (nT + 1) + col) += 1L
+              counts(slot * (nT + 1) + col) += 1L
             }
             e += 1
           }
@@ -335,7 +326,7 @@ object S2Joins {
     val rows = for {
       ri <- 0 until nR; ti <- 0 to nT
       c = merged(ri * (nT + 1) + ti) if c > 0
-    } yield (regArr(ri)._1, if (ti < nT) tileIds(ti) else -1, c)
+    } yield (regArr(ri)._1, if (ti < nT) tileArr(ti)._1 else -1, c)
     rows.toDF("qid", "tile_id", "count")
   }
 

@@ -600,6 +600,19 @@ class PipelineOpsSpec extends AnyFunSuite {
       Array[Byte](0, 0, 0, (body.length + 8).toByte) ++ "moov".getBytes ++ body
     }
     assert(codec.demuxMp4(mp4.take(8) ++ bomb).isEmpty)
+    // overlapping chunks: every stco offset points at the first sample and
+    // a fixed stsz size runs each sample to end of file, so each sample is
+    // in bounds but together they exceed the file
+    val overlap = mp4.clone()
+    def u32(p: Int): Long = (0 until 4).foldLeft(0L)((a, k) => (a << 8) | (mp4(p + k) & 0xFF))
+    def putU32(p: Int, v: Long): Unit =
+      (0 until 4).foreach(k => overlap(p + k) = (v >>> (24 - 8 * k)).toByte)
+    val stco = txt.lastIndexOf("stco") + 4 // body: flags, count, offsets
+    val stsz = txt.lastIndexOf("stsz") + 4 // body: flags, fixed size, count
+    val first = u32(stco + 8)
+    (0 until 3).foreach(k => putU32(stco + 8 + 4 * k, first))
+    putU32(stsz + 4, mp4.length - first)
+    assert(codec.demuxMp4(overlap).isEmpty)
     // fuzz: garbage, truncations, single-byte mutations never throw
     val fuzz = new scala.util.Random(13)
     (1 to 200).foreach { _ =>

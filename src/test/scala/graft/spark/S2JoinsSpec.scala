@@ -274,15 +274,29 @@ class S2JoinsSpec extends AnyFunSuite {
   test("regionTileCounts (fused pass) = broadcastContainsJoin + tileAssign + groupBy") {
     val regions = graft.Bench.benchRegions
     val tiles = graft.Bench.benchTiles
-    def fused(d: DataFrame, rs: Seq[(Int, S2Region)]) = S2Joins.regionTileCounts(d, rs, tiles)
+    def fused(d: DataFrame, rs: Seq[(Int, S2Region)],
+              ts: Seq[(Int, Array[Long])] = tiles) = S2Joins.regionTileCounts(d, rs, ts)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    def compositional(d: DataFrame, rs: Seq[(Int, S2Region)]) = S2Joins.tileAssign(
-        S2Joins.broadcastContainsJoin(d, rs), tiles)
+    def compositional(d: DataFrame, rs: Seq[(Int, S2Region)],
+                      ts: Seq[(Int, Array[Long])] = tiles) = S2Joins.tileAssign(
+        S2Joins.broadcastContainsJoin(d, rs), ts)
       .groupBy("qid", "tile_id").count()
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
     val plain = fused(docs, regions)
     assert(plain == compositional(docs, regions))
     assert(plain.nonEmpty)
+    // negated region labels, tile ids -2..-25 (each given as two entries
+    // of half its cells) plus one level-1 tile over region 1 that overlaps
+    // them (a leaf in it ties, and the smallest id wins), and an empty
+    // region list
+    val negRegions = regions.map { case (l, r) => (-l, r) }
+    val negTiles = tiles.flatMap { case (t, cs) =>
+      cs.grouped((cs.length + 1) / 2).map(half => (-(t + 2), half)) } :+
+      (-30 -> Array(S2CellId.parent(S2CellId.fromLatLngDegrees(15, 17), 1)))
+    val neg = fused(docs, negRegions, negTiles)
+    assert(neg == compositional(docs, negRegions, negTiles))
+    assert(neg.exists(_._2 == -30) && neg.toSeq.map(_._3).sum == plain.toSeq.map(_._3).sum)
+    assert(fused(docs, Nil).isEmpty && compositional(docs, Nil).isEmpty)
     // null-coordinate docs match no region, not even the full sphere, in
     // both plans
     import spark.implicits._
