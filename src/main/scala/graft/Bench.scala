@@ -453,9 +453,9 @@ object Bench {
     writeArtifact(Some("after_scaling"))
 
     // ---- phase 3: skew-join A/B + kNN fixed-cost amortization ----
-    // (round-3 verdict items 3 and 4: prove the salted term join beats
-    // the unsalted plan on clustered data, and that the heavy kNN
-    // entries' fixed costs amortize — docs/sec RISES with input size.)
+    // (round-3 verdict items 3 and 4: prove the term join's skew split
+    // rebalances clustered data, and that the heavy kNN entries' fixed
+    // costs amortize — docs/sec RISES with input size.)
     def geoDocs(s: SparkSession, n: Long, clusterFrac: Double, nClusters: Int = 20): DataFrame = {
       val d = S2Joins.withCellId(
         DocSource.docs(s, n, nClusters = nClusters, clusterFrac = clusterFrac)
@@ -466,16 +466,23 @@ object Bench {
     }
     // skew A/B: the reference's motivating skew case — one continent
     // polygon whose coarse covering terms are shared by a large doc
-    // fraction. On one box wall-clock is explode/CPU-dominated; what
-    // salting changes is the REDUCER balance of the candidate equi-join
+    // fraction. On one box wall-clock is explode/CPU-dominated; what a
+    // skew split changes is the REDUCER balance of the candidate equi-join
     // shuffle, which on a 1000-executor cluster IS the straggler tail.
-    // The phase therefore forces the at-scale join shape — broadcast off
-    // (a 100 TB region side doesn't broadcast), AQE off (its skew-split
-    // backstop would mask our salting), 256 shuffle partitions
-    // (cluster-representative task counts) — and records wall plus the
-    // heaviest shuffle stage's max/median per-task shuffle-read ratio.
+    // The phase forces the at-scale join shape — broadcast off (a 100 TB
+    // region side doesn't broadcast), 256 shuffle partitions
+    // (cluster-representative task counts), AQE on with coalescing off —
+    // toggles only AQE's skew join, and records wall plus the heaviest
+    // shuffle stage's max/median per-task shuffle-read ratio. Factor 2
+    // with 1 KB thresholds: the factor alone decides which partitions are
+    // skewed, and a split targets the non-skewed partitions' average, so
+    // no setting depends on the doc count.
     val (skewJson, skewCompact) = {
-      val spark3 = session(cpus, aqeOff,
+      val spark3 = session(cpus, "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1", "spark.sql.shuffle.partitions" -> "256")
       import spark3.implicits._
       val tally = new TaskTally(spark3.sparkContext)
@@ -487,34 +494,36 @@ object Bench {
       }
       val docs = geoDocs(spark3, size.skewDocs, clusterFrac = 0.9, nClusters = 2)
       val polys = Seq((1, SparkEntry.skewPolyText)).toDF("qid", "poly")
-      // wall, then the heaviest shuffle stage's max/median per-task
-      // shuffle-read bytes (reducer DATA balance) and run time (COMPUTE
-      // balance: the hot term's task also runs the PIP refine for its
-      // whole candidate block, so runtime skew is the straggler the bytes
-      // ratio predicts)
-      def run(threshold: Long): (Double, Double, Double) = {
-        val sec = timed(S2Joins.termPolygonJoin(docs, polys,
-          saltThreshold = threshold, saltSampleFraction = 0.01,
-          minDetectBytes = 0L).count())._2
+      // rows and wall, then the heaviest shuffle stage's max/median
+      // per-task shuffle-read bytes (reducer DATA balance) and run time
+      // (COMPUTE balance: the hot term's task also runs the PIP refine for
+      // its whole candidate block, so runtime skew is the straggler the
+      // bytes ratio predicts), and whether that stage ran split tasks
+      def run(split: Boolean): (Long, Double, Double, Double, Boolean) = {
+        spark3.conf.set("spark.sql.adaptive.skewJoin.enabled", split.toString)
+        val (rows, sec) = timed(S2Joins.termPolygonJoin(docs, polys).count())
         val heaviest = tally.drain().filter(_.readBytes > 0).groupBy(_.stage).values
           .maxBy(_.map(_.readBytes.toDouble).sum)
-        (sec, maxOverMedian(heaviest.map(_.readBytes.toDouble)),
-          maxOverMedian(heaviest.map(_.runMs.toDouble)))
+        (rows, sec, maxOverMedian(heaviest.map(_.readBytes.toDouble)),
+          maxOverMedian(heaviest.map(_.runMs.toDouble)), heaviest.size > 256)
       }
-      run(0L) // warmup (JIT, shuffle files) — unsalted shape
-      val (u1, ur, uc) = run(0L); val (u2, _, _) = run(0L)
-      val (s1, sr, sc) = run(100000L); val (s2, _, _) = run(100000L)
-      val unsalted = math.min(u1, u2); val salted = math.min(s1, s2)
+      run(split = false) // warmup (JIT, shuffle files)
+      val (uRows, u1, ur, uc, _) = run(split = false); val u2 = run(split = false)._2
+      val (sRows, s1, sr, sc, engaged) = run(split = true); val s2 = run(split = true)._2
+      require(uRows == sRows, s"skew split changed the join's rows: $uRows vs $sRows")
+      val unsplitSec = math.min(u1, u2); val splitSec = math.min(s1, s2)
       spark3.stop()
       val full =
-        s"""{"docs":${size.skewDocs},"shuffle_partitions":256,"broadcast":"off","aqe":"off",""" +
-        s""""unsalted_sec":$unsalted,"salted_sec":$salted,""" +
-        s""""unsalted_max_over_median_read":$ur,"salted_max_over_median_read":$sr,""" +
-        s""""unsalted_max_over_median_cpu":$uc,"salted_max_over_median_cpu":$sc,""" +
-        s""""balance_improvement":${ur / sr}}"""
+        s"""{"docs":${size.skewDocs},"shuffle_partitions":256,"broadcast":"off",""" +
+        s""""aqe":"on","coalesce":"off","skewed_partition_factor":2,"rows":$uRows,""" +
+        s""""unsplit_sec":$unsplitSec,"split_sec":$splitSec,""" +
+        s""""unsplit_max_over_median_read":$ur,"split_max_over_median_read":$sr,""" +
+        s""""unsplit_max_over_median_cpu":$uc,"split_max_over_median_cpu":$sc,""" +
+        s""""balance_improvement":${ur / sr},"split_engaged":$engaged}"""
       val compact =
-        s"""{"unsalted_sec":${r4d(unsalted)},"salted_sec":${r4d(salted)},""" +
-        s""""read_balance":"${r4d(ur)}->${r4d(sr)}","cpu_balance":"${r4d(uc)}->${r4d(sc)}"}"""
+        s"""{"unsplit_sec":${r4d(unsplitSec)},"split_sec":${r4d(splitSec)},""" +
+        s""""read_balance":"${r4d(ur)}->${r4d(sr)}","cpu_balance":"${r4d(uc)}->${r4d(sc)}",""" +
+        s""""split_engaged":$engaged}"""
       (full, compact)
     }
     endPhase("skew_join")
@@ -596,14 +605,16 @@ object Bench {
 
     // forced-spill A/B: identical sort of the cell-keyed table (24M rows at
     // full size) in two FRESH contexts — one with the sorter forced to
-    // spill every 128k rows — comparing total count, per-position rolling
-    // hash (in range-partition order), and in-partition sortedness. Proves
-    // the operators run through Spark's external-spill machinery unchanged.
+    // spill every spillRows / 32 rows, so each of the 8 sorters spills
+    // about 4 times at either size — comparing total count, per-position
+    // rolling hash (in range-partition order), and in-partition
+    // sortedness. Proves the operators run through Spark's external-spill
+    // machinery unchanged.
     val forcedSpillJson = {
       def sortProbe(forceSpill: Boolean): (Long, Long, Boolean, Long) = {
         val conf = Seq("spark.sql.shuffle.partitions" -> "8", aqeOff) ++
-          (if (forceSpill) Seq("spark.shuffle.spill.numElementsForceSpillThreshold" -> "131072")
-           else Nil)
+          (if (forceSpill) Seq("spark.shuffle.spill.numElementsForceSpillThreshold" ->
+            (size.spillRows / 32).toString) else Nil)
         val s = session(cpus, conf: _*)
         val tally = new TaskTally(s.sparkContext)
         val docs = S2Joins.withCellId(

@@ -524,15 +524,13 @@ object SparkEntry {
 
     "q_s2_term_join_skew" -> ((s, dir) => {
       // skewed large×large path: a continent-scale region whose coarse
-      // covering terms match large doc populations — the join runs through
-      // hot-term detection (full-count at this SF: threshold 2, fraction
-      // 1.0 so the salted plan is deterministically exercised) and
-      // Skew.saltedTermJoin. Results must be identical to the unsalted
-      // plan: the oracle is the plain PIP count.
+      // covering terms match large doc populations. The gate pins the
+      // skewed-term result of the plain term equi-join (AQE may split a
+      // hot term's partition; rows never change): the oracle is the plain
+      // PIP count.
       import s.implicits._
       val polys = Seq((1, skewPolyText)).toDF("qid", "poly")
-      S2Joins.termPolygonJoin(docsGeo(s, dir), polys,
-          saltThreshold = 2L, saltSampleFraction = 1.0, minDetectBytes = 0L)
+      S2Joins.termPolygonJoin(docsGeo(s, dir), polys)
         .groupBy(col("qid"))
         .agg(count(lit(1)).as("cnt"), sum("doc_id").as("sum_id"))
     }),

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.functions.S2
 
-/** Spatial density statistics and skew handling — the distributed
+/** Spatial density and hot-term statistics — the distributed
   * re-expression of S2DensityTree (/root/reference/src/s2/s2density_tree.h:45-243):
   * a cell→weight histogram whose rollup drives equal-weight sharding and
-  * hot-key salting. In the reference this is a driver-side tree; here the
+  * the hot-term counts. In the reference this is a driver-side tree; here the
   * histogram is a groupBy aggregate (map-side combined) and only the
   * ≤ 4^level compact rollup ever reaches the driver.
   */
@@ -134,41 +134,19 @@ object Density {
   }
 }
 
-/** Hot-key salting for skewed term joins (SURVEY.md §4.3 item 2): a
-  * continent-sized region's coarse covering term matches a huge doc set;
-  * without intervention that term's hash partition is a straggler. */
+/** Hot-term statistics for skewed term joins (SURVEY.md §4.3 item 2): a
+  * continent-sized region's coarse covering term matches a huge doc set,
+  * and that term's join partition is the one AQE's skew join splits. */
 object Skew {
-  /** Largest salt factor a hot term gets (its replication on the small
-    * side of [[saltedTermJoin]]). */
-  private val MaxSalt = 32
-
-  /** Detect hot terms; returns (term → saltFactor) for every term seen
-    * more than `threshold` times, salted count/threshold + 1 ways (at
-    * least 2, at most [[MaxSalt]]). Callers that want a sampled estimate
-    * sample upstream and scale `threshold` — at 100 TB a full
-    * groupBy-count just to find stragglers is itself a large job, and
-    * stragglers by definition survive sampling. */
-  def hotTerms(docTerms: DataFrame, termCol: String, threshold: Long): Map[String, Int] =
+  /** Heavy hitters: (term → count) for every term seen more than
+    * `threshold` times. Callers that want a sampled estimate sample
+    * upstream and scale `threshold` — at 100 TB a full groupBy-count is
+    * itself a large job, and heavy hitters by definition survive
+    * sampling. */
+  def hotTerms(docTerms: DataFrame, termCol: String, threshold: Long): Map[String, Long] =
     docTerms.groupBy(col(termCol)).count()
       .where(col("count") > threshold)
       .collect()
-      .map(r => r.getString(0) ->
-        math.min(MaxSalt, math.max(2, (r.getLong(1) / threshold).toInt + 1)))
+      .map(r => r.getString(0) -> r.getLong(1))
       .toMap
-
-  /** Salted equi-join: big side gets `salt = hash(rowKey) % s(term)`;
-    * small side replicates each hot term s(term) times. Non-hot terms join
-    * with salt 0 on both sides — plan stays a single hash join. */
-  def saltedTermJoin(big: DataFrame, small: DataFrame, termCol: String,
-                     bigKey: Column, salts: Map[String, Int]): DataFrame = {
-    if (salts.isEmpty) return big.join(small, termCol)
-    val spark = big.sparkSession
-    val b = spark.sparkContext.broadcast(salts)
-    val saltOf = udf { (term: String) => b.value.getOrElse(term, 1) }
-    val bigS = big.withColumn("_salt",
-      pmod(hash(bigKey), saltOf(col(termCol))))
-    val smallS = small
-      .withColumn("_salt", explode(sequence(lit(0), saltOf(col(termCol)) - 1)))
-    bigS.join(smallS, Seq(termCol, "_salt")).drop("_salt")
-  }
 }

@@ -22,7 +22,8 @@ import graft.functions.{S2, S2SpatialKernels}
   *     ancestor terms for their leaf cell, regions emit covering +
   *     ancestor-covering terms; two regions intersect iff they share ≥1
   *     term, so the spatial join becomes a plain equi-join Catalyst can
-  *     hash/sort-merge + AQE-skew-split, followed by the exact refine.
+  *     hash/sort-merge and AQE can skew-split (the one skew mechanism:
+  *     no join rewrites its keys), followed by the exact refine.
   *
   * The same two shapes carry tile assignment ([[tileAssign]], fused with
   * the broadcast join in [[regionTileCounts]]) and the kNN joins
@@ -99,9 +100,7 @@ object S2Joins {
 
   /** Full term-join pipeline for polygon regions given as text: emits
     * (doc columns…, qid) after exact PIP refine. Both sides may be
-    * arbitrarily large; the candidate shuffle is the term equi-join (AQE
-    * skew split applies; pre-salt with [[Skew.saltedTermJoin]] when a
-    * region covers a hot cell).
+    * arbitrarily large; the candidate step is a plain term equi-join.
     *
     * Contract: `doc_id` must be UNIQUE in `docs` (same contract as
     * [[Similarity.annTopK]]). The exactly-one-shared-term invariant makes
@@ -117,55 +116,20 @@ object S2Joins {
     * Refined (doc_id, qid) matches re-join the full rows once, id-keyed
     * (AQE broadcasts the match side when selectivity allows).
     *
-    * Skew handling is AUTOMATIC: before the candidate join, a sampled
-    * doc-term histogram (one cheap job over `saltSampleFraction` of the
-    * doc side) detects terms whose doc population exceeds
-    * `saltThreshold` — the reference's own motivating skew case, a
-    * continent-sized region's coarse ancestor term matching a whole
-    * clustered doc population (s2density_tree.h:45-50) — and the join
-    * runs through [[Skew.saltedTermJoin]]: hot-term doc rows spread over
-    * `hash(doc_id) % saltFactor` sub-keys, region rows replicated only
-    * for those terms. Results are identical (plan-level rebalancing
-    * only); AQE skew split remains as backstop. Set `saltThreshold <= 0`
-    * to disable detection entirely.
-    *
-    * The detection job itself is a fixed ~0.3 s cost, so it is SIZE-GATED:
-    * it only runs when the doc side's optimizer size estimate is at least
-    * `minDetectBytes` (default 64 MB — half a default shuffle partition:
-    * below that the whole doc side is one reducer's comfortable load, so
-    * the worst straggler is bounded by the input itself and cannot repay
-    * a detection job; the skew A/B's measured salted win is at ~200 MB,
-    * comfortably above the gate). At 100 TB the gate always passes; set
-    * `minDetectBytes <= 0` to force detection regardless of size (tests,
-    * A/B harnesses). */
+    * Skew: a continent-sized region's coarse ancestor term can match a
+    * whole clustered doc population (s2density_tree.h:45-50). AQE's skew
+    * join splits that term's partition when it is larger than
+    * `spark.sql.adaptive.skewJoin.skewedPartitionFactor` × the median
+    * partition and larger than `skewedPartitionThresholdInBytes` (Spark
+    * defaults 5 and 256 MB); a split changes task sizes, never rows. */
   def termPolygonJoin(docs: DataFrame, polys: DataFrame,
-                      polyTextCol: String = "poly", qidCol: String = "qid",
-                      saltThreshold: Long = 2000000L,
-                      saltSampleFraction: Double = 0.001,
-                      minDetectBytes: Long = 64L << 20): DataFrame = {
+                      polyTextCol: String = "poly", qidCol: String = "qid"): DataFrame = {
     val slim = docs.select(col("doc_id"),
       col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
     val d = docIndexTerms(slim, S2SpatialKernels.indexer)
     val q = polys.select(col(qidCol), col(polyTextCol),
       explode(S2.polygonQueryTerms(col(polyTextCol))).as("term"))
-    val salts: Map[String, Int] =
-      if (saltThreshold <= 0 ||
-          (minDetectBytes > 0 &&
-            slim.queryExecution.optimizedPlan.stats.sizeInBytes <
-              BigInt(minDetectBytes))) Map.empty
-      else {
-        // sample the DOCS (not the exploded terms) so the detection job
-        // computes terms only for the sampled fraction
-        val f = math.min(1.0, math.max(saltSampleFraction, 0.0))
-        val src = if (f < 1.0)
-          slim.sample(withReplacement = false, f, seed = 42L) else slim
-        Skew.hotTerms(docIndexTerms(src, S2SpatialKernels.indexer).select("term"), "term",
-          threshold = math.max(1L, (saltThreshold * f).toLong))
-      }
-    val joined =
-      if (salts.isEmpty) d.join(q, "term")
-      else Skew.saltedTermJoin(d, q, "term", col("doc_id"), salts)
-    val matches = joined
+    val matches = d.join(q, "term")
       .drop("term")
       // no (doc, qid) dedup: a point doc's plain ancestor tokens meet a
       // region query's plain tokens (its DISJOINT covering cells) at most

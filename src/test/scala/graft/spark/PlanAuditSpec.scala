@@ -114,45 +114,6 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("Window"), plan) // rank emitted in the flatMap
   }
 
-  test("salted term join still plans as a single equi-join (no BNLJ)") {
-    import spark.implicits._
-    val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
-    val docTerms = S2Joins.docIndexTerms(docs, graft.functions.S2SpatialKernels.indexer)
-    val hot = Skew.hotTerms(docTerms, "term", threshold = 50)
-    val polys = Seq((1, "0:0, 0:35, 30:35, 30:0")).toDF("qid", "poly")
-    val q = polys.select(col("qid"),
-      explode(graft.functions.S2.polygonQueryTerms(col("poly"))).as("term"))
-    val joined = Skew.saltedTermJoin(docTerms, q, "term", col("doc_id"), hot)
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert("Join".r.findAllIn(plan).length >= 1, plan)
-  }
-
-  test("termPolygonJoin auto-salts hot terms on clustered docs, same rows") {
-    val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
-    import spark.implicits._
-    // continent-scale quad: its coarse covering terms match whole clusters
-    val polys = Seq((1, graft.SparkEntry.skewPolyText))
-      .toDF("qid", "poly")
-    // 2000 docs, 80% in 20 clusters -> ~80 docs share each cluster's
-    // ancestor terms; threshold 20 must trigger detection
-    val salted = S2Joins.termPolygonJoin(docs, polys,
-      saltThreshold = 20L, saltSampleFraction = 1.0, minDetectBytes = 0L)
-    val unsalted = S2Joins.termPolygonJoin(docs, polys, saltThreshold = 0L)
-    val plan = salted.queryExecution.optimizedPlan.toString
-    assert(plan.contains("_salt"), s"auto-salt did not engage:\n$plan")
-    val key = (df: org.apache.spark.sql.DataFrame) =>
-      df.select("doc_id", "qid").collect().map(r => (r.getString(0), r.getInt(1))).sorted
-    assert(key(salted).sameElements(key(unsalted)))
-    assert(salted.count() > 0)
-    // still a pure equi-join plan — no BNLJ from the salt columns
-    val phys = salted.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    assert(!phys.contains("BroadcastNestedLoopJoin"), phys)
-    assert(!phys.contains("CartesianProduct"), phys)
-  }
-
   test("knnJoinLarge runs its per-round rank filter as a map-side WindowGroupLimit") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -204,10 +165,11 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("AQE skew-split backstop engages on a hot join key (thresholds scaled down)") {
-    // BENCH/BASELINE documents AQE's OptimizeSkewedJoin as the backstop
-    // behind our explicit salting; this proves the backstop is real, not
-    // assumed. Thresholds are scaled to unit-test data — the same ratios
-    // Spark applies at 256 MB partitions on a cluster.
+    // AQE's OptimizeSkewedJoin is the engine's one skew mechanism for term
+    // joins; this proves it is real, not assumed, on a bare hot key and on
+    // termPolygonJoin over clustered docs. Thresholds are scaled to
+    // unit-test data — the same ratios Spark applies at 256 MB partitions
+    // on a cluster.
     import spark.implicits._
     val confs = Seq(
       "spark.sql.adaptive.enabled" -> "true",
@@ -216,7 +178,10 @@ class PlanAuditSpec extends AnyFunSuite {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // at 4 reducers every one holds a like mix of the clustered docs'
+      // hot and cold terms; at 32 a hot term stands out (split from 16 up)
+      "spark.sql.shuffle.partitions" -> "32")
     val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
@@ -231,6 +196,22 @@ class PlanAuditSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE did not split the hot partition:\n$finalPlan")
+
+      // continent-scale quad: its coarse covering terms match whole clusters
+      val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
+      val polys = Seq((1, graft.SparkEntry.skewPolyText)).toDF("qid", "poly")
+      val terms = S2Joins.termPolygonJoin(docs, polys)
+      // collect THIS Dataset (not a projection of it) so its plan finalizes
+      val key = (df: org.apache.spark.sql.DataFrame) => df.collect()
+        .map(r => (r.getAs[String]("doc_id"), r.getAs[Int]("qid"))).sorted
+      val got = key(terms)
+      assert(got.nonEmpty)
+      val termPlan = terms.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(termPlan.contains("skew=true"), s"AQE did not split a hot term:\n$termPlan")
+      assert(!termPlan.contains("BroadcastNestedLoopJoin"), termPlan)
+      assert(!termPlan.contains("CartesianProduct"), termPlan)
+      val regions = Seq(1 -> (S2TextFormat.parsePolygon(graft.SparkEntry.skewPolyText): S2Region))
+      assert(got.sameElements(key(S2Joins.broadcastContainsJoin(docs, regions))))
     } finally prior.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
