@@ -267,15 +267,14 @@ object S2 {
 }
 
 /** Per-executor cache of parsed polygons (polygon text is typically a
-  * small query-side dimension; parsing once per executor, not per row). */
+  * small query-side dimension; parsing once per executor, not per row).
+  * Least-recently-used beyond 10k polygons or 64 MB; a hit takes no lock. */
 object PolyCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, S2Polygon]()
+  private val cache = new graft.runtime.BoundedCache[String, S2Polygon](10000, 64L << 20,
+    // the text's chars, ~48 bytes per vertex (V3 + array slot), loop bounds
+    (text, p) => 2L * text.length + p.loops.map(48L * _.numVertices + 256L).sum)
   def get(text: String): S2Polygon = {
-    var p = cache.get(text)
-    if (p == null) {
-      p = S2TextFormat.parsePolygon(text)
-      if (cache.size < 10000) cache.put(text, p)
-    }
-    p
+    val p = cache.get(text)
+    if (p != null) p else cache.put(text, S2TextFormat.parsePolygon(text))
   }
 }

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{ColumnarToRowExec, WholeStageCodegenExec}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import graft.core._
 import graft.functions.{S2, S2SpatialKernels}
 
@@ -29,6 +34,14 @@ import graft.functions.{S2, S2SpatialKernels}
   * the broadcast join in [[regionTileCounts]]) and the kNN joins
   * ([[knnJoin]] broadcasts the targets, [[knnJoinLarge]] runs a radius
   * ladder of term joins).
+  *
+  * Dimension-side indexes ride the serialized plan or task closure (the
+  * plan ships the index of [[regionHits]], the closure those of
+  * [[regionTileCounts]]); no call leaves a broadcast behind. The fused
+  * pass also rejects docs outside every region's rect bound on a 1°
+  * [[LatLngGrid]] before any trig, and caches its indexes by region/tile
+  * content (≤ 32 entries, ≤ 64 MB) and its planned scan per input Dataset
+  * (≤ 8).
   *
   * All joins carry every payload column (notably `spans`) untouched —
   * the span-sequence invariant is preserved structurally because spans are
@@ -215,6 +228,21 @@ object S2Joins {
     * This is the "genuine per-partition imperative logic" case: the whole
     * query is an aggregation whose groups are statically known.
     *
+    * Before its trig and cell id, a row is tested against a [[LatLngGrid]]
+    * of the regions' widened rect bounds, one O(1) bitmap probe whatever
+    * the region count: most docs of a large table fall in no region and
+    * stop there. Rows with NaN or out-of-range coordinates skip the probe.
+    *
+    * Driver work is not repeated per call. The stab and tile indexes and
+    * the grid are built once per region/tile content (caps and rects by
+    * value, polygons by their loops' vertices, tiles by id and cells) and
+    * kept in a cache of at most 32 entries and 64 MB; they ride the task
+    * closure to the executors, as [[regionHits]]' index rides its plan. The
+    * `(lat, lng)` scan is planned once per input Dataset (a cache of its
+    * 8 most recent), and each call runs a new job over the same planned
+    * RDD. A bare columnar scan of two double columns (a parquet table) is
+    * read batch by batch; any other plan row by row.
+    *
     * Region labels are distinct; labels and tile ids may be negative or
     * sparse. Both indexes are keyed by slot 0..n-1, tiles sorted by id (a
     * repeated id's cells merged), so a most-intersecting tie still goes to
@@ -225,73 +253,147 @@ object S2Joins {
                        tiles: Seq[(Int, Array[Long])],
                        latCol: String = "lat", lngCol: String = "lng",
                        maxCellsPerRegion: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    val regArr = regions.toArray
     val tileArr = tiles.groupBy(_._1).toArray.sortBy(_._1)
       .map { case (id, ts) => (id, ts.flatMap(_._2).toArray) }
-    val regIndex = CellIntervalIndex.fromRegions(
-      regArr.indices.map(i => (i, regArr(i)._2)), maxCellsPerRegion)
-    val tileIndex = CellIntervalIndex.build(
-      tileArr.indices.map(i => (i, tileArr(i)._2, Array.empty[Long])))
-    val nR = regArr.length; val nT = tileArr.length
-    val bc = spark.sparkContext.broadcast((regIndex, tileIndex, regArr.map(_._2)))
+    val fused = fusedInputs(regions.map(_._2), tileArr, maxCellsPerRegion)
+    val nR = regions.length; val nT = tileArr.length
 
-    val in = docs.select(col(latCol).cast("double"), col(lngCol).cast("double"))
-    val merged = in.queryExecution.toRdd.mapPartitions { it =>
-      val (rIdx, tIdx, regs) = bc.value
-      // slot layout: region-slot * (nT + 1) + tile-slot, last column =
-      // outside-all-tiles default
-      val counts = new Array[Long](nR * (nT + 1))
-      while (it.hasNext) {
-        val row = it.next()
-        // null lat/lng rows are dropped — matching the compositional plan,
-        // whose null-intolerant native expressions never emit them
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-        val lat = row.getDouble(0); val lng = row.getDouble(1)
-        // one trig evaluation per row: the unit vector feeds BOTH the
-        // cell id (S2CellId.fromPoint = fromLatLngDegrees bit-exactly)
-        // and the exact refine
-        val p = V3.fromLatLngDegrees(lat, lng)
-        val cellId = S2CellId.fromPoint(p.x, p.y, p.z)
-        val ord = S2CellId.orderKey(cellId)
-        val seg = rIdx.segmentOf(ord)
-        if (seg >= 0) {
-          var e = rIdx.entryBegin(seg)
-          val end = rIdx.entryEnd(seg)
-          var tileSlotOfRow = -2 // lazily resolved once per matching row
-          while (e < end) {
-            val slot = rIdx.labelAt(e)
-            val hit = rIdx.interiorAt(e) || regs(slot).contains(p)
-            if (hit) {
-              if (tileSlotOfRow == -2) {
-                val ts = tIdx.segmentOf(ord)
-                tileSlotOfRow =
-                  if (ts < 0) -1
-                  else {
-                    val b = tIdx.entryBegin(ts)
-                    if (tIdx.entryEnd(ts) - b == 1) tIdx.labelAt(b)
-                    else tIdx.mostIntersecting(Array(cellId), -1)
-                  }
-              }
-              val col = if (tileSlotOfRow >= 0) tileSlotOfRow else nT
-              counts(slot * (nT + 1) + col) += 1L
-            }
-            e += 1
+    val scanKey = (docs, latCol, lngCol) // a Dataset compares by identity
+    val scan = Option(fusedScans.get(scanKey))
+      .getOrElse(fusedScans.put(scanKey, latLngScan(docs, latCol, lngCol)))
+    // null lat/lng rows are dropped — matching the compositional plan,
+    // whose null-intolerant native expressions never emit them
+    val merged = (scan match {
+      case Left(batches) => batches.mapPartitions { it =>
+        val c = new FusedCounts(fused, nR, nT)
+        while (it.hasNext) {
+          val b = it.next(); val la = b.column(0); val ln = b.column(1)
+          var i = 0
+          while (i < b.numRows) {
+            if (!la.isNullAt(i) && !ln.isNullAt(i)) c.add(la.getDouble(i), ln.getDouble(i))
+            i += 1
           }
         }
-        }
+        Iterator.single(c.counts)
       }
-      Iterator.single(counts)
-    }.reduce { (a, b) =>
+      case Right(rows) => rows.mapPartitions { it =>
+        val c = new FusedCounts(fused, nR, nT)
+        while (it.hasNext) {
+          val r = it.next()
+          if (!r.isNullAt(0) && !r.isNullAt(1)) c.add(r.getDouble(0), r.getDouble(1))
+        }
+        Iterator.single(c.counts)
+      }
+    }).reduce { (a, b) =>
       var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
     }
 
-    import spark.implicits._
-    val rows = for {
-      ri <- 0 until nR; ti <- 0 to nT
-      c = merged(ri * (nT + 1) + ti) if c > 0
-    } yield (regArr(ri)._1, if (ti < nT) tileArr(ti)._1 else -1, c)
-    rows.toDF("qid", "tile_id", "count")
+    val labels = regions.map(_._1).toArray
+    val rows = new java.util.ArrayList[Row]()
+    for (ri <- 0 until nR; ti <- 0 to nT; c = merged(ri * (nT + 1) + ti) if c > 0)
+      rows.add(Row(labels(ri), if (ti < nT) tileArr(ti)._1 else -1, c))
+    docs.sparkSession.createDataFrame(rows, RegionTileCountsSchema)
+  }
+
+  /** One partition's |regions|×(|tiles|+1) count matrix of the fused
+    * pass; slot layout region-slot * (nT + 1) + tile-slot, the last column
+    * is the outside-all-tiles default. */
+  private final class FusedCounts(f: FusedInputs, nR: Int, nT: Int) {
+    private val rIdx = f.regIndex; private val tIdx = f.tileIndex
+    private val regs = f.regions; private val grid = f.grid
+    val counts = new Array[Long](nR * (nT + 1))
+
+    def add(lat: Double, lng: Double): Unit = if (grid.mayContain(lat, lng)) {
+      // one trig evaluation per row: the unit vector feeds BOTH the cell id
+      // (S2CellId.fromPoint = fromLatLngDegrees bit-exactly) and the exact
+      // refine
+      val p = V3.fromLatLngDegrees(lat, lng)
+      val cellId = S2CellId.fromPoint(p.x, p.y, p.z)
+      val ord = S2CellId.orderKey(cellId)
+      val seg = rIdx.segmentOf(ord)
+      if (seg >= 0) {
+        var e = rIdx.entryBegin(seg)
+        val end = rIdx.entryEnd(seg)
+        var tileSlotOfRow = -2 // lazily resolved once per matching row
+        while (e < end) {
+          val slot = rIdx.labelAt(e)
+          val hit = rIdx.interiorAt(e) || regs(slot).contains(p)
+          if (hit) {
+            if (tileSlotOfRow == -2) {
+              val ts = tIdx.segmentOf(ord)
+              tileSlotOfRow =
+                if (ts < 0) -1
+                else {
+                  val b = tIdx.entryBegin(ts)
+                  if (tIdx.entryEnd(ts) - b == 1) tIdx.labelAt(b)
+                  else tIdx.mostIntersecting(Array(cellId), -1)
+                }
+            }
+            val col = if (tileSlotOfRow >= 0) tileSlotOfRow else nT
+            counts(slot * (nT + 1) + col) += 1L
+          }
+          e += 1
+        }
+      }
+    }
+  }
+
+  /** The docs' (lat, lng) in degrees, planned once: the scan's column
+    * batches when the plan is a bare columnar scan of two double columns
+    * (no row conversion, and no per-row buffering in a codegen iterator),
+    * otherwise the rows of the projection cast to double. */
+  private def latLngScan(docs: DataFrame, latCol: String, lngCol: String)
+      : Either[RDD[ColumnarBatch], RDD[InternalRow]] = {
+    val plan = docs.select(col(latCol), col(lngCol)).queryExecution.executedPlan
+    plan match {
+      case WholeStageCodegenExec(ColumnarToRowExec(scan))
+          if scan.output == plan.output && plan.output.forall(_.dataType == DoubleType) =>
+        Left(scan.executeColumnar())
+      case _ =>
+        Right(docs.select(col(latCol).cast("double"), col(lngCol).cast("double"))
+          .queryExecution.toRdd)
+    }
+  }
+
+  private val RegionTileCountsSchema = StructType(Seq(
+    StructField("qid", IntegerType, nullable = false),
+    StructField("tile_id", IntegerType, nullable = false),
+    StructField("count", LongType, nullable = false)))
+
+  /** The driver-built inputs of [[regionTileCounts]], slot-indexed. */
+  private final case class FusedInputs(regions: Array[S2Region], regIndex: CellIntervalIndex,
+                                       tileIndex: CellIntervalIndex, grid: LatLngGrid)
+
+  private val fusedIndexes = new graft.runtime.BoundedCache[AnyRef, FusedInputs](32, 64L << 20,
+    // the indexes, the grid's 8 KB, and the key: ~48 bytes per polygon
+    // vertex, its tile cells about the tile index's size again
+    (_, f) => f.regIndex.bytes + 2 * f.tileIndex.bytes + 8192L + f.regions.map {
+      case p: S2Polygon => p.loops.map(48L * _.numVertices).sum
+      case _ => 64L
+    }.sum)
+  // planned (lat, lng) scans; an entry's nominal weight is 1
+  private val fusedScans = new graft.runtime.BoundedCache[AnyRef,
+    Either[RDD[ColumnarBatch], RDD[InternalRow]]](8, 8L, (_, _) => 1L)
+  /** How many times [[regionTileCounts]] has built its indexes. */
+  private[graft] val fusedIndexBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  private def fusedInputs(regions: Seq[S2Region], tiles: Array[(Int, Array[Long])],
+                          maxCellsPerRegion: Int): FusedInputs = {
+    // a region's content: caps, rects and other case classes compare by
+    // value, a polygon by its loops' vertices; the key holds copies of the
+    // tile cells, so later edits to a caller's array miss the cache
+    val key = (maxCellsPerRegion, regions.map {
+      case p: S2Polygon => p.loops.toSeq.map(l => l.vertices.toSeq)
+      case r => r
+    }, tiles.toSeq.map { case (id, cells) => (id, cells.toSeq) })
+    Option(fusedIndexes.get(key)).getOrElse {
+      fusedIndexBuilds.incrementAndGet()
+      val regArr = regions.toArray
+      fusedIndexes.put(key, FusedInputs(regArr,
+        CellIntervalIndex.fromRegions(regArr.indices.map(i => (i, regArr(i))), maxCellsPerRegion),
+        CellIntervalIndex.build(tiles.indices.map(i => (i, tiles(i)._2, Array.empty[Long]))),
+        LatLngGrid.of(regArr.map(_.rectBound))))
+    }
   }
 
   // =======================================================================

@@ -308,6 +308,88 @@ class S2JoinsSpec extends AnyFunSuite {
     val got = fused(withNulls, sphere)
     assert(got == compositional(withNulls, sphere))
     assert(got.filter(_._1 == 99).toSeq.map(_._3).sum == docs.count())
+
+    // edge inputs of the lat/lng grid reject: docs at the poles and the
+    // antimeridian, at and a few ulps or margins around every rect-bound
+    // edge, and out-of-range or NaN coordinates, against regions that cross
+    // the antimeridian, touch it, or cover a pole
+    val edgeRegions: Seq[(Int, S2Region)] = Seq(
+      1 -> S2LatLngRect.fromDegrees(-25, 100, 5, 140),
+      2 -> S2LatLngRect.fromDegrees(10, 170, 30, -170),
+      3 -> S2TextFormat.parsePolygon("-10:175, -10:-175, 10:-175, 10:175"),
+      4 -> S2Cap.fromCenterAngle(V3(0, 0, 1), 0.1),
+      5 -> S2LatLngRect.fromDegrees(-60, -180, -40, -150),
+      6 -> S2TextFormat.parsePolygon("-40.3:-79.7, -40.3:-30.2, -9.9:-30.2, -9.9:-79.7"))
+    def near(x: Double): Seq[Double] =
+      (1 to 3).flatMap(k => Seq(Iterator.iterate(x)(Math.nextUp).drop(k).next(),
+        Iterator.iterate(x)(Math.nextDown).drop(k).next())) ++
+      Seq(x, x - 1e-9, x + 1e-9, x - 1e-7, x + 1e-7, x - 1e-5, x + 1e-5)
+    val onEdges = edgeRegions.map(_._2.rectBound).flatMap { b =>
+      val lats = Seq(b.latLo, b.latHi, b.lat.center).map(math.toDegrees)
+      val lngs = Seq(b.lngLo, b.lngHi, b.lng.center).map(math.toDegrees)
+      for (la <- lats; ln <- lngs; (x, y) <- near(la).map((_, ln)) ++ near(ln).map((la, _)))
+        yield (x, y)
+    }
+    val special = Seq(-90.0, 90.0).flatMap(la => Seq(-180.0, -90, -37, 0, 37, 180).map((la, _))) ++
+      Seq(-180.0, 180.0).flatMap(ln => Seq(-50.0, -45, -10, 0, 10, 20, 45).map((_, ln))) ++
+      Seq((20.0, 190.0), (20.0, -540.0), (0.0, 540.0), (Double.NaN, 0.0), (0.0, Double.NaN),
+        (95.0, 10.0), (-90.5, 0.0))
+    val edgeDocs = S2Joins.withCellId((onEdges ++ special).zipWithIndex
+      .map { case ((la, ln), i) => (s"e$i", la, ln) }.toDF("doc_id", "lat", "lng"),
+      col("lat"), col("lng"))
+    val edgeGot = fused(edgeDocs, edgeRegions)
+    assert(edgeGot == compositional(edgeDocs, edgeRegions))
+    assert(edgeRegions.forall(r => edgeGot.exists(_._1 == r._1)))
+    val withFullAndEmpty = edgeRegions ++
+      Seq(7 -> (S2Cap.Full: S2Region), 8 -> (S2Cap.Empty: S2Region))
+    val fullGot = fused(edgeDocs, withFullAndEmpty)
+    assert(fullGot == compositional(edgeDocs, withFullAndEmpty))
+    assert(fullGot.exists(_._1 == 7) && !fullGot.exists(_._1 == 8))
+  }
+
+  test("regionTileCounts builds its indexes once per region/tile content") {
+    def counts(df: DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
+    def compositional(d: DataFrame, ts: Seq[(Int, Array[Long])]) = counts(S2Joins.tileAssign(
+      S2Joins.broadcastContainsJoin(d, graft.Bench.benchRegions), ts)
+      .groupBy("qid", "tile_id").count())
+    // benchRegions and benchTiles build new, equal objects on every call;
+    // maxCellsPerRegion 63 keys these calls apart from the other tests'
+    def fusedNow(d: DataFrame, ts: Seq[(Int, Array[Long])] = graft.Bench.benchTiles) =
+      counts(S2Joins.regionTileCounts(d, graft.Bench.benchRegions, ts, maxCellsPerRegion = 63))
+    val builds = S2Joins.fusedIndexBuilds.get
+    val first = fusedNow(docs)
+    assert(fusedNow(docs) == first && first == compositional(docs, graft.Bench.benchTiles))
+    assert(S2Joins.fusedIndexBuilds.get == builds + 1)
+
+    // editing a tile array in place between calls: tile 0 now holds one of
+    // tile 1's cells many times over, which it wins on the tie
+    val tiles = graft.Bench.benchTiles
+    assert(fusedNow(docs, tiles) == first)
+    val (t0, t1) = (tiles.find(_._1 == 0).get._2, tiles.find(_._1 == 1).get._2)
+    t0.indices.foreach(t0(_) = t1(0))
+    val edited = fusedNow(docs, tiles)
+    assert(edited != first && edited == compositional(docs, tiles))
+    assert(S2Joins.fusedIndexBuilds.get == builds + 2)
+
+    // a second session over the same docs reuses the indexes, not the scan
+    val other = spark.newSession()
+    val rows = docs.select("doc_id", "lat", "lng")
+    val otherDocs = other.createDataFrame(
+      java.util.Arrays.asList(rows.collect(): _*), rows.schema)
+    assert(fusedNow(otherDocs) == first)
+    assert(S2Joins.fusedIndexBuilds.get == builds + 2)
+
+    // a parquet table is read column batch by batch, null coordinates too
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("fused_scan").resolve("t").toString
+    rows.unionByName(Seq(("null-lat", Option.empty[Double], Option(1.0)),
+        ("null-lng", Option(1.0), Option.empty[Double])).toDF("doc_id", "lat", "lng"))
+      .write.parquet(dir)
+    val table = spark.read.parquet(dir)
+    assert(fusedNow(table) == first)
+    assert(compositional(S2Joins.withCellId(table, col("lat"), col("lng")),
+      graft.Bench.benchTiles) == first)
   }
 
   test("tileAssign picks the containing tile; disjoint level-2 tiling partitions all docs") {
