@@ -265,7 +265,7 @@ object S2Joins {
     // whose null-intolerant native expressions never emit them
     val merged = (scan match {
       case Left(batches) => batches.mapPartitions { it =>
-        val c = new FusedCounts(fused, nR, nT)
+        val c = new FusedCounts(fused, nT)
         while (it.hasNext) {
           val b = it.next(); val la = b.column(0); val ln = b.column(1)
           var i = 0
@@ -277,7 +277,7 @@ object S2Joins {
         Iterator.single(c.counts)
       }
       case Right(rows) => rows.mapPartitions { it =>
-        val c = new FusedCounts(fused, nR, nT)
+        val c = new FusedCounts(fused, nT)
         while (it.hasNext) {
           val r = it.next()
           if (!r.isNullAt(0) && !r.isNullAt(1)) c.add(r.getDouble(0), r.getDouble(1))
@@ -298,10 +298,10 @@ object S2Joins {
   /** One partition's |regions|×(|tiles|+1) count matrix of the fused
     * pass; slot layout region-slot * (nT + 1) + tile-slot, the last column
     * is the outside-all-tiles default. */
-  private final class FusedCounts(f: FusedInputs, nR: Int, nT: Int) {
+  private final class FusedCounts(f: FusedInputs, nT: Int) {
     private val rIdx = f.regIndex; private val tIdx = f.tileIndex
     private val regs = f.regions; private val grid = f.grid
-    val counts = new Array[Long](nR * (nT + 1))
+    val counts = new Array[Long](regs.length * (nT + 1))
 
     def add(lat: Double, lng: Double): Unit = if (grid.mayContain(lat, lng)) {
       // one trig evaluation per row: the unit vector feeds BOTH the cell id
