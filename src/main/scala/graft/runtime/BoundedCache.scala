@@ -1,6 +1,7 @@
 package graft.runtime
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** A least-recently-used cache bounded by entry count and by bytes.
   *
@@ -8,9 +9,12 @@ import java.util.concurrent.ConcurrentHashMap
   * the entry. The stamp is an insert epoch: the clock advances only on an
   * insert, and a hit writes the entry's stamp only when it lags the clock,
   * so hits from many threads on one hot entry do not contend on a shared
-  * write. Eviction runs only on insert, under the cache's lock: while
-  * either bound is exceeded, the entry with the oldest stamp goes (entries
-  * hit between the same two inserts tie, and any of them may go first).
+  * write. Eviction runs only on insert, under the cache's lock: once
+  * either bound is exceeded, one walk over the entries drops the oldest
+  * stamps until both are at or below 90% of their bound (entries hit
+  * between the same two inserts tie, and any of them may go first). A
+  * scan over more distinct keys than fit, which misses on every insert,
+  * so walks once per tenth of the bound rather than once per insert.
   *
   * `weigh` gives an entry's size in bytes; an entry heavier than
   * `maxBytes` is returned but never stored. Two threads missing on one key
@@ -51,23 +55,25 @@ final class BoundedCache[K <: AnyRef, V <: AnyRef](maxEntries: Int, maxBytes: Lo
         map.put(key, new Entry(value, w, clock + 1))
         clock += 2
         totalBytes += w
-        while (map.size > maxEntries || totalBytes > maxBytes) evictOldest()
+        if (map.size > maxEntries || totalBytes > maxBytes) evictAllBut(key)
         value
       }
     }
   }
 
-  // Called with the lock held; the map is never empty here, since the
-  // entry just inserted fits both bounds on its own.
-  private def evictOldest(): Unit = {
-    var oldKey: K = null.asInstanceOf[K]
-    var oldStamp = Long.MaxValue
-    val it = map.entrySet.iterator
-    while (it.hasNext) {
-      val en = it.next()
-      if (en.getValue.stamp < oldStamp) { oldStamp = en.getValue.stamp; oldKey = en.getKey }
+  // Called with the lock held. Stamps are read once, as hits may move them
+  // during the sort; the entry just inserted stays, as it fits both bounds
+  // on its own.
+  private def evictAllBut(key: K): Unit = {
+    val lowEntries = maxEntries - maxEntries / 10
+    val lowBytes = maxBytes - maxBytes / 10
+    val old = map.entrySet.asScala.iterator.filter(_.getKey != key)
+      .map(en => (en.getValue.stamp, en.getKey)).toArray.sortBy(_._1)
+    var i = 0
+    while (i < old.length && (map.size > lowEntries || totalBytes > lowBytes)) {
+      totalBytes -= map.remove(old(i)._2).bytes
+      evicted += 1
+      i += 1
     }
-    totalBytes -= map.remove(oldKey).bytes
-    evicted += 1
   }
 }

@@ -350,13 +350,15 @@ class S2JoinsSpec extends AnyFunSuite {
   test("regionTileCounts builds its indexes once per region/tile content") {
     def counts(df: DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSet
-    def compositional(d: DataFrame, ts: Seq[(Int, Array[Long])]) = counts(S2Joins.tileAssign(
-      S2Joins.broadcastContainsJoin(d, graft.Bench.benchRegions), ts)
-      .groupBy("qid", "tile_id").count())
+    def compositional(d: DataFrame, ts: Seq[(Int, Array[Long])],
+                      rs: Seq[(Int, S2Region)] = graft.Bench.benchRegions) = counts(
+      S2Joins.tileAssign(S2Joins.broadcastContainsJoin(d, rs), ts)
+        .groupBy("qid", "tile_id").count())
     // benchRegions and benchTiles build new, equal objects on every call;
     // maxCellsPerRegion 63 keys these calls apart from the other tests'
-    def fusedNow(d: DataFrame, ts: Seq[(Int, Array[Long])] = graft.Bench.benchTiles) =
-      counts(S2Joins.regionTileCounts(d, graft.Bench.benchRegions, ts, maxCellsPerRegion = 63))
+    def fusedNow(d: DataFrame, ts: Seq[(Int, Array[Long])] = graft.Bench.benchTiles,
+                 rs: Seq[(Int, S2Region)] = graft.Bench.benchRegions) =
+      counts(S2Joins.regionTileCounts(d, rs, ts, maxCellsPerRegion = 63))
     val builds = S2Joins.fusedIndexBuilds.get
     val first = fusedNow(docs)
     assert(fusedNow(docs) == first && first == compositional(docs, graft.Bench.benchTiles))
@@ -372,13 +374,23 @@ class S2JoinsSpec extends AnyFunSuite {
     assert(edited != first && edited == compositional(docs, tiles))
     assert(S2Joins.fusedIndexBuilds.get == builds + 2)
 
-    // a second session over the same docs reuses the indexes, not the scan
+    // editing a cell-union region's ids in place between calls
+    val cells = new S2CellUnionRegion(graft.Bench.benchTiles.find(_._1 == 0).get._2)
+    val cellRegions = Seq(5 -> (cells: S2Region))
+    val before = fusedNow(docs, rs = cellRegions)
+    assert(before.nonEmpty && before == compositional(docs, graft.Bench.benchTiles, cellRegions))
+    cells.ids(0) = graft.Bench.benchTiles.find(_._1 == 1).get._2(0)
+    val after = fusedNow(docs, rs = cellRegions)
+    assert(after != before && after == compositional(docs, graft.Bench.benchTiles, cellRegions))
+    val builds2 = S2Joins.fusedIndexBuilds.get
+
+    // a second session over the same docs reuses the indexes
     val other = spark.newSession()
     val rows = docs.select("doc_id", "lat", "lng")
     val otherDocs = other.createDataFrame(
       java.util.Arrays.asList(rows.collect(): _*), rows.schema)
     assert(fusedNow(otherDocs) == first)
-    assert(S2Joins.fusedIndexBuilds.get == builds + 2)
+    assert(S2Joins.fusedIndexBuilds.get == builds2)
 
     // a parquet table is read column batch by batch, null coordinates too
     import spark.implicits._
@@ -390,6 +402,21 @@ class S2JoinsSpec extends AnyFunSuite {
     assert(fusedNow(table) == first)
     assert(compositional(S2Joins.withCellId(table, col("lat"), col("lng")),
       graft.Bench.benchTiles) == first)
+
+    // a catalog table appended to between two calls on one DataFrame
+    // object: the second call reads the appended files
+    spark.sql("DROP TABLE IF EXISTS fused_append")
+    try {
+      rows.limit(2000).write.saveAsTable("fused_append")
+      val t = spark.table("fused_append")
+      def total(c: Set[(Int, Int, Long)]) = c.toSeq.map(_._3).sum
+      val small = fusedNow(t)
+      rows.write.mode("append").insertInto("fused_append")
+      val grown = fusedNow(t)
+      assert(total(grown) > total(small))
+      assert(grown == compositional(S2Joins.withCellId(t, col("lat"), col("lng")),
+        graft.Bench.benchTiles))
+    } finally spark.sql("DROP TABLE IF EXISTS fused_append")
   }
 
   test("tileAssign picks the containing tile; disjoint level-2 tiling partitions all docs") {
