@@ -30,9 +30,6 @@ final class CellIntervalIndex private (
 
   def size: Int = segStart.length
 
-  /** Approximate heap bytes of the arrays, for cache weighing. */
-  def bytes: Long = 20L * segStart.length + 5L * entryLabel.length + 64L
-
   // ---- allocation-free direct accessors (hot codegen kernels loop over
   // segment entries without closures or array copies) ----
   /** Index of the segment containing `ord`, or -1 (public hot-path form). */

@@ -39,8 +39,7 @@ import graft.functions.{S2, S2SpatialKernels}
   * plan ships the index of [[regionHits]], the closure those of
   * [[regionTileCounts]]); no call leaves a broadcast behind. The fused
   * pass also rejects docs outside every region's rect bound on a 1°
-  * [[LatLngGrid]] before any trig, and caches its indexes by region/tile
-  * content (≤ 32 entries, ≤ 64 MB).
+  * [[LatLngGrid]] before any trig.
   *
   * All joins carry every payload column (notably `spans`) untouched —
   * the span-sequence invariant is preserved structurally because spans are
@@ -232,17 +231,13 @@ object S2Joins {
     * the region count: most docs of a large table fall in no region and
     * stop there. Rows with NaN or out-of-range coordinates skip the probe.
     *
-    * The stab and tile indexes and the grid are built once per region/tile
-    * content and kept in a cache of at most 32 entries and 64 MB, so a
-    * repeated call with equal regions and tiles (new objects or not) skips
-    * the build. Regions are keyed by value: caps and rects as they are,
-    * loops and polygons by their vertices, cell unions by their ids,
-    * unions and intersections by their members; a call with any other
-    * region type builds afresh. The indexes ride the task closure to the
-    * executors, as [[regionHits]]' index rides its plan. The `(lat, lng)`
-    * scan is planned on every call, so it reads the input's current files.
-    * A bare columnar scan of two double columns (a parquet table) is read
-    * batch by batch; any other plan row by row.
+    * Each call builds the stab and tile indexes and the grid from its
+    * regions and tiles as they are then, and plans its `(lat, lng)` scan
+    * afresh, so it reads the input's current files; nothing is kept
+    * between calls. The indexes ride the task closure to the executors, as
+    * [[regionHits]]' index rides its plan. A bare columnar scan of two
+    * double columns (a parquet table) is read batch by batch; any other
+    * plan row by row.
     *
     * Region labels are distinct; labels and tile ids may be negative or
     * sparse. Both indexes are keyed by slot 0..n-1, tiles sorted by id (a
@@ -257,14 +252,18 @@ object S2Joins {
     val tileArr = tiles.groupBy(_._1).toArray.sortBy(_._1)
       .map { case (id, ts) => (id, ts.flatMap(_._2).toArray) }
     val regArr = regions.map(_._2).toArray
-    val fused = fusedInputs(regArr, tileArr, maxCellsPerRegion)
+    val regIndex = CellIntervalIndex.fromRegions(
+      regArr.indices.map(i => (i, regArr(i))), maxCellsPerRegion)
+    val tileIndex =
+      CellIntervalIndex.build(tileArr.indices.map(i => (i, tileArr(i)._2, Array.empty[Long])))
+    val grid = LatLngGrid.of(regArr.map(_.rectBound))
     val nR = regions.length; val nT = tileArr.length
 
     // null lat/lng rows are dropped — matching the compositional plan,
     // whose null-intolerant native expressions never emit them
     val merged = (latLngScan(docs, latCol, lngCol) match {
       case Left(batches) => batches.mapPartitions { it =>
-        val c = new FusedCounts(fused, regArr, nT)
+        val c = new FusedCounts(regArr, regIndex, tileIndex, grid, nT)
         while (it.hasNext) {
           val b = it.next(); val la = b.column(0); val ln = b.column(1)
           var i = 0
@@ -276,7 +275,7 @@ object S2Joins {
         Iterator.single(c.counts)
       }
       case Right(rows) => rows.mapPartitions { it =>
-        val c = new FusedCounts(fused, regArr, nT)
+        val c = new FusedCounts(regArr, regIndex, tileIndex, grid, nT)
         while (it.hasNext) {
           val r = it.next()
           if (!r.isNullAt(0) && !r.isNullAt(1)) c.add(r.getDouble(0), r.getDouble(1))
@@ -296,11 +295,9 @@ object S2Joins {
 
   /** One partition's |regions|×(|tiles|+1) count matrix of the fused
     * pass; slot layout region-slot * (nT + 1) + tile-slot, the last column
-    * is the outside-all-tiles default. `regs` are the call's regions, for
-    * the exact refine. */
-  private final class FusedCounts(f: FusedInputs, regs: Array[S2Region], nT: Int) {
-    private val rIdx = f.regIndex; private val tIdx = f.tileIndex
-    private val grid = f.grid
+    * is the outside-all-tiles default. */
+  private final class FusedCounts(regs: Array[S2Region], rIdx: CellIntervalIndex,
+                                  tIdx: CellIntervalIndex, grid: LatLngGrid, nT: Int) {
     val counts = new Array[Long](regs.length * (nT + 1))
 
     def add(lat: Double, lng: Double): Unit = if (grid.mayContain(lat, lng)) {
@@ -338,9 +335,9 @@ object S2Joins {
     }
   }
 
-  /** The docs' (lat, lng) in degrees: the scan's column
-    * batches when the plan is a bare columnar scan of two double columns
-    * (no row conversion, and no per-row buffering in a codegen iterator),
+  /** The docs' (lat, lng) in degrees: the scan's column batches when the
+    * plan is a bare columnar scan of two double columns (no row
+    * conversion, and no per-row buffering in a codegen iterator),
     * otherwise the rows of the projection cast to double. */
   private def latLngScan(docs: DataFrame, latCol: String, lngCol: String)
       : Either[RDD[ColumnarBatch], RDD[InternalRow]] = {
@@ -359,64 +356,6 @@ object S2Joins {
     StructField("qid", IntegerType, nullable = false),
     StructField("tile_id", IntegerType, nullable = false),
     StructField("count", LongType, nullable = false)))
-
-  /** The driver-built inputs of [[regionTileCounts]], slot-indexed;
-    * `bytes` is their approximate heap size with their cache key's. */
-  private final case class FusedInputs(regIndex: CellIntervalIndex, tileIndex: CellIntervalIndex,
-                                       grid: LatLngGrid, bytes: Long)
-
-  private val fusedIndexes =
-    new graft.runtime.BoundedCache[AnyRef, FusedInputs](32, 64L << 20, (_, f) => f.bytes)
-  /** How many times [[regionTileCounts]] has built its indexes. */
-  private[graft] val fusedIndexBuilds = new java.util.concurrent.atomic.AtomicLong()
-
-  private def fusedInputs(regions: Array[S2Region], tiles: Array[(Int, Array[Long])],
-                          maxCellsPerRegion: Int): FusedInputs = {
-    def build(keyBytes: Long) = {
-      fusedIndexBuilds.incrementAndGet()
-      val regIndex = CellIntervalIndex.fromRegions(
-        regions.indices.map(i => (i, regions(i))), maxCellsPerRegion)
-      val tileIndex =
-        CellIntervalIndex.build(tiles.indices.map(i => (i, tiles(i)._2, Array.empty[Long])))
-      // the grid's 8 KB and the key's copies
-      FusedInputs(regIndex, tileIndex, LatLngGrid.of(regions.map(_.rectBound)),
-        regIndex.bytes + tileIndex.bytes + 8192L + keyBytes)
-    }
-    val regionKeys = regions.toSeq.map(contentKey)
-    if (regionKeys.contains(None)) build(0L)
-    else {
-      // copies of the tile cells, so later edits to a caller's array miss
-      val key = (maxCellsPerRegion, regionKeys, tiles.toSeq.map { case (id, cells) => (id, cells.toSeq) })
-      Option(fusedIndexes.get(key)).getOrElse(fusedIndexes.put(key,
-        build(8L * tiles.map(_._2.length + 2L).sum + regions.map(keyWeight).sum)))
-    }
-  }
-
-  /** A region's content as a cache key, or None for a region type it does
-    * not know. Arrays are copied, so editing a region in place afterwards
-    * gives a different key. */
-  private def contentKey(r: S2Region): Option[AnyRef] = r match {
-    case _: S2Cap | _: S2LatLngRect => Some(r)
-    case l: S2Loop => Some((l.vertices.toSeq, l.originInside, l.bound, l.subregionBound))
-    case p: S2Polygon => Some(("polygon", p.loops.toSeq.flatMap(contentKey)))
-    case c: S2CellUnionRegion => Some(("cells", c.ids.toSeq))
-    case S2RegionUnion(rs) => members(rs).map(("union", _))
-    case S2RegionIntersection(rs) => members(rs).map(("intersection", _))
-    case _ => None
-  }
-  private def members(rs: Seq[S2Region]): Option[Seq[AnyRef]] = {
-    val ks = rs.map(contentKey)
-    if (ks.contains(None)) None else Some(ks.flatten)
-  }
-  /** Approximate bytes of a region's key: ~48 per vertex, 8 per cell id. */
-  private def keyWeight(r: S2Region): Long = 64L + (r match {
-    case l: S2Loop => 48L * l.numVertices
-    case p: S2Polygon => p.loops.map(keyWeight(_)).sum
-    case c: S2CellUnionRegion => 8L * c.ids.length
-    case S2RegionUnion(rs) => rs.map(keyWeight).sum
-    case S2RegionIntersection(rs) => rs.map(keyWeight).sum
-    case _ => 0L
-  })
 
   // =======================================================================
   // 4. kNN join (S2ClosestPointQuery semantics)
