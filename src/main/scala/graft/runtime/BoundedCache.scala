@@ -55,19 +55,19 @@ final class BoundedCache[K <: AnyRef, V <: AnyRef](maxEntries: Int, maxBytes: Lo
         map.put(key, new Entry(value, w, clock + 1))
         clock += 2
         totalBytes += w
-        if (map.size > maxEntries || totalBytes > maxBytes) evictAllBut(key)
+        if (map.size > maxEntries || totalBytes > maxBytes) evictOldest(keep = key)
         value
       }
     }
   }
 
   // Called with the lock held. Stamps are read once, as hits may move them
-  // during the sort; the entry just inserted stays, as it fits both bounds
-  // on its own.
-  private def evictAllBut(key: K): Unit = {
+  // during the sort; `keep`, the entry just inserted, stays, as it fits
+  // both bounds on its own.
+  private def evictOldest(keep: K): Unit = {
     val lowEntries = maxEntries - maxEntries / 10
     val lowBytes = maxBytes - maxBytes / 10
-    val old = map.entrySet.asScala.iterator.filter(_.getKey != key)
+    val old = map.entrySet.asScala.iterator.filter(_.getKey != keep)
       .map(en => (en.getValue.stamp, en.getKey)).toArray.sortBy(_._1)
     var i = 0
     while (i < old.length && (map.size > lowEntries || totalBytes > lowBytes)) {
