@@ -377,7 +377,7 @@ object Bench {
     def sessionReps(cores: Int): Session = {
       val s = session(cores, aqeOff)
       val docs = s.read.parquet(docsPath)
-      val warm = pipeline(docs) // warmup (JIT, codegen, broadcast)
+      val warm = pipeline(docs) // warmup (JIT, codegen)
       // cross-parallelism equality gate: lo and hi sessions must agree
       if (!matchedSet) { matched = warm; matchedSet = true }
       else require(warm == matched,

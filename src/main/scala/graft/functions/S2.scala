@@ -268,7 +268,8 @@ object S2 {
 
 /** Per-executor cache of parsed polygons (polygon text is typically a
   * small query-side dimension; parsing once per executor, not per row).
-  * Least-recently-used beyond 10k polygons or 64 MB; a hit takes no lock. */
+  * Cleared when an insert would pass 10k polygons or 64 MB; a hit takes no
+  * lock. */
 object PolyCache {
   private val cache = new graft.runtime.BoundedCache[String, S2Polygon](10000, 64L << 20,
     // the text's chars, ~48 bytes per vertex (V3 + array slot), loop bounds

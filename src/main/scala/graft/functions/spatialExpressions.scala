@@ -27,7 +27,7 @@ import graft.core._
   * default scheme, [[S2SpatialKernels.indexer]]. [[S2PointIndexTermsExpr]]
   * carries its indexer as a non-child field (same default), which
   * generated code reaches as a reference object (as [[S2StabMatch]] ships
-  * its index), so a caller-chosen document scheme survives whole-stage
+  * its stab), so a caller-chosen document scheme survives whole-stage
   * codegen. Plans print only its children: the indexer has no stable
   * string form. */
 

@@ -15,10 +15,13 @@ import graft.core._
   * (a covering of a hemisphere produces ~2^61-wide intervals; any
   * "bounded backward scan" scheme collapses to O(n) there).
   *
-  * This structure is small (≤ ~1M segments) and is *broadcast* to
-  * executors; it turns a spatial join against a modest region/tile set
-  * into a narrow, shuffle-free map over the big table — the plan we want
-  * at 100 TB whenever one side fits in memory.
+  * This structure is small (≤ ~1M segments) and rides the serialized plan
+  * or task closure to executors; it turns a spatial join against a modest
+  * region/tile set into a narrow, shuffle-free map over the big table —
+  * the plan we want at 100 TB whenever one side fits in memory.
+  *
+  * [[RegionStab]] and [[TileStab]] wrap it in the two per-row rules of the
+  * flagship query; every stab-and-refine and tile choice goes through them.
   */
 final class CellIntervalIndex private (
     private val segStart: Array[Long],        // disjoint segment starts (sorted)
@@ -184,5 +187,71 @@ object CellIntervalIndex {
     build(regions.map { case (lab, r) =>
       (lab, cov.getCovering(r), cov.getInteriorCovering(r))
     })
+  }
+}
+
+/** S2's covering join for one doc: an interior covering cell hits without
+  * a test, any other candidate gets the exact `contains`. Slots are the
+  * sorted region labels, so hits in slot order are hits in label order.
+  * Labels must be distinct: one label, one region to refine against. */
+final class RegionStab(regions: Seq[(Int, S2Region)], maxCells: Int = 64)
+    extends Serializable {
+  private val sorted = regions.sortBy(_._1).toArray
+  require(sorted.indices.forall(i => i == 0 || sorted(i - 1)._1 != sorted(i)._1),
+    "region labels must be distinct")
+  /** Label of each slot, ascending. */
+  val labels: Array[Int] = sorted.map(_._1)
+  private val regs: Array[S2Region] = sorted.map(_._2)
+  private val index = CellIntervalIndex.fromRegions(regs.indices.map(i => (i, regs(i))), maxCells)
+
+  def size: Int = labels.length
+
+  /** Writes the slots of the regions containing the point (degrees) of
+    * leaf order key `ord` to `out` (length ≥ [[size]]) in ascending order
+    * and returns their count. Allocation-free unless an entry needs the
+    * exact test, which builds the point once per row. */
+  def hits(ord: Long, lat: Double, lng: Double, out: Array[Int]): Int = {
+    val s = index.segmentOf(ord)
+    if (s < 0) return 0
+    var n = 0
+    var p: V3 = null
+    var e = index.entryBegin(s)
+    val end = index.entryEnd(s)
+    while (e < end) {
+      val slot = index.labelAt(e)
+      val hit = index.interiorAt(e) || {
+        if (p == null) p = V3.fromLatLngDegrees(lat, lng)
+        regs(slot).contains(p)
+      }
+      if (hit) { out(n) = slot; n += 1 }
+      e += 1
+    }
+    n
+  }
+}
+
+/** S2RegionSharder's tile choice for one cell: a unique containing tile is
+  * taken directly, otherwise the most-intersecting tile wins, ties to the
+  * smallest id. Slots are the sorted distinct tile ids; the cells of a
+  * repeated id are merged. */
+final class TileStab(tiles: Seq[(Int, Array[Long])]) extends Serializable {
+  /** Tile id of each slot, ascending. */
+  val ids: Array[Int] = tiles.map(_._1).distinct.sorted.toArray
+  private val index = {
+    val slotOfId = ids.zipWithIndex.toMap
+    CellIntervalIndex.build(tiles.map { case (id, cells) => (slotOfId(id), cells, Array.empty[Long]) })
+  }
+
+  def size: Int = ids.length
+
+  /** Slot of the tile `cellId` falls in, or -1 outside every tile. */
+  def slotOf(cellId: Long): Int = {
+    val s = index.segmentOf(S2CellId.orderKey(cellId))
+    if (s < 0) -1
+    else {
+      val b = index.entryBegin(s)
+      if (index.entryEnd(s) - b == 1) index.labelAt(b)
+      else index.mostIntersecting(Array(cellId), -1)
+    }
   }
 }

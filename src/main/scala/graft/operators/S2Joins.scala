@@ -14,13 +14,12 @@ import graft.functions.{S2, S2SpatialKernels}
   * operators (SURVEY.md §2.10). Two physical strategies for region joins,
   * chosen by the caller:
   *
-  *  1. broadcast  — regions side fits in memory: build a
-  *     [[CellIntervalIndex]] of all region coverings, broadcast it, and
-  *     stab it with each doc's leaf cell. Zero shuffle over the big side;
-  *     exact refine runs only on candidates whose covering cell was not an
-  *     interior cell. This is the 100 TB plan whenever the dimension side
-  *     is ≤ ~1M covering cells (the common case: country/tile/geofence
-  *     tables).
+  *  1. broadcast  — regions side fits in memory: a [[RegionStab]] over
+  *     all region coverings ships with the plan and is stabbed with each
+  *     doc's leaf cell. Zero shuffle over the big side; exact refine runs
+  *     only on candidates whose covering cell was not an interior cell.
+  *     This is the 100 TB plan whenever the dimension side is ≤ ~1M
+  *     covering cells (the common case: country/tile/geofence tables).
   *
   *  2. terms      — both sides large: S2RegionTermIndexer semantics
   *     (/root/reference/src/s2/s2region_term_indexer.cc:27-72): docs emit
@@ -30,13 +29,14 @@ import graft.functions.{S2, S2SpatialKernels}
   *     hash/sort-merge and AQE can skew-split (the one skew mechanism:
   *     no join rewrites its keys), followed by the exact refine.
   *
-  * The same two shapes carry tile assignment ([[tileAssign]], fused with
-  * the broadcast join in [[regionTileCounts]]) and the kNN joins
+  * The same two shapes carry tile assignment ([[tileAssign]], by a
+  * [[TileStab]]; fused with the broadcast join in [[regionTileCounts]],
+  * which runs the same two per-row kernels) and the kNN joins
   * ([[knnJoin]] broadcasts the targets, [[knnJoinLarge]] runs a radius
   * ladder of term joins).
   *
   * Dimension-side indexes ride the serialized plan or task closure (the
-  * plan ships the index of [[regionHits]], the closure those of
+  * plan ships the stab of [[regionHits]], the closure those of
   * [[regionTileCounts]]); no call leaves a broadcast behind. The fused
   * pass also rejects docs outside every region's rect bound on a 1°
   * [[LatLngGrid]] before any trig.
@@ -68,7 +68,9 @@ object S2Joins {
     *
     * @param docs     must carry `cell_id` (see withCellId) + point source
     *                 columns latCol/lngCol for the exact refine
-    * @param regions  labeled regions, broadcast as covering intervals
+    * @param regions  labeled regions, shipped with the plan as covering
+    *                 intervals; labels must be distinct (a repeated label
+    *                 throws IllegalArgumentException)
     * @return docs rows × matching region label (column `qid`), all doc
     *         columns preserved.
     */
@@ -84,15 +86,15 @@ object S2Joins {
   /** The labels of the regions containing each row's point (null for a
     * row with a null `cell_ord`, lat or lng): one native stab-and-refine
     * expression per row (codegen, no arg boxing) over the rows'
-    * `cell_ord`; interior covering cells skip the exact test. The index
-    * rides the serialized plan (small: dimension-side coverings). */
+    * `cell_ord`; interior covering cells skip the exact test. Labels must
+    * be distinct. The [[RegionStab]] rides the serialized plan (small:
+    * dimension-side coverings). */
   private[graft] def regionHits(regions: Seq[(Int, S2Region)], latCol: String,
                                 lngCol: String, maxCellsPerRegion: Int = 64): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
     toCol(graft.functions.S2StabMatch(
       toExpr(col("cell_ord")), toExpr(col(latCol).cast("double")),
-      toExpr(col(lngCol).cast("double")),
-      CellIntervalIndex.fromRegions(regions, maxCellsPerRegion), regions.toArray))
+      toExpr(col(lngCol).cast("double")), new RegionStab(regions, maxCellsPerRegion)))
   }
 
   // =======================================================================
@@ -200,15 +202,13 @@ object S2Joins {
   /** Assign each doc to the tile whose cell union contains its leaf cell
     * (most-intersecting on ties — S2RegionSharder
     * GetMostIntersectingShard, /root/reference/src/s2/s2region_sharder.cc:32-153).
-    * Tiles broadcast; narrow map over docs; `default` for docs outside all
-    * tiles. */
+    * The [[TileStab]] rides the serialized plan; narrow map over docs;
+    * `default` for docs outside all tiles. */
   def tileAssign(docs: DataFrame, tiles: Seq[(Int, Array[Long])],
                  default: Int = -1): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    val index = CellIntervalIndex.build(
-      tiles.map { case (id, cells) => (id, cells, Array.empty[Long]) })
     docs.withColumn("tile_id",
-      toCol(graft.functions.S2TileAssign(toExpr(col("cell_id")), index, default)))
+      toCol(graft.functions.S2TileAssign(toExpr(col("cell_id")), new TileStab(tiles), default)))
   }
 
   /** Fused covering+PIP join → tile assignment → per-(region, tile)
@@ -231,39 +231,34 @@ object S2Joins {
     * the region count: most docs of a large table fall in no region and
     * stop there. Rows with NaN or out-of-range coordinates skip the probe.
     *
-    * Each call builds the stab and tile indexes and the grid from its
-    * regions and tiles as they are then, and plans its `(lat, lng)` scan
-    * afresh, so it reads the input's current files; nothing is kept
-    * between calls. The indexes ride the task closure to the executors, as
-    * [[regionHits]]' index rides its plan. A bare columnar scan of two
-    * double columns (a parquet table) is read batch by batch; any other
-    * plan row by row.
+    * Each row then takes the same two kernels as the compositional plan:
+    * [[RegionStab.hits]] for the regions containing it and
+    * [[TileStab.slotOf]] for its tile. Each call builds the stab, the tile
+    * stab and the grid from its regions and tiles as they are then, and
+    * plans its `(lat, lng)` scan afresh, so it reads the input's current
+    * files; nothing is kept between calls. Both stabs ride the task
+    * closure to the executors, as [[regionHits]]' stab rides its plan. A
+    * bare columnar scan of two double columns (a parquet table) is read
+    * batch by batch; any other plan row by row.
     *
-    * Region labels are distinct; labels and tile ids may be negative or
-    * sparse. Both indexes are keyed by slot 0..n-1, tiles sorted by id (a
-    * repeated id's cells merged), so a most-intersecting tie still goes to
-    * the smallest tile id.
+    * Region labels must be distinct; labels and tile ids may be negative
+    * or sparse, and a repeated tile id's cells are merged.
     *
     * Executes EAGERLY (runs a job) and returns a small local DataFrame. */
   def regionTileCounts(docs: DataFrame, regions: Seq[(Int, S2Region)],
                        tiles: Seq[(Int, Array[Long])],
                        latCol: String = "lat", lngCol: String = "lng",
                        maxCellsPerRegion: Int = 64): DataFrame = {
-    val tileArr = tiles.groupBy(_._1).toArray.sortBy(_._1)
-      .map { case (id, ts) => (id, ts.flatMap(_._2).toArray) }
-    val regArr = regions.map(_._2).toArray
-    val regIndex = CellIntervalIndex.fromRegions(
-      regArr.indices.map(i => (i, regArr(i))), maxCellsPerRegion)
-    val tileIndex =
-      CellIntervalIndex.build(tileArr.indices.map(i => (i, tileArr(i)._2, Array.empty[Long])))
-    val grid = LatLngGrid.of(regArr.map(_.rectBound))
-    val nR = regions.length; val nT = tileArr.length
+    val stab = new RegionStab(regions, maxCellsPerRegion)
+    val tileStab = new TileStab(tiles)
+    val grid = LatLngGrid.of(regions.map(_._2.rectBound))
+    val nT = tileStab.size
 
     // null lat/lng rows are dropped — matching the compositional plan,
     // whose null-intolerant native expressions never emit them
     val merged = (latLngScan(docs, latCol, lngCol) match {
       case Left(batches) => batches.mapPartitions { it =>
-        val c = new FusedCounts(regArr, regIndex, tileIndex, grid, nT)
+        val c = new FusedCounts(stab, tileStab, grid)
         while (it.hasNext) {
           val b = it.next(); val la = b.column(0); val ln = b.column(1)
           var i = 0
@@ -275,7 +270,7 @@ object S2Joins {
         Iterator.single(c.counts)
       }
       case Right(rows) => rows.mapPartitions { it =>
-        val c = new FusedCounts(regArr, regIndex, tileIndex, grid, nT)
+        val c = new FusedCounts(stab, tileStab, grid)
         while (it.hasNext) {
           val r = it.next()
           if (!r.isNullAt(0) && !r.isNullAt(1)) c.add(r.getDouble(0), r.getDouble(1))
@@ -286,51 +281,28 @@ object S2Joins {
       var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
     }
 
-    val labels = regions.map(_._1).toArray
     val rows = new java.util.ArrayList[Row]()
-    for (ri <- 0 until nR; ti <- 0 to nT; c = merged(ri * (nT + 1) + ti) if c > 0)
-      rows.add(Row(labels(ri), if (ti < nT) tileArr(ti)._1 else -1, c))
+    for (ri <- 0 until stab.size; ti <- 0 to nT; c = merged(ri * (nT + 1) + ti) if c > 0)
+      rows.add(Row(stab.labels(ri), if (ti < nT) tileStab.ids(ti) else -1, c))
     docs.sparkSession.createDataFrame(rows, RegionTileCountsSchema)
   }
 
   /** One partition's |regions|×(|tiles|+1) count matrix of the fused
     * pass; slot layout region-slot * (nT + 1) + tile-slot, the last column
     * is the outside-all-tiles default. */
-  private final class FusedCounts(regs: Array[S2Region], rIdx: CellIntervalIndex,
-                                  tIdx: CellIntervalIndex, grid: LatLngGrid, nT: Int) {
-    val counts = new Array[Long](regs.length * (nT + 1))
+  private final class FusedCounts(stab: RegionStab, tiles: TileStab, grid: LatLngGrid) {
+    private val nT = tiles.size
+    private val slots = new Array[Int](stab.size)
+    val counts = new Array[Long](stab.size * (nT + 1))
 
     def add(lat: Double, lng: Double): Unit = if (grid.mayContain(lat, lng)) {
-      // one trig evaluation per row: the unit vector feeds BOTH the cell id
-      // (S2CellId.fromPoint = fromLatLngDegrees bit-exactly) and the exact
-      // refine
-      val p = V3.fromLatLngDegrees(lat, lng)
-      val cellId = S2CellId.fromPoint(p.x, p.y, p.z)
-      val ord = S2CellId.orderKey(cellId)
-      val seg = rIdx.segmentOf(ord)
-      if (seg >= 0) {
-        var e = rIdx.entryBegin(seg)
-        val end = rIdx.entryEnd(seg)
-        var tileSlotOfRow = -2 // lazily resolved once per matching row
-        while (e < end) {
-          val slot = rIdx.labelAt(e)
-          val hit = rIdx.interiorAt(e) || regs(slot).contains(p)
-          if (hit) {
-            if (tileSlotOfRow == -2) {
-              val ts = tIdx.segmentOf(ord)
-              tileSlotOfRow =
-                if (ts < 0) -1
-                else {
-                  val b = tIdx.entryBegin(ts)
-                  if (tIdx.entryEnd(ts) - b == 1) tIdx.labelAt(b)
-                  else tIdx.mostIntersecting(Array(cellId), -1)
-                }
-            }
-            val col = if (tileSlotOfRow >= 0) tileSlotOfRow else nT
-            counts(slot * (nT + 1) + col) += 1L
-          }
-          e += 1
-        }
+      val cellId = S2CellId.fromLatLngDegrees(lat, lng)
+      val n = stab.hits(S2CellId.orderKey(cellId), lat, lng, slots)
+      if (n > 0) {
+        val t = tiles.slotOf(cellId)
+        val col = if (t >= 0) t else nT
+        var i = 0
+        while (i < n) { counts(slots(i) * (nT + 1) + col) += 1L; i += 1 }
       }
     }
   }

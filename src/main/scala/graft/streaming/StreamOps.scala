@@ -37,8 +37,9 @@ object StreamOps {
       .agg(count(lit(1)).as("weight"))
 
   /** Streaming region hit-stream: tag each event with the region labels
-    * whose covering contains it (broadcast interval index — same
-    * zero-shuffle plan as the batch join, applied continuously). */
+    * that contain it (the [[graft.operators.RegionStab]] rides the
+    * serialized plan — same zero-shuffle plan as the batch join, applied
+    * continuously). Labels must be distinct. */
   def streamingContainsTag(stream: DataFrame, regions: Seq[(Int, S2Region)],
                            latCol: String = "lat", lngCol: String = "lng"): DataFrame =
     stream.withColumn("region_hits", S2Joins.regionHits(regions, latCol, lngCol))

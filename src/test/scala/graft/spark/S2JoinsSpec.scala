@@ -52,7 +52,10 @@ class S2JoinsSpec extends AnyFunSuite {
       1 -> S2Cap.fromCenterAngle(V3.fromLatLngDegrees(10, 20), 0.15),
       2 -> S2LatLngRect.fromDegrees(-25, 100, 5, 140),
       3 -> S2TextFormat.parsePolygon("0:0, 0:35, 30:35, 30:0"),
-      4 -> S2Cap.fromCenterAngle(V3.fromLatLngDegrees(-80, 0), 0.3))
+      4 -> S2Cap.fromCenterAngle(V3.fromLatLngDegrees(-80, 0), 0.3),
+      // a negative and a large sparse label, each overlapping another region
+      -7 -> S2LatLngRect.fromDegrees(5, 10, 25, 40),
+      5000 -> S2Cap.fromCenterAngle(V3.fromLatLngDegrees(-15, 125), 0.2))
     val got = S2Joins.broadcastContainsJoin(docs, regions)
       .select("doc_id", "qid").collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
@@ -62,7 +65,11 @@ class S2JoinsSpec extends AnyFunSuite {
       if reg.contains(V3.fromLatLngDegrees(lat, lng))
     } yield (id, q)).toSet
     assert(got == want)
-    assert(want.nonEmpty)
+    assert(regions.forall { case (q, _) => want.exists(_._2 == q) })
+    // one label, one region: a repeated label is refused, not refined
+    // against only one of its regions
+    intercept[IllegalArgumentException](S2Joins.broadcastContainsJoin(docs,
+      regions :+ (1 -> S2LatLngRect.fromDegrees(-10, -10, 10, 10))))
   }
 
   test("composite regions (union/intersection) join like their pointwise combination") {
@@ -427,6 +434,21 @@ class S2JoinsSpec extends AnyFunSuite {
     rows.foreach { r =>
       assert(cellToTile(S2CellId.parent(r.getLong(0), 2)) == r.getInt(1))
     }
+    // overlapping tiles: 99 over a level-1 cell, -5 over one of its
+    // children, on top of the tiling. Every tile containing a leaf
+    // overlaps it by weight 1, so the leaf goes to the smallest containing
+    // id (the default only outside every tile, here never).
+    val face = S2CellId.parent(S2CellId.fromLatLngDegrees(15, 17), 1)
+    val overlapping = tiles ++ Seq(99 -> Array(face), -5 -> Array(S2CellId.child(face, 2)))
+    val got = S2Joins.tileAssign(docs, overlapping).select("cell_id", "tile_id").collect()
+    val want = got.map { r =>
+      val ids = overlapping.collect {
+        case (tid, cs) if cs.exists(S2CellId.contains(_, r.getLong(0))) => tid }
+      if (ids.isEmpty) -1 else ids.min
+    }
+    assert(got.map(_.getInt(1)).toSeq == want.toSeq)
+    assert(want.contains(-5) && got.exists(r =>
+      S2CellId.contains(face, r.getLong(0)) && r.getInt(1) != -5))
   }
 
   test("density rollup sums to doc count; equal-weight repartition balances skew") {
