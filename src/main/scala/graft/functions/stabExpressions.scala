@@ -27,8 +27,8 @@ case class S2StabMatch(first: Expression, second: Expression, third: Expression,
     ThreadLocal.withInitial(() => new Array[Int](stab.size))
 
   def kernel(cellOrd: Long, lat: Double, lng: Double): ArrayData = {
-    // allocation-free on misses except the shared empty result: GC
-    // pressure from this kernel was the measured 32-thread scaling limiter
+    // a miss allocates nothing, a hit only its result: GC pressure from
+    // this kernel was the measured 32-thread scaling limiter
     val slots = scratch.get()
     val n = stab.hits(cellOrd, lat, lng, slots)
     if (n == 0) S2StabMatch.EmptyArray

@@ -206,10 +206,10 @@ final class RegionStab(regions: Seq[(Int, S2Region)], maxCells: Int = 64)
 
   def size: Int = labels.length
 
-  /** Writes the slots of the regions containing the point (degrees) of
-    * leaf order key `ord` to `out` (length ≥ [[size]]) in ascending order
-    * and returns their count. Allocation-free unless an entry needs the
-    * exact test, which builds the point once per row. */
+  /** Writes to `out` (length ≥ [[size]]), ascending, the slots of the
+    * regions containing the point at `lat`/`lng` degrees, whose leaf cell
+    * has order key `ord`, and returns their count. Allocation-free unless
+    * an entry needs the exact test, which builds the point once per row. */
   def hits(ord: Long, lat: Double, lng: Double, out: Array[Int]): Int = {
     val s = index.segmentOf(ord)
     if (s < 0) return 0
