@@ -24,13 +24,15 @@ import graft.sources.DocSource
   *
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_FULL (the
   * full artifact, default BENCH/bench_full_<utc-stamp>.json) and
-  * SPARK_GRAFT_BENCH_SIZE (`full`, the default, or `small`). Prints ONE
-  * compact JSON line last:
+  * SPARK_GRAFT_BENCH_SIZE (`full`, the default, or `small`). Prints one
+  * compact JSON line per checkpoint, the final one last:
   *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},
   *    "pipeline":{"docs":…,"docs_per_sec_hi":…,…}, …,
-  *    "phase_s":{"<phase>":<wall sec>,…}, "sf":"…"}
-  * A headline query that throws is recorded as {"error":"<msg>"} and left
-  * out of `value`.
+  *    "phase_s":{"<phase>":<wall sec>,…}, "sf":"…", "full_json":"…"}
+  * Every line but the last opens with "partial":"<checkpoint>" and holds
+  * what was measured so far, so a killed run leaves its last finished
+  * phase on stdout. A headline query that throws is recorded as
+  * {"error":"<msg>"} and left out of `value`.
   */
 object Bench {
   private val headline = Seq(
@@ -259,16 +261,19 @@ object Bench {
     def phaseJson(round: Double => Double): String =
       phaseSec.map { case (k, v) => s""""$k":${round(v)}""" }.mkString("{", ",", "}")
 
-    // the full artifact's fields in emission order, checkpointed after
-    // each phase: a run killed mid-way (timeout) still leaves a parseable
-    // artifact with everything measured so far and the phases' wall
-    // seconds; the final write replaces the snapshot and drops the
-    // "partial" marker
+    // the full artifact's fields and the compact line's, in emission
+    // order, checkpointed after each phase: a run killed mid-way (timeout)
+    // still leaves a parseable artifact and a compact stdout line with
+    // everything measured so far and the phases' wall seconds; the final
+    // checkpoint replaces the snapshot and drops the "partial" marker.
+    // The compact line stays under 2000 bytes, the stdout tail a caller
+    // captures: every number rounded, no rep arrays and only an error's
+    // class name.
     val artifact = collection.mutable.ArrayBuffer[(String, String)]()
-    def writeArtifact(partial: Option[String]): Unit = {
-      val fields = partial.map(p => "partial" -> jsonStr(p)).toSeq ++ artifact ++
-        Seq("phase_s" -> phaseJson(identity), "sf" -> jsonStr(sfDir))
-      val json = fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val compact = collection.mutable.ArrayBuffer[(String, String)]()
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    def writeArtifact(json: String): Unit = {
       // temp file + atomic rename: a kill mid-write never leaves a
       // truncated artifact in place of the previous snapshot
       try {
@@ -284,6 +289,13 @@ object Bench {
         case e: Exception =>
           System.err.println(s"bench: could not write $fullPath: $e")
       }
+    }
+    def checkpoint(partial: Option[String]): Unit = {
+      val marker = partial.map(p => "partial" -> jsonStr(p)).toSeq
+      writeArtifact(obj(marker ++ artifact ++
+        Seq("phase_s" -> phaseJson(identity), "sf" -> jsonStr(sfDir))))
+      println(obj(marker ++ compact ++ Seq("phase_s" -> phaseJson(r4d),
+        "sf" -> jsonStr(sfDir), "full_json" -> jsonStr(fullPath))))
     }
 
     // ---- phase 1: headline queries at full parallelism ----
@@ -450,7 +462,15 @@ object Bench {
       "headline_cpu_probe_gops" ->
         s"""{"start":${headlineProbeStart / 1e9},"end":${headlineProbeEnd / 1e9}}""",
       "pipeline" -> pipelineJson)
-    writeArtifact(Some("after_scaling"))
+    compact ++= Seq(
+      "metric" -> "\"total\"", "value" -> r4d(total).toString, "unit" -> "\"sec\"",
+      "queries" -> queriesJson(r4d, _.getClass.getSimpleName),
+      "pipeline" ->
+        (s"""{"docs":$benchDocs,"sec_hi":${r4d(tHi)},"sec_lo":${r4d(tLo)},""" +
+        s""""docs_per_sec_hi":${(benchDocs / tHi).toLong},"speedup":${r4d(speedup)},""" +
+        s""""scaling_efficiency":${r4d(efficiency)},"hw_ceiling_speedup":${r4d(hwSpeedup)},""" +
+        s""""scaling_efficiency_vs_hw":${r4d(normEfficiency)}}"""))
+    checkpoint(Some("after_scaling"))
 
     // ---- phase 3: skew-join A/B + kNN fixed-cost amortization ----
     // (round-3 verdict items 3 and 4: prove the term join's skew split
@@ -576,7 +596,8 @@ object Bench {
     endPhase("knn_scale")
 
     artifact ++= Seq("skew_join" -> skewJson, "knn_scale" -> knnScaleJson)
-    writeArtifact(Some("after_skew_knn"))
+    compact += "skew_join" -> skewCompact
+    checkpoint(Some("after_skew_knn"))
 
     // ---- phase 4: scale sweep + forced-spill A/B ----
     // The sweep runs the flagship over a union of k = 2, 3 scans of the
@@ -661,26 +682,10 @@ object Bench {
     }
     endPhase("forced_spill")
 
-    // ---- emit: FULL artifact to a file, ONE compact line (< 2000 bytes,
-    // the driver's tail-capture window) printed LAST ----
-    artifact ++= Seq("scale_sweep" -> sweepJson, "forced_spill" -> forcedSpillJson)
-    writeArtifact(None)
-    // compact final line: every number rounded, no rep arrays and only an
-    // error's class name (the rest lives in the full artifact) — r4's line
-    // overflowed the 2000-byte tail window and the artifact of record was
-    // left unparseable
-    val qsC = queriesJson(r4d, _.getClass.getSimpleName)
-    val compact =
-      s"""{"metric":"total","value":${r4d(total)},"unit":"sec","queries":$qsC,""" +
-      s""""pipeline":{"docs":$benchDocs,"sec_hi":${r4d(tHi)},"sec_lo":${r4d(tLo)},""" +
-      s""""docs_per_sec_hi":${(benchDocs / tHi).toLong},"speedup":${r4d(speedup)},""" +
-      s""""scaling_efficiency":${r4d(efficiency)},"hw_ceiling_speedup":${r4d(hwSpeedup)},""" +
-      s""""scaling_efficiency_vs_hw":${r4d(normEfficiency)}},""" +
-      s""""skew_join":$skewCompact,""" +
-      s""""scale_sweep":$sweepJson,"forced_spill":$forcedSpillJson,""" +
-      s""""phase_s":${phaseJson(r4d)},""" +
-      s""""sf":${jsonStr(sfDir)},"full_json":${jsonStr(fullPath)}}"""
-    println(compact)
+    val sweepAndSpill = Seq("scale_sweep" -> sweepJson, "forced_spill" -> forcedSpillJson)
+    artifact ++= sweepAndSpill
+    compact ++= sweepAndSpill
+    checkpoint(None)
   }
 
   private def r4d(x: Double): Double = math.rint(x * 10000) / 10000

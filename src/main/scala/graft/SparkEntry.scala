@@ -2145,7 +2145,7 @@ object SparkEntry {
       val vars = docs.where(col("doc_id") % 5 === 0)
         .select(concat(lit("v"), col("doc_id")).as("media_ref"),
           pngUdf(col("doc_id"), lit(true)).as("bytes"))
-      Multimodal.mediaNearDupPairsReal(base.unionByName(vars),
+      Multimodal.mediaNearDupPairs(base.unionByName(vars),
         maxHamming = 3, decodeW = 8, decodeH = 8)
     }),
 
@@ -2191,7 +2191,7 @@ object SparkEntry {
       val media = docs.select(concat(lit("w"), col("doc_id")).as("media_ref"),
         aviUdf(col("doc_id")).as("bytes"))
       Multimodal.sceneChanges(
-        Multimodal.frameFeaturesReal(media, framesPerDoc = 4,
+        Multimodal.frameFeatures(media, framesPerDoc = 4,
           targetW = 8, targetH = 8), threshold = 0.05)
     }),
 
@@ -2217,7 +2217,7 @@ object SparkEntry {
       val media = docs.select(concat(lit("j"), col("doc_id")).as("media_ref"),
         aviUdf(col("doc_id")).as("bytes"))
       Multimodal.sceneChanges(
-        Multimodal.frameFeaturesReal(media, framesPerDoc = 4,
+        Multimodal.frameFeatures(media, framesPerDoc = 4,
           targetW = 8, targetH = 8), threshold = 0.05)
         .select(col("media_ref"), col("frame_off"), col("is_cut"))
     }),
@@ -2241,7 +2241,7 @@ object SparkEntry {
       val media = docs.select(concat(lit("m"), col("doc_id")).as("media_ref"),
         mp4Udf(col("doc_id")).as("bytes"))
       Multimodal.sceneChanges(
-        Multimodal.frameFeaturesReal(media, framesPerDoc = 4,
+        Multimodal.frameFeatures(media, framesPerDoc = 4,
           targetW = 8, targetH = 8), threshold = 0.05)
         .select(col("media_ref"), col("frame_off"), col("is_cut"))
     }))

@@ -6,21 +6,16 @@ import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) columns for the interleaved-document
   * pipeline: media as opaque `binary` + typed metadata, with
-  * decode/feature/resize/frame-sample implemented as per-partition batch
-  * transforms.
+  * decode/hash/resize/frame-sample implemented as per-partition transforms.
   *
-  * [[MediaCodec]] carries TWO decode paths behind the same batch seam:
-  * REAL codecs — PNG/JPEG/BMP via javax.imageio, WAV/PCM via
+  * Each media kind has ONE decode path, the real JDK codecs in
+  * [[MediaCodec]]: PNG/JPEG/BMP via javax.imageio, WAV/PCM via
   * javax.sound.sampled, and video through pure-JDK RIFF/AVI and
   * ISO-BMFF/MP4 demuxers (`demuxVideo`) whose Motion-PNG/Motion-JPEG
-  * frames decode via javax.imageio — used by the *Real operators and the
-  * q_media_real / q_media_audio / q_media_video / q_media_mp4 gates, and
-  * a deterministic synthetic decode (seeded by content hash) kept for
-  * parity tests and as the fallback for media the real path cannot parse
-  * (other video codecs would need ffmpeg/javacv behind the identical
-  * batch interface). Everything Spark-side is shared and real: schemas,
-  * batched per-partition execution (one codec context per partition, not
-  * per row), partition sizing, and the metadata/feature column contracts.
+  * frames decode via javax.imageio. The q_media_real / q_media_audio /
+  * q_media_video / q_media_mjpg / q_media_mp4 gates run these paths. The
+  * one synthetic decode left, [[MediaCodec.decodeImage]], is the
+  * perceptual hash's fallback for bytes the JDK cannot parse.
   */
 object Multimodal {
 
@@ -33,14 +28,14 @@ object Multimodal {
       StructField("height", IntegerType, nullable = true),
       StructField("duration_ms", LongType, nullable = true))), nullable = true)))
 
-  /** The codec seam. A real deployment swaps this object for one backed
-    * by javacv/ffmpeg; the interface is BATCH-oriented (decode n buffers
-    * per call) so the Spark plumbing — one codec context per partition,
-    * amortized over a batch — is identical with a real GPU/ffmpeg codec. */
+  /** The codec seam: real JDK encoders, decoders and demuxers, plus the
+    * synthetic [[decodeImage]] that [[Multimodal.perceptualHashes]] falls
+    * back to. A deployment with other codecs swaps in javacv/ffmpeg behind
+    * the same per-row signatures. */
   object MediaCodec {
     /** SYNTHETIC decode: deterministic pseudo-pixels from the content
-      * hash — the parity-test twin of [[decodeImageReal]], and the
-      * fallback for bytes the JDK cannot parse. */
+      * hash — the perceptual hash's fallback for bytes the JDK cannot
+      * parse, so mixed tables stay total. */
     def decodeImage(bytes: Array[Byte], w: Int, h: Int): Array[Float] = {
       // deterministic fake: FNV over bytes seeds a tiny LCG "image"
       var hsh = -3750763034362895579L
@@ -57,43 +52,8 @@ object Multimodal {
       out
     }
 
-    /** Batch decode — the shape a real codec wants (one context, n
-      * buffers). STUB body delegates per-element; a real impl submits the
-      * whole batch to the decoder/GPU at once. */
-    def decodeImageBatch(batch: Seq[Array[Byte]], w: Int, h: Int): Seq[Array[Float]] =
-      batch.map(b => decodeImage(if (b == null) Array.emptyByteArray else b, w, h))
-
-    /** SYNTHETIC decode of an audio payload to `n` mono PCM samples in
-      * [-1,1] — the parity-test twin of [[decodePcmReal]]. */
-    def decodePcm(bytesIn: Array[Byte], n: Int): Array[Float] = {
-      val bytes = if (bytesIn == null) Array.emptyByteArray else bytesIn
-      var hsh = -3750763034362895579L
-      var i = 0
-      while (i < bytes.length) { hsh ^= bytes(i); hsh *= 1099511628211L; i += 1 }
-      val out = new Array[Float](n)
-      var s = hsh
-      i = 0
-      while (i < out.length) {
-        s = s * 6364136223846793005L + 1442695040888963407L
-        // zero-mean-ish deterministic samples; every 7th run is "quiet"
-        val v = (((s >>> 40).toInt & 0xFF) - 128) / 128.0f
-        out(i) = if (((i / 400) % 7) == 0) v * 0.01f else v
-        i += 1
-      }
-      out
-    }
-
-    /** SYNTHETIC decode of one video frame at a byte+offset key:
-      * deterministic pixels seeded by (content hash, frame offset) so
-      * adjacent frames of the same video differ. The real AVI/MP4 path is
-      * [[decodeFrameReal]]; this twin keeps the same (bytes, offset) ->
-      * pixels signature. */
-    def decodeFrame(bytes: Array[Byte], offsetMs: Long, w: Int, h: Int): Array[Float] = {
-      val tag = java.nio.ByteBuffer.allocate(8).putLong(offsetMs).array()
-      decodeImage((if (bytes == null) Array.emptyByteArray else bytes) ++ tag, w, h)
-    }
-
-    /** STUB frame sampling: `n` deterministic frame offsets. */
+    /** Frame sampling: `n` deterministic frame offsets, the midpoints of
+      * `n` equal slices of the duration. */
     def sampleFrameOffsets(durationMs: Long, n: Int): Array[Long] =
       if (durationMs <= 0 || n <= 0) Array.empty
       else (0 until n).map(i => durationMs * (2L * i + 1) / (2L * n)).toArray
@@ -628,37 +588,16 @@ object Multimodal {
         (pmod(xxhash64(col("media_ref"), lit(2)), lit(512)) + 32).cast("int").as("height"),
         (pmod(xxhash64(col("media_ref"), lit(3)), lit(60000)) + 1000).as("duration_ms")))
 
-  /** Feature extraction over media rows: batched per partition (one codec
-    * context per partition, decode submitted `batchSize` buffers at a
-    * time — the execution shape a real ffmpeg/GPU decoder needs), output
-    * is a fixed-width feature vector + pixel stats. */
-  def extractFeatures(media: DataFrame, targetW: Int = 8, targetH: Int = 8,
-                      batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(media.schema.fields ++ Seq(
-      StructField("features", ArrayType(FloatType), nullable = false),
-      StructField("mean_px", FloatType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    media.mapPartitions { rows =>
-      // per-partition "codec context" — allocated once, fed whole batches
-      val codec = MediaCodec
-      rows.grouped(batchSize).flatMap { batch =>
-        val decoded = codec.decodeImageBatch(
-          batch.map(_.getAs[Array[Byte]]("bytes")), targetW, targetH)
-        batch.iterator.zip(decoded.iterator).map { case (r, px) =>
-          val mean = if (px.isEmpty) 0.0f else px.sum / px.length
-          Row.fromSeq(r.toSeq ++ Seq(px, mean))
-        }
-      }
-    }(enc)
-  }
-
   /** 64-bit perceptual hashes (aHash over the decoded image): the image
     * analogue of the text SimHash — visually-identical re-encodes land on
-    * the same or near-identical signature. Decode is batched per
-    * partition; output carries only (media_ref, phash) so downstream
-    * joins never shuffle pixels. */
-  def perceptualHashes(media: DataFrame, decodeW: Int = 16, decodeH: Int = 16,
-                       batchSize: Int = 64): DataFrame = {
+    * the same or near-identical signature. Decodes via javax.imageio at
+    * native size, then bilinear resize to the hash dims. Bytes the JDK
+    * cannot parse (null included) fall back to the synthetic
+    * [[MediaCodec.decodeImage]] at the same size so mixed tables stay
+    * total. Output carries only (media_ref, phash), so downstream joins
+    * never shuffle pixels. */
+  def perceptualHashes(media: DataFrame, decodeW: Int = 16,
+                       decodeH: Int = 16): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_ref", StringType, nullable = false),
       StructField("phash", LongType, nullable = false)))
@@ -666,41 +605,16 @@ object Multimodal {
     val imgs = media.select(col("media_ref"), col("bytes"))
     imgs.mapPartitions { rows =>
       val codec = MediaCodec
-      rows.grouped(batchSize).flatMap { batch =>
-        val decoded = codec.decodeImageBatch(
-          batch.map(_.getAs[Array[Byte]]("bytes")), decodeW, decodeH)
-        batch.iterator.zip(decoded.iterator).map { case (r, px) =>
-          Row(r.getString(0), aHash64(px, decodeW, decodeH))
+      rows.map { r =>
+        val bytes = r.getAs[Array[Byte]]("bytes")
+        val px = codec.decodeImageReal(bytes) match {
+          case Some((p, w, h)) =>
+            if (w == decodeW && h == decodeH) p
+            else resizeBilinear(p, w, h, decodeW, decodeH)
+          case None => codec.decodeImage(
+            if (bytes == null) Array.emptyByteArray else bytes, decodeW, decodeH)
         }
-      }
-    }(enc)
-  }
-
-  /** [[perceptualHashes]] through the REAL image decode: javax.imageio
-    * at native size, bilinear resize to the hash dims, aHash64. Bytes the
-    * JDK cannot parse fall back to the synthetic decode so mixed tables
-    * stay total. Output carries only (media_ref, phash). */
-  def perceptualHashesReal(media: DataFrame, decodeW: Int = 16, decodeH: Int = 16,
-                           batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_ref", StringType, nullable = false),
-      StructField("phash", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val imgs = media.select(col("media_ref"), col("bytes"))
-    imgs.mapPartitions { rows =>
-      val codec = MediaCodec
-      rows.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val bytes = r.getAs[Array[Byte]]("bytes")
-          val px = codec.decodeImageReal(bytes) match {
-            case Some((p, w, h)) =>
-              if (w == decodeW && h == decodeH) p
-              else resizeBilinear(p, w, h, decodeW, decodeH)
-            case None => codec.decodeImage(
-              if (bytes == null) Array.emptyByteArray else bytes, decodeW, decodeH)
-          }
-          Row(r.getString(0), aHash64(px, decodeW, decodeH))
-        }
+        Row(r.getString(0), aHash64(px, decodeW, decodeH))
       }
     }(enc)
   }
@@ -710,15 +624,10 @@ object Multimodal {
     * Hamming ≤ 3) become candidates via a chunk equi-join — never
     * all-pairs — and are verified by exact Hamming ≤ `maxHamming`. The
     * shuffle carries (ref, 64-bit sig) only: the image-dedup twin of
-    * Dedup.simHashPairs. */
+    * Dedup.simHashPairs. The q_media_real gate runs it over real PNGs. */
   def mediaNearDupPairs(media: DataFrame, maxHamming: Int = 3,
                         decodeW: Int = 16, decodeH: Int = 16): DataFrame =
     nearDupPairsFromSigs(perceptualHashes(media, decodeW, decodeH), maxHamming)
-
-  /** [[mediaNearDupPairs]] over REAL decoded bytes (q_media_real gate). */
-  def mediaNearDupPairsReal(media: DataFrame, maxHamming: Int = 3,
-                            decodeW: Int = 16, decodeH: Int = 16): DataFrame =
-    nearDupPairsFromSigs(perceptualHashesReal(media, decodeW, decodeH), maxHamming)
 
   /** Chunk-LSH pair search over any (media_ref, phash) signature table. */
   def nearDupPairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = {
@@ -737,56 +646,15 @@ object Multimodal {
       .where(col("hamming") <= maxHamming)
   }
 
-  /** Audio energy windows: decode PCM (stub), then REAL framing math —
-    * `frameMs` windows every `hopMs`, RMS per window, silence flag. One
-    * output row per window: (media_ref, win_idx, t_ms, rms, is_silence).
-    * The training-pipeline primitive for silence trimming / voice-activity
-    * segmentation. Decode is batched; window math is pure Scala. */
-  def audioEnergyWindows(media: DataFrame, sampleRate: Int = 16000,
-                         frameMs: Int = 25, hopMs: Int = 10,
-                         silenceRms: Double = 0.05,
-                         maxWindowsPerDoc: Int = 256): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_ref", StringType, nullable = false),
-      StructField("win_idx", IntegerType, nullable = false),
-      StructField("t_ms", LongType, nullable = false),
-      StructField("rms", FloatType, nullable = false),
-      StructField("is_silence", BooleanType, nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val audio = media.select(col("media_ref"), col("bytes"),
-      col("meta.duration_ms").as("duration_ms"))
-    val frameN = sampleRate * frameMs / 1000
-    val hopN = sampleRate * hopMs / 1000
-    audio.mapPartitions { rows =>
-      val codec = MediaCodec
-      rows.flatMap { r =>
-        // meta.duration_ms is nullable in mediaSchema: rows without a
-        // duration decode zero samples (no windows), matching the image
-        // path's null-bytes handling below
-        val dur = if (r.isNullAt(2)) 0L else r.getLong(2)
-        val nSamples = (dur * sampleRate / 1000).toInt
-          .min((maxWindowsPerDoc - 1) * hopN + frameN)
-        val pcm = codec.decodePcm(r.getAs[Array[Byte]]("bytes"), math.max(nSamples, 0))
-        val nWin = if (pcm.length < frameN) 0 else (pcm.length - frameN) / hopN + 1
-        (0 until nWin).iterator.map { w =>
-          var acc = 0.0
-          var i = w * hopN
-          val end = i + frameN
-          while (i < end) { acc += pcm(i) * pcm(i); i += 1 }
-          val rms = math.sqrt(acc / frameN)
-          Row(r.getString(0), w, (w.toLong * hopMs), rms.toFloat, rms < silenceRms)
-        }
-      }
-    }(enc)
-  }
-
   /** Audio energy per window from REAL WAV bytes (javax.sound decode),
     * emitted as an exact Q30 integer — energy_q30 = Σ v_i² over the
     * window, where v_i are the raw PCM16 samples' dyadic floats
     * (v/32768f): every term is k/2³⁰ with k ≤ 2³⁰, so the double sum is
     * exact and round(acc·2³⁰) recovers the integer Σ v². This is the
     * oracle-able surface of the real audio path (q_media_audio gate);
-    * rows that fail to decode are dropped. */
+    * rows that fail to decode are dropped. A window's RMS is one column
+    * expression over this output:
+    * `rms = sqrt(energy_q30 / 2^30 / frameN)`. */
   def audioEnergyQ30(media: DataFrame, frameN: Int, hopN: Int): DataFrame = {
     require(frameN > 0 && hopN > 0,
       s"audioEnergyQ30: frameN ($frameN) and hopN ($hopN) must be positive" +
@@ -816,43 +684,16 @@ object Multimodal {
     }(enc)
   }
 
-  /** Per-frame features for video rows: sample `framesPerDoc` offsets,
-    * decode each frame (stub codec, batched), emit (media_ref, frame_off,
-    * features). Feeds [[sceneChanges]] and any embedding stage. */
-  def frameFeatures(media: DataFrame, framesPerDoc: Int = 4,
-                    targetW: Int = 8, targetH: Int = 8,
-                    batchSize: Int = 64): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_ref", StringType, nullable = false),
-      StructField("frame_off", LongType, nullable = false),
-      StructField("features", ArrayType(FloatType), nullable = false)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    val vids = media.select(col("media_ref"), col("bytes"),
-      col("meta.duration_ms").as("duration_ms"))
-    vids.mapPartitions { rows =>
-      val codec = MediaCodec
-      rows.grouped(math.max(batchSize / math.max(framesPerDoc, 1), 1)).flatMap { batch =>
-        batch.iterator.flatMap { r =>
-          val bytes = r.getAs[Array[Byte]]("bytes")
-          codec.sampleFrameOffsets(r.getLong(2), framesPerDoc).iterator.map { off =>
-            Row(r.getString(0), off, codec.decodeFrame(bytes, off, targetW, targetH))
-          }
-        }
-      }
-    }(enc)
-  }
-
-  /** REAL-codec twin of [[frameFeatures]]: demux each row's video bytes
+  /** Per-frame features for video rows: demux each row's video bytes
     * once (RIFF/AVI or ISO-BMFF/MP4 — [[MediaCodec.demuxVideo]]), decode
     * `framesPerDoc` evenly-spaced frames (all frames
     * when the video has fewer) via javax.imageio, resize, emit
     * (media_ref, frame_off ms, features). Rows whose bytes are not a
-    * demuxable video produce no output (same contract as the other real
-    * decode paths — route through the synthetic twin for parity tests).
-    * Batch-shaped like every codec path: one demux per row, frames
-    * decoded within the row's iteration, no per-frame byte re-parse. */
-  def frameFeaturesReal(media: DataFrame, framesPerDoc: Int = 4,
-                        targetW: Int = 8, targetH: Int = 8): DataFrame = {
+    * demuxable video produce no output. One demux per row, frames decoded
+    * within the row's iteration, no per-frame byte re-parse. Feeds
+    * [[sceneChanges]] and any embedding stage. */
+  def frameFeatures(media: DataFrame, framesPerDoc: Int = 4,
+                    targetW: Int = 8, targetH: Int = 8): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_ref", StringType, nullable = false),
       StructField("frame_off", LongType, nullable = false),

@@ -2,7 +2,6 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.core._
 import graft.operators._
 import graft.sources.DocSource
 import graft.runtime.StageRunner
@@ -35,23 +34,15 @@ object PipelineDemo {
       S2Joins.withCellId(DocSource.docs(spark, n), col("lat"), col("lng"))
     }.cache()
 
-    // stage 2: covering + PIP join against 6 polygon/cap/rect regions
-    val regions: Seq[(Int, S2Region)] = Seq(
-      1 -> S2TextFormat.parsePolygon("0:0, 0:35, 30:35, 30:0"),
-      2 -> S2TextFormat.parsePolygon("-40:-80, -40:-30, -10:-30, -10:-80"),
-      3 -> S2Cap.fromCenterAngle(V3.fromLatLngDegrees(48, 2), 0.08),
-      4 -> S2LatLngRect.fromDegrees(-25, 100, 5, 140),
-      5 -> S2Cap.fromCenterAngle(V3.fromLatLngDegrees(-33, 151), 0.05),
-      6 -> S2TextFormat.parsePolygon("35:-10, 35:30, 60:30, 60:-10"))
+    // stage 2: covering + PIP join against the flagship's 6
+    // polygon/cap/rect regions
+    val regions = graft.Bench.benchRegions
     val joined = runner.stage("pip_join") {
       S2Joins.broadcastContainsJoin(docs, regions)
     }
 
     // stage 3: tile assignment — all level-2 cells → 24 tiles
-    val level2 = Iterator.iterate(S2CellId.begin(2))(S2CellId.next)
-      .takeWhile(_ != S2CellId.end(2)).toArray
-    val tiles = level2.zipWithIndex.groupBy(_._2 % 24).toSeq
-      .map { case (tid, cs) => (tid, cs.map(_._1)) }
+    val tiles = graft.Bench.benchTiles
     val tiled = runner.stage("tile_assign") {
       S2Joins.tileAssign(joined, tiles)
     }
