@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Document deduplication for training-data pipelines, at 100 TB shapes:
   * exact (hash groupBy), MinHash+LSH banding, SimHash, and exact n-gram
-  * Jaccard verification. Everything except the SimHash kernel is native
-  * Spark SQL expressions (codegen'd, map-side combined); candidate
+  * Jaccard verification. Per-row hashing runs in Scala kernels; candidate
   * generation is always an equi-join on a band/bucket key — never a cross
-  * join — so the shuffle volume is O(docs × bands), not O(docs²).
+  * join — so the shuffle volume is O(docs × bands), not O(docs²). That
+  * join is [[bucketPairs]], the one candidate-pair search of every
+  * near-dup detector (text MinHash and SimHash here, perceptual-hash
+  * media pairs in [[Multimodal]], SRP embedding pairs in [[Similarity]]).
   */
 object Dedup {
 
@@ -47,31 +49,6 @@ object Dedup {
           array_join(slice(words, i + 1, lit(n)), " "))),
       x => x.isNotNull))
   }
-
-  /** Bind an array expression to a lambda variable so it is evaluated
-    * exactly ONCE however many times the body references it. Without this,
-    * composing array expressions duplicates the producing subtree into
-    * every consumer — an O(hashes × bands) blowup at eval time. */
-  private def bindOnce(e: Column, body: Column => Column): Column =
-    element_at(transform(array(e), v => body(v)), 1)
-
-  /** MinHash signature: `numHashes` independent min-hashes of the shingle
-    * set, hash_i(s) = xxhash64(s, i). Single pass over the shingles. */
-  def minHashSignature(shingleCol: Column, numHashes: Int): Column =
-    bindOnce(shingleCol, sh =>
-      transform(sequence(lit(0), lit(numHashes - 1)),
-        i => array_min(transform(sh, s => xxhash64(s, i)))))
-
-  /** LSH band keys: signature split into `bands` bands of `rows` hashes;
-    * band key = (band index, xxhash of the band slice). Two docs share a
-    * band key iff their band slices are identical. The signature is
-    * computed once (lambda-bound), not once per band. */
-  def bandKeys(sigCol: Column, bands: Int, rows: Int): Column =
-    bindOnce(sigCol, sig =>
-      transform(sequence(lit(0), lit(bands - 1)), b =>
-        struct(b.as("band"),
-          xxhash64(array_join(slice(sig, b * lit(rows) + 1, lit(rows)), ","))
-            .as("sig"))))
 
   // =======================================================================
   // mod-Mersenne hash family — the canonical LSH family of the engine.
@@ -112,6 +89,22 @@ object Dedup {
     h
   }
 
+  /** Distinct word n-grams of `text` (lowercased, whitespace-split): the
+    * shingle set of both kernels, built inline (interpreted higher-order
+    * SQL expressions are ~15x slower on this hot path). */
+  private def shingleSet(text: String, n: Int): java.util.HashSet[String] = {
+    val w = text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
+    val out = new java.util.HashSet[String]()
+    var i = 0
+    while (i + n <= w.length) {
+      val sb = new java.lang.StringBuilder(w(i))
+      var j = 1
+      while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
+      out.add(sb.toString); i += 1
+    }
+    out
+  }
+
   /** Kernel fast path for the hot loop: per shingle one Horner base hash,
     * then `numHashes` affine derivations — ~50x the throughput of the
     * interpreted higher-order-function expression chain, deterministic and
@@ -120,21 +113,11 @@ object Dedup {
     * where bandKey is the Horner combination of the band's minima. */
   private val bandKeysKernel = udf {
     (text: String, shingleN: Int, numHashes: Int, bands: Int) =>
-      val w =
-        if (text == null) Array.empty[String]
-        else text.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
-      if (w.length < shingleN) Array.empty[Long]
+      val sh =
+        if (text == null) new java.util.HashSet[String]()
+        else shingleSet(text, shingleN)
+      if (sh.isEmpty) Array.empty[Long]
       else {
-        // distinct word n-gram shingles, inline (interpreted higher-order
-        // SQL expressions are ~15x slower on this hot path)
-        val sh = new java.util.HashSet[String]()
-        var wi = 0
-        while (wi + shingleN <= w.length) {
-          val sb = new java.lang.StringBuilder(w(wi))
-          var j = 1
-          while (j < shingleN) { sb.append(' ').append(w(wi + j)); j += 1 }
-          sh.add(sb.toString); wi += 1
-        }
         val mins = Array.fill(numHashes)(Long.MaxValue)
         sh.forEach { s =>
           val h = hornerHash(s, HashB)
@@ -169,26 +152,44 @@ object Dedup {
                                     numHashes: Int, bands: Int): Column =
     bandKeysKernel(textCol, lit(shingleN), lit(numHashes), lit(bands))
 
-  /** Candidate near-duplicate pairs via MinHash LSH: docs sharing ≥1 band.
-    * Returns (id_a, id_b) with id_a < id_b, distinct. The join is an
-    * equi-join on the packed band key — broadcast/SMJ/AQE-skew all apply. */
-  def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numHashes: Int = 64,
-                        bands: Int = 16): DataFrame = {
+  /** (id, bk) rows, one per packed LSH band key of each doc: the bucket
+    * frame of both [[minHashCandidates]] and [[nearDupClusters]]. */
+  private def bandedRows(df: DataFrame, idCol: String, textCol: String,
+                         shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     // the kernel derives rows = numHashes / bands; a remainder would
     // silently drop trailing min-hashes and weaken LSH precision
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val sig = df
-      .select(col(idCol).as("id"),
-        explode(bandKeysKernel(col(textCol), lit(shingleN), lit(numHashes),
-          lit(bands))).as("bk"))
-    val a = sig.select(col("bk"), col("id").as("id_a"))
-    val b = sig.select(col("bk"), col("id").as("id_b"))
-    a.join(b, "bk")
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    df.select(col(idCol).as("id"),
+      explode(bandKeysColumn(col(textCol), shingleN, numHashes, bands)).as("bk"))
   }
+
+  /** The candidate-pair search of every near-dup detector (MinHash bands,
+    * SimHash and perceptual-hash chunks, SRP buckets). `keyed` holds an
+    * `id` column, the bucket key columns `keys`, and any other columns,
+    * which ride the self-join as `<name>_a` / `<name>_b`. Returns
+    * (id_a, id_b, derived…) with id_a < id_b, distinct: `derived` is
+    * computed from the suffixed columns before the dedup, so the dedup
+    * exchange carries ids and what the caller derives, never the carried
+    * columns. The join is an equi-join on the keys — broadcast/SMJ/AQE-skew
+    * all apply, never a cross join. */
+  private[operators] def bucketPairs(keyed: DataFrame, keys: Seq[String],
+                                     derived: Column*): DataFrame = {
+    val carried = keyed.columns.filterNot(c => c == "id" || keys.contains(c))
+    def side(s: String): DataFrame = keyed.select(
+      keys.map(col) ++ ("id" +: carried).map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), keys)
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a") +: col("id_b") +: derived: _*)
+      .distinct()
+  }
+
+  /** Candidate near-duplicate pairs via MinHash LSH: docs sharing ≥1 band.
+    * Returns (id_a, id_b) with id_a < id_b, distinct. */
+  def minHashCandidates(df: DataFrame, idCol: String, textCol: String,
+                        shingleN: Int = 3, numHashes: Int = 64,
+                        bands: Int = 16): DataFrame =
+    bucketPairs(bandedRows(df, idCol, textCol, shingleN, numHashes, bands), Seq("bk"))
 
   /** Exact n-gram Jaccard similarity of two text columns (expression). */
   def jaccard(textA: Column, textB: Column, n: Int): Column = {
@@ -202,20 +203,8 @@ object Dedup {
     * [[jaccard]] expression (integer/integer division) but ~100x faster on
     * the verification hot path, where corpora with high baseline
     * similarity can produce 10^5-10^6 accidental LSH candidates. */
-  private val jaccardKernel = udf { (a: String, b: String, n: Int) =>
-    def sh(t: String): java.util.HashSet[String] = {
-      val w = t.toLowerCase.trim.split("\\s+").filter(_.nonEmpty)
-      val out = new java.util.HashSet[String]()
-      var i = 0
-      while (i + n <= w.length) {
-        val sb = new java.lang.StringBuilder(w(i))
-        var j = 1
-        while (j < n) { sb.append(' ').append(w(i + j)); j += 1 }
-        out.add(sb.toString); i += 1
-      }
-      out
-    }
-    val sa = sh(a); val sb = sh(b)
+  private[graft] val jaccardKernel = udf { (a: String, b: String, n: Int) =>
+    val sa = shingleSet(a, n); val sb = shingleSet(b, n)
     if (sa.isEmpty && sb.isEmpty) 0.0
     else {
       var inter = 0
@@ -252,12 +241,7 @@ object Dedup {
   def nearDupClusters(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 3, numHashes: Int = 64,
                       bands: Int = 16, maxIters: Int = 10): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be divisible by bands ($bands)")
-    val sig = df
-      .select(col(idCol).as("id"),
-        explode(bandKeysKernel(col(textCol), lit(shingleN), lit(numHashes),
-          lit(bands))).as("bk"))
+    val sig = bandedRows(df, idCol, textCol, shingleN, numHashes, bands)
     // O(m) star edges per bucket: member <-> bucket min (undirected, so
     // labels can flow THROUGH a shared member into another bucket's rep —
     // a one-directional member->rep scheme never merges two buckets that
@@ -328,24 +312,27 @@ object Dedup {
 
   def simHash(text: Column): Column = simHashUdf(split(normText(text), " "))
 
-  /** SimHash near-dup candidates: docs whose (62-bit) signatures agree on
-    * at least one of four 16-bit chunks (pigeonhole: guarantees recall for
-    * Hamming distance ≤ 3), verified by exact Hamming ≤ `maxHamming`. */
-  def simHashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"), simHash(col(textCol)).as("sig"))
+  /** Hamming near-dup search over an (id, sig) table of 64-bit
+    * signatures: signatures that agree on at least one of four 16-bit
+    * chunks (pigeonhole: full recall for Hamming distance ≤ 3) become
+    * candidates, verified by exact Hamming ≤ `maxHamming`. Returns
+    * (id_a, id_b, hamming). SimHash text pairs and perceptual-hash media
+    * pairs ([[Multimodal.mediaNearDupPairs]]) both run it. */
+  private[operators] def hammingPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
     val chunks = sigs.select(col("id"), col("sig"),
       explode(array((0 until 4).map { c =>
         struct(lit(c).as("chunk"),
           shiftrightunsigned(col("sig"), c * 16).bitwiseAND(lit(0xFFFFL)).as("val"))
       }.toIndexedSeq: _*)).as("ck"))
-    val a = chunks.select(col("ck"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = chunks.select(col("ck"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, "ck")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
+    bucketPairs(chunks, Seq("ck"),
+      bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
   }
+
+  /** SimHash near-dup pairs: [[hammingPairs]] over the 62-bit [[simHash]]
+    * signatures. */
+  def simHashPairs(df: DataFrame, idCol: String, textCol: String,
+                   maxHamming: Int = 3): DataFrame =
+    hammingPairs(df.select(col(idCol).as("id"), simHash(col(textCol)).as("sig")),
+      maxHamming)
 }

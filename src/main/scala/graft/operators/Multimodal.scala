@@ -19,15 +19,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_ref", StringType, nullable = false),
-    StructField("mime", StringType, nullable = false),
-    StructField("bytes", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true))), nullable = true)))
-
   /** The codec seam: real JDK encoders, decoders and demuxers, plus the
     * synthetic [[decodeImage]] that [[Multimodal.perceptualHashes]] falls
     * back to. A deployment with other codecs swaps in javacv/ffmpeg behind
@@ -619,32 +610,17 @@ object Multimodal {
     }(enc)
   }
 
-  /** Near-duplicate media pairs by perceptual hash: signatures that agree
-    * on at least one of four 16-bit chunks (pigeonhole: full recall for
-    * Hamming ≤ 3) become candidates via a chunk equi-join — never
-    * all-pairs — and are verified by exact Hamming ≤ `maxHamming`. The
-    * shuffle carries (ref, 64-bit sig) only: the image-dedup twin of
-    * Dedup.simHashPairs. The q_media_real gate runs it over real PNGs. */
+  /** Near-duplicate media pairs by perceptual hash: [[Dedup.hammingPairs]]
+    * (the chunk-LSH Hamming search SimHash text pairs also run) over the
+    * (media_ref, 64-bit aHash) rows, so the shuffles carry refs and
+    * signatures only. Returns (ref_a, ref_b, hamming) with ref_a < ref_b
+    * and hamming ≤ `maxHamming`. The q_media_real gate runs it over real
+    * PNGs. */
   def mediaNearDupPairs(media: DataFrame, maxHamming: Int = 3,
                         decodeW: Int = 16, decodeH: Int = 16): DataFrame =
-    nearDupPairsFromSigs(perceptualHashes(media, decodeW, decodeH), maxHamming)
-
-  /** Chunk-LSH pair search over any (media_ref, phash) signature table. */
-  def nearDupPairsFromSigs(sigs: DataFrame, maxHamming: Int): DataFrame = {
-    val chunks = sigs.select(col("media_ref"), col("phash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftrightunsigned(col("phash"), c * 16).bitwiseAND(lit(0xFFFFL)).as("val"))
-      }.toIndexedSeq: _*)).as("ck"))
-    val a = chunks.select(col("ck"), col("media_ref").as("ref_a"), col("phash").as("sig_a"))
-    val b = chunks.select(col("ck"), col("media_ref").as("ref_b"), col("phash").as("sig_b"))
-    a.join(b, "ck")
-      .where(col("ref_a") < col("ref_b"))
-      .select(col("ref_a"), col("ref_b"),
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
+    Dedup.hammingPairs(perceptualHashes(media, decodeW, decodeH)
+        .select(col("media_ref").as("id"), col("phash").as("sig")), maxHamming)
+      .select(col("id_a").as("ref_a"), col("id_b").as("ref_b"), col("hamming"))
 
   /** Audio energy per window from REAL WAV bytes (javax.sound decode),
     * emitted as an exact Q30 integer — energy_q30 = Σ v_i² over the

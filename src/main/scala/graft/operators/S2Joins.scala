@@ -37,7 +37,11 @@ import graft.functions.{S2, S2SpatialKernels}
   *
   * Dimension-side indexes ride the serialized plan or task closure (the
   * plan ships the stab of [[regionHits]], the closure those of
-  * [[regionTileCounts]]); no call leaves a broadcast behind. The fused
+  * [[regionTileCounts]]), so the region and tile joins leave no
+  * broadcast behind. [[knnJoin]] does: every call creates
+  * `sparkContext.broadcast`s of the targets and of its pruning indexes
+  * (cap index, or certification rings) and never destroys them;
+  * [[knnJoinLarge]] runs term joins and creates none. The fused
   * pass also rejects docs outside every region's rect bound on a 1°
   * [[LatLngGrid]] before any trig.
   *

@@ -173,11 +173,7 @@ object Similarity {
       normUdf(col(vecCol)).as("n"))
     val buckets = base.select(col("id"),
       posexplode(tableBuckets(col("v"), nPlanes, tables)).as(Seq("_t", "_b")))
-    val pairs = buckets.as("a").join(buckets.as("b"), Seq("_t", "_b"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    pairs
+    Dedup.bucketPairs(buckets, Seq("_t", "_b"))
       .join(base.select(col("id").as("id_a"), col("v").as("v_a"), col("n").as("n_a")), "id_a")
       .join(base.select(col("id").as("id_b"), col("v").as("v_b"), col("n").as("n_b")), "id_b")
       .withColumn("cosine", cosinePre(dotUdf(col("v_a"), col("v_b")), col("n_a"), col("n_b")))

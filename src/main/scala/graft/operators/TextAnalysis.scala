@@ -137,17 +137,14 @@ object TextAnalysis {
     * all intermediates fit in 52 bits, so the arithmetic is exactly
     * replicable by engines WITHOUT wraparound multiplication (the DuckDB
     * oracle mirrors it as a non-rolling Horner per k-gram — the same
-    * value mod M). */
-  private val WinnowM = 2147483647L // 2^31 - 1
-  private val WinnowB = 1000003L
-
+    * value mod M). M and the base are [[Dedup.HashM]] / [[Dedup.HashB]]. */
   private val winnowUdf = udf { (text: String, k: Int, w: Int) =>
     if (text == null || text.length < k) Array.empty[Long]
     else {
       val s = text.toLowerCase
       val n = s.length - k + 1
       val hs = new Array[Long](n)
-      val B = WinnowB; val M = WinnowM
+      val B = Dedup.HashB; val M = Dedup.HashM
       var pow = 1L
       var i = 1
       while (i < k) { pow = pow * B % M; i += 1 }

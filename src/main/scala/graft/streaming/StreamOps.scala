@@ -17,11 +17,10 @@ import graft.core._
   */
 object StreamOps {
 
-  /** Continuous ingest: derive leaf cell + order key on a stream. Narrow,
-    * watermark-free — identical expressions to the batch path. */
+  /** Continuous ingest: derive leaf cell + order key on a stream with the
+    * batch path's [[S2Joins.withCellId]] (narrow, watermark-free). */
   def withCellId(stream: DataFrame, latCol: String, lngCol: String): DataFrame =
-    stream.withColumn("cell_id", S2.cellId(col(latCol), col(lngCol)))
-      .withColumn("cell_ord", S2.orderKey(col("cell_id")))
+    S2Joins.withCellId(stream, col(latCol), col(lngCol))
 
   /** Streaming density: windowed counts per level-k cell with watermark
     * (late data beyond `lateness` dropped; output = append-able). The

@@ -143,10 +143,15 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
     val rows = docs.limit(10).select("text").collect().map(_.getString(0))
     val pairs = rows.zip(rows.tail)
+    // the kernel nearDuplicates verifies with must be bit-equal to the
+    // expression the q_dedup_jaccard gate runs
     val got = pairs.toSeq.toDF("a", "b")
-      .select(Dedup.jaccard(col("a"), col("b"), 3)).collect().map(_.getDouble(0))
-    got.zip(pairs).foreach { case (g, (a, b)) =>
+      .select(Dedup.jaccard(col("a"), col("b"), 3),
+        Dedup.jaccardKernel(col("a"), col("b"), lit(3)))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    got.zip(pairs).foreach { case ((g, k), (a, b)) =>
       assert(math.abs(g - ref(a, b, 3)) < 1e-12)
+      assert(k == g, s"kernel $k != expression $g")
     }
   }
 
