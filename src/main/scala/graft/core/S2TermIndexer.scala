@@ -28,12 +28,19 @@ final class S2TermIndexer(val maxCells: Int = 8,
   private def coverer = new S2RegionCoverer(maxCells, minLevel, maxLevel, levelMod)
 
   /** Terms to index for a point document. */
-  def indexTermsForPoint(x: Double, y: Double, z: Double): Array[String] = {
+  def indexTermsForPoint(x: Double, y: Double, z: Double): Array[String] =
+    indexTermsForPoint(x, y, z, null)
+
+  /** The point's terms whose cell is in `keep` (sorted cell ids; null
+    * keeps every term). Only a kept cell's token is built. */
+  def indexTermsForPoint(x: Double, y: Double, z: Double, keep: Array[Long]): Array[String] = {
     val id = S2CellId.fromPoint(x, y, z)
     val out = scala.collection.mutable.ArrayBuffer[String]()
     var level = minLevel
     while (level <= maxLevel) {
-      out += ancestorTerm(S2CellId.parent(id, level))
+      val ancestor = S2CellId.parent(id, level)
+      if (keep == null || java.util.Arrays.binarySearch(keep, ancestor) >= 0)
+        out += ancestorTerm(ancestor)
       level += levelMod
     }
     out.toArray

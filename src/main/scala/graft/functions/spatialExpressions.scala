@@ -28,8 +28,8 @@ import graft.core._
   * carries its indexer as a non-child field (same default), which
   * generated code reaches as a reference object (as [[S2StabMatch]] ships
   * its stab), so a caller-chosen document scheme survives whole-stage
-  * codegen. Plans print only its children: the indexer has no stable
-  * string form. */
+  * codegen. Plans print only its children and the size of its `keep`
+  * set: the indexer has no stable string form. */
 
 /** Shared kernels (static forwarders make these callable from generated
   * Java). [[indexer]] is the engine's one default term scheme: a term
@@ -51,9 +51,12 @@ object S2SpatialKernels {
   private def toArrayData(terms: Array[String]): ArrayData =
     new GenericArrayData(terms.map(t => UTF8String.fromString(t).asInstanceOf[Any]))
 
-  def pointIndexTerms(ix: S2TermIndexer, lat: Double, lng: Double): ArrayData = {
+  def pointIndexTerms(ix: S2TermIndexer, lat: Double, lng: Double): ArrayData =
+    pointIndexTerms(ix, null, lat, lng)
+
+  def pointIndexTerms(ix: S2TermIndexer, keep: Array[Long], lat: Double, lng: Double): ArrayData = {
     val p = V3.fromLatLngDegrees(lat, lng)
-    toArrayData(ix.indexTermsForPoint(p.x, p.y, p.z))
+    toArrayData(ix.indexTermsForPoint(p.x, p.y, p.z, keep))
   }
 
   def polyQueryTerms(polyText: UTF8String): ArrayData =
@@ -102,21 +105,30 @@ case class S2WithinDistance(latA: Expression, lngA: Expression,
 
 /** s2_point_index_terms(latDeg, lngDeg) — the ancestor index terms of a
   * point document (reference s2region_term_indexer.cc:155-175): plain
-  * tokens at levels minLevel..maxLevel, never marker-prefixed. */
+  * tokens at levels minLevel..maxLevel, never marker-prefixed.
+  *
+  * `keep` (sorted cell ids, a non-child field like `indexer`) restricts
+  * the terms to those cells: a term join passes the plain query terms of
+  * its other side, since no other doc term can meet them. Plans print it
+  * as its count, `keep=n`, never as a literal list. */
 case class S2PointIndexTermsExpr(left: Expression, right: Expression,
-                                 indexer: S2TermIndexer = S2SpatialKernels.indexer)
+                                 indexer: S2TermIndexer = S2SpatialKernels.indexer,
+                                 keep: Option[Array[Long]] = None)
     extends BinaryExpression {
   override def nullIntolerant: Boolean = true
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "s2_point_index_terms"
   override protected def nullSafeEval(lat: Any, lng: Any): Any =
-    S2SpatialKernels.pointIndexTerms(indexer, lat.asInstanceOf[Double], lng.asInstanceOf[Double])
+    S2SpatialKernels.pointIndexTerms(indexer, keep.orNull,
+      lat.asInstanceOf[Double], lng.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
+    val args = keep.fold(ix)(k => s"$ix, ${ctx.addReferenceObj("keep", k, "long[]")}")
     defineCodeGen(ctx, ev, (la, ln) =>
-      s"graft.functions.S2SpatialKernels.pointIndexTerms($ix, $la, $ln)")
+      s"graft.functions.S2SpatialKernels.pointIndexTerms($args, $la, $ln)")
   }
-  override protected def stringArgs: Iterator[Any] = children.iterator
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ keep.map(k => s"keep=${k.length}")
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }

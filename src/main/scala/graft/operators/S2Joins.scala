@@ -32,18 +32,16 @@ import graft.functions.{S2, S2SpatialKernels}
   * The same two shapes carry tile assignment ([[tileAssign]], by a
   * [[TileStab]]; fused with the broadcast join in [[regionTileCounts]],
   * which runs the same two per-row kernels) and the kNN joins
-  * ([[knnJoin]] broadcasts the targets, [[knnJoinLarge]] runs a radius
-  * ladder of term joins).
+  * ([[knnJoin]] ships the targets to every task, [[knnJoinLarge]] runs
+  * a radius ladder of term joins).
   *
   * Dimension-side indexes ride the serialized plan or task closure (the
-  * plan ships the stab of [[regionHits]], the closure those of
-  * [[regionTileCounts]]), so the region and tile joins leave no
-  * broadcast behind. [[knnJoin]] does: every call creates
-  * `sparkContext.broadcast`s of the targets and of its pruning indexes
-  * (cap index, or certification rings) and never destroys them;
-  * [[knnJoinLarge]] runs term joins and creates none. The fused
-  * pass also rejects docs outside every region's rect bound on a 1°
-  * [[LatLngGrid]] before any trig.
+  * plan ships the stab of [[regionHits]] and the query-term set of
+  * [[termPolygonJoin]]; the closures ship the stabs of
+  * [[regionTileCounts]] and [[knnJoin]]'s targets and pruning indexes),
+  * so no call leaves a broadcast behind. The fused pass also rejects
+  * docs outside every region's rect bound on a 1° [[LatLngGrid]] before
+  * any trig.
   *
   * All joins carry every payload column (notably `spans`) untouched —
   * the span-sequence invariant is preserved structurally because spans are
@@ -109,11 +107,23 @@ object S2Joins {
     * (ancestor terms at levels minLevel..trueMaxLevel only, ~13 terms with
     * reference defaults; s2region_term_indexer.cc:155-175). */
   def docIndexTerms(docs: DataFrame, indexer: S2TermIndexer,
-                    latCol: String = "lat", lngCol: String = "lng"): DataFrame = {
+                    latCol: String = "lat", lngCol: String = "lng"): DataFrame =
+    docIndexTerms(docs, indexer, latCol, lngCol, None)
+
+  /** [[docIndexTerms]] restricted to the cells of `keep` (sorted ids). */
+  private def docIndexTerms(docs: DataFrame, indexer: S2TermIndexer, latCol: String,
+                            lngCol: String, keep: Option[Array[Long]]): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
     docs.withColumn("term", explode(toCol(graft.functions.S2PointIndexTermsExpr(
-      toExpr(col(latCol).cast("double")), toExpr(col(lngCol).cast("double")), indexer))))
+      toExpr(col(latCol).cast("double")), toExpr(col(lngCol).cast("double")), indexer, keep))))
   }
+
+  /** The most distinct plain query terms [[termPolygonJoin]] prunes the
+    * doc terms to. The set rides the task binary of every doc-term task
+    * as sorted cell ids: 32768 × 8 B = 256 KiB, a quarter of the 1000 KiB
+    * task binary above which Spark's DAGScheduler warns. A larger query
+    * side keeps every doc term. */
+  private val TermPruneBound = 1 << 15
 
   /** Full term-join pipeline for polygon regions given as text: emits
     * (doc columns…, qid) after exact PIP refine. Both sides may be
@@ -138,14 +148,35 @@ object S2Joins {
     * join splits that term's partition when it is larger than
     * `spark.sql.adaptive.skewJoin.skewedPartitionFactor` × the median
     * partition and larger than `skewedPartitionThresholdInBytes` (Spark
-    * defaults 5 and 256 MB); a split changes task sizes, never rows. */
+    * defaults 5 and 256 MB); a split changes task sizes, never rows.
+    *
+    * Data-induced prune: when called, it runs ONE small job that collects
+    * the distinct plain (unmarked) query terms of `polys`, at most
+    * [[TermPruneBound]] + 1 of them. Within the bound, each doc emits
+    * only the terms in that set before the term shuffle: a doc term no
+    * query shares cannot join, so the rows are the same. Above the bound
+    * the doc side emits every term, as without the prune.
+    *
+    * A row with a null `doc_id` never matches (the id re-join drops it). */
   def termPolygonJoin(docs: DataFrame, polys: DataFrame,
-                      polyTextCol: String = "poly", qidCol: String = "qid"): DataFrame = {
-    val slim = docs.select(col("doc_id"),
-      col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
-    val d = docIndexTerms(slim, S2SpatialKernels.indexer)
+                      polyTextCol: String = "poly", qidCol: String = "qid"): DataFrame =
+    termPolygonJoinBounded(docs, polys, polyTextCol, qidCol, TermPruneBound)
+
+  /** [[termPolygonJoin]] with its prune bound as a parameter. */
+  private[graft] def termPolygonJoinBounded(docs: DataFrame, polys: DataFrame,
+                                            polyTextCol: String, qidCol: String,
+                                            pruneBound: Int): DataFrame = {
+    val ix = S2SpatialKernels.indexer
     val q = polys.select(col(qidCol), col(polyTextCol),
       explode(S2.polygonQueryTerms(col(polyTextCol))).as("term"))
+    val plain = q.select("term").where(!col("term").startsWith(ix.marker)).distinct()
+      .limit(pruneBound + 1).collect()
+    val keep =
+      if (plain.length > pruneBound) None
+      else Some(plain.map(r => S2CellId.fromToken(r.getString(0))).sorted)
+    val slim = docs.select(col("doc_id"),
+      col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
+    val d = docIndexTerms(slim, ix, "lat", "lng", keep)
     val matches = d.join(q, "term")
       .drop("term")
       // no (doc, qid) dedup: a point doc's plain ancestor tokens meet a
@@ -339,12 +370,12 @@ object S2Joins {
 
   /** For each target, the k nearest docs (chord-angle metric, exact).
     *
-    * Physical plan: targets broadcast → each partition computes its local
-    * top-k per target with a bounded insertion heap (map-side partial
-    * top-k, the aggregation analogue of the reference's best-first prune,
-    * s2closest_point_query_base.h:259-327) → one small shuffle of
-    * ≤ partitions×targets×k rows → global top-k via window. Distance ties
-    * break by doc_id ascending (deterministic).
+    * Physical plan: targets ride the task closure → each partition
+    * computes its local top-k per target with a bounded insertion heap
+    * (map-side partial top-k, the aggregation analogue of the reference's
+    * best-first prune, s2closest_point_query_base.h:259-327) → one small
+    * shuffle of ≤ partitions×targets×k rows → global top-k via window.
+    * Distance ties break by doc_id ascending (deterministic).
     *
     * For target sets ≥ `prefilterFrom`, the per-doc O(targets) scan is
     * replaced by spatially-pruned candidate stabs (the index-pruned
@@ -421,10 +452,6 @@ object S2Joins {
                              distEvals: org.apache.spark.util.LongAccumulator): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val spark = docs.sparkSession
-    val bT = spark.sparkContext.broadcast(ts)
-    val bP = spark.sparkContext.broadcast(pruner)
-
     val in = docs.select(col(idCol), col(latCol).cast("double"), col(lngCol).cast("double"))
     val outSchema = StructType(Seq(
       StructField("qid", IntegerType, nullable = false),
@@ -435,10 +462,8 @@ object S2Joins {
     val ord = knnHeapOrd
 
     in.mapPartitions { it =>
-      val tsL = bT.value
-      val pr = bP.value
       // heap per GLOBAL slot (sparse map avoided: slot count is bounded)
-      val heaps = new Array[scala.collection.mutable.PriorityQueue[(Double, Any)]](tsL.length)
+      val heaps = new Array[scala.collection.mutable.PriorityQueue[(Double, Any)]](ts.length)
       slotsArr.foreach { s =>
         heaps(s) = new scala.collection.mutable.PriorityQueue[(Double, Any)]()(ord) }
       var evals = 0L
@@ -451,23 +476,23 @@ object S2Joins {
         if (!r.isNullAt(1) && !r.isNullAt(2)) {
           val id = r.get(0)
           val p = V3.fromLatLngDegrees(r.getDouble(1), r.getDouble(2))
-          if (pr == null) {
+          if (pruner == null) {
             var i = 0
             while (i < slotsArr.length) {
               val s = slotsArr(i)
               evals += 1
-              push(s, (p - tsL(s)._2).norm2, id)
+              push(s, (p - ts(s)._2).norm2, id)
               i += 1
             }
           } else {
-            val (idx, bound, tail) = pr
+            val (idx, bound, tail) = pruner
             val ordKey = S2CellId.orderKey(S2CellId.fromPoint(p.x, p.y, p.z))
             val cand = idx.labelsContaining(ordKey)
             var i = 0
             while (i < cand.length) {
               val s = cand(i)
               evals += 1
-              val d = (p - tsL(s)._2).norm2
+              val d = (p - ts(s)._2).norm2
               if (d <= bound(s)) push(s, d, id)
               i += 1
             }
@@ -475,7 +500,7 @@ object S2Joins {
             while (i < tail.length) {
               val s = tail(i)
               evals += 1
-              push(s, (p - tsL(s)._2).norm2, id)
+              push(s, (p - ts(s)._2).norm2, id)
               i += 1
             }
           }
@@ -483,7 +508,7 @@ object S2Joins {
       }
       if (distEvals != null) distEvals.add(evals)
       slotsArr.iterator.flatMap { s =>
-        heaps(s).iterator.map { case (d, id) => Row(tsL(s)._1, id, d) }
+        heaps(s).iterator.map { case (d, id) => Row(ts(s)._1, id, d) }
       }
     }(enc)
   }
@@ -503,7 +528,6 @@ object S2Joins {
   private def knnJoinPruned(docs: DataFrame, ts: Array[(Int, V3)], k: Int,
                             idCol: String, latCol: String, lngCol: String,
                             distEvals: org.apache.spark.util.LongAccumulator): DataFrame = {
-    val spark = docs.sparkSession
     val nT = ts.length
     val nRings = LadderRadii.length
     val radii = LadderRadii.toArray
@@ -526,13 +550,11 @@ object S2Joins {
       out
     }
     val tPts = ts.map(_._2)
-    val bc = spark.sparkContext.broadcast((rings, ringChord2, tPts))
 
     // ---- pass 1: per-target ring histograms (exact distances) ----
     val counts = docs
       .select(col(latCol).cast("double"), col(lngCol).cast("double"))
       .queryExecution.toRdd.mapPartitions { it =>
-        val (ringsL, chord2L, pts) = bc.value
         val histo = new Array[Long](nT * nRings)
         val dStamp = new Array[Int](nT)
         val dVal = new Array[Double](nT)
@@ -547,7 +569,7 @@ object S2Joins {
             val ordKey = S2CellId.orderKey(S2CellId.fromPoint(p.x, p.y, p.z))
             var ri = 0
             while (ri < nRings) {
-              val cand = ringsL(ri).labelsContaining(ordKey)
+              val cand = rings(ri).labelsContaining(ordKey)
               var ci = 0
               while (ci < cand.length) {
                 val t = cand(ci)
@@ -556,10 +578,10 @@ object S2Joins {
                     if (dStamp(t) == docNo) dVal(t)
                     else {
                       evals += 1
-                      val dd = (p - pts(t)).norm2
+                      val dd = (p - tPts(t)).norm2
                       dStamp(t) = docNo; dVal(t) = dd; dd
                     }
-                  if (d <= chord2L(ri)) { histo(t * nRings + ri) += 1; counted(t) = docNo }
+                  if (d <= ringChord2(ri)) { histo(t * nRings + ri) += 1; counted(t) = docNo }
                 }
                 ci += 1
               }

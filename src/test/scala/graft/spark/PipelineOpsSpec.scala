@@ -63,6 +63,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       .map(id => (id, id + 100000)).toSet
     assert((planted ++ exactPairs).subsetOf(found),
       s"missing=${(planted ++ exactPairs) -- found}")
+    // each pair once, never a doc with itself
+    assert(found.forall { case (a, b) => a < b }, found.filter { case (a, b) => a >= b })
   }
 
   test("nearDupClusters groups planted duplicates under the min id") {
@@ -128,6 +130,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       .map(id => (id, id + 100000)).toSet
     val pairSet = found.map(t => (t._1, t._2)).toSet
     assert(exactPairs.subsetOf(pairSet))
+    // each pair once, never a doc with itself
+    assert(found.forall(t => t._1 < t._2), found.filter(t => t._1 >= t._2).toSeq)
     found.filter(t => exactPairs.contains((t._1, t._2)))
       .foreach(t => assert(t._3 == 0))
   }

@@ -101,6 +101,38 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("term join prune: the doc-term exchange carries ids and coordinates, no term literals") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
+      val texts = Seq("0:0, 0:35, 30:35, 30:0", "-40:-80, -40:-30, -10:-30, -10:-80")
+      val polys = texts.zipWithIndex.map { case (t, i) => (i + 1, t) }.toDF("qid", "poly")
+      val ix = graft.functions.S2SpatialKernels.indexer
+      val plain = texts.flatMap(t => ix.queryTerms(S2TextFormat.parsePolygon(t)))
+        .filterNot(_.startsWith(ix.marker)).distinct
+      val joined = S2Joins.termPolygonJoin(docs, polys)
+      val docTerms = joined.queryExecution.executedPlan.collect {
+        case e: ShuffleExchangeExec if e.output.exists(_.name == "doc_id") &&
+          e.output.exists(_.name == "term") => e.output.map(_.name)
+      }
+      assert(docTerms.map(_.sorted) == Seq(Seq("doc_id", "lat", "lng", "term")), docTerms)
+      // the term set prints as its size, never as literals: only tokens
+      // mixing digits and letters, which no plan text or expression id forms
+      val explain = joined.queryExecution.toString
+      assert(explain.contains(s"keep=${plain.size}"), explain)
+      assert("""\bIn(Set)?\(""".r.findFirstIn(explain).isEmpty, explain)
+      val literals = plain.filter(t => t.exists(_.isDigit) && t.exists(_.isLetter))
+        .filter(t => s"(?<![0-9a-z])$t(?![0-9a-z])".r.findFirstIn(explain).nonEmpty)
+      assert(plain.exists(_.exists(_.isLetter)) && literals.isEmpty, literals)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("closest-shapes join is a pure narrow map: zero exchanges") {
     val docs = S2Joins.withCellId(spark.read.parquet(docsPath), col("lat"), col("lng"))
     val shapes = Seq(

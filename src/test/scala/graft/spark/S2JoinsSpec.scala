@@ -124,6 +124,70 @@ class S2JoinsSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
+  def idPairs(df: DataFrame): Seq[(String, Int)] =
+    df.select("doc_id", "qid").collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+
+  /** termPolygonJoin with prune bound `bound` against broadcastContainsJoin
+    * on the same polygons, as sorted (doc_id, qid) pairs of the rows with
+    * a doc id (a null id never passes the term join's id re-join). Checks
+    * that the prune is on exactly when the polygons' distinct plain query
+    * terms fit the bound, and returns both joins. */
+  def termJoinVsBroadcast(in: DataFrame, polyTexts: Seq[(Int, String)],
+                          bound: Int = 1 << 15): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val ix = graft.functions.S2SpatialKernels.indexer
+    val plain = polyTexts.flatMap { case (_, t) => ix.queryTerms(S2TextFormat.parsePolygon(t)) }
+      .filterNot(_.startsWith(ix.marker)).distinct
+    val got = S2Joins.termPolygonJoinBounded(in, polyTexts.toDF("qid", "poly"), "poly", "qid", bound)
+    val want = S2Joins.broadcastContainsJoin(in,
+      polyTexts.map { case (q, t) => (q, S2TextFormat.parsePolygon(t): S2Region) })
+    val plan = got.queryExecution.executedPlan.toString
+    if (plain.size <= bound) assert(plan.contains(s"keep=${plain.size}"), plan)
+    else assert(!plan.contains("keep="), plan)
+    assert(idPairs(got) == idPairs(want.where(col("doc_id").isNotNull)))
+    (got, want)
+  }
+
+  test("termPolygonJoin prune: overlapping polygons sharing query terms") {
+    val polyTexts = Seq((3, "0:0, 0:35, 30:35, 30:0"), (4, "-10:10, -10:40, 20:40, 20:10"))
+    val ix = graft.functions.S2SpatialKernels.indexer
+    val Seq(a, b) = polyTexts.map { case (_, t) =>
+      ix.queryTerms(S2TextFormat.parsePolygon(t)).filterNot(_.startsWith(ix.marker)).toSet }
+    assert((a & b).nonEmpty)
+    val (got, _) = termJoinVsBroadcast(docs, polyTexts)
+    // some doc lies in both polygons
+    assert(idPairs(got).groupBy(_._1).values.exists(_.size == 2))
+  }
+
+  test("termPolygonJoin prune: a polygon no doc hits gives no rows, same schema") {
+    val (got, want) = termJoinVsBroadcast(docs,
+      Seq((9, "-60:-140, -60:-139.9, -59.9:-139.9, -59.9:-140")))
+    assert(got.count() == 0 && want.count() == 0)
+    assert(got.schema == want.schema)
+  }
+
+  test("termPolygonJoin prune: rows with a null lat, lng or doc_id") {
+    val h = pmod(xxhash64(col("doc_id")), lit(10))
+    val withNulls = docs
+      .withColumn("lat", when(h === 1, lit(null).cast("double")).otherwise(col("lat")))
+      .withColumn("lng", when(h === 2, lit(null).cast("double")).otherwise(col("lng")))
+      .withColumn("doc_id", when(h === 3, lit(null).cast("string")).otherwise(col("doc_id")))
+    val (got, want) = termJoinVsBroadcast(withNulls,
+      Seq((3, "0:0, 0:35, 30:35, 30:0"), (7, "-40:-80, -40:-30, -10:-30, -10:-80")))
+    assert(want.where(col("doc_id").isNull).count() > 0)
+    assert(got.where(col("doc_id").isNull).count() == 0)
+  }
+
+  test("termPolygonJoin prune: a query side over the bound keeps every doc term") {
+    val polyTexts = Seq((3, "0:0, 0:35, 30:35, 30:0"), (7, "-40:-80, -40:-30, -10:-30, -10:-80"))
+    val ix = graft.functions.S2SpatialKernels.indexer
+    val n = polyTexts.flatMap { case (_, t) => ix.queryTerms(S2TextFormat.parsePolygon(t)) }
+      .filterNot(_.startsWith(ix.marker)).distinct.size
+    val (atBound, _) = termJoinVsBroadcast(docs, polyTexts, bound = n)
+    val (overBound, _) = termJoinVsBroadcast(docs, polyTexts, bound = n - 1)
+    assert(idPairs(atBound).nonEmpty && idPairs(atBound) == idPairs(overBound))
+  }
+
   test("docIndexTerms honours its indexer under whole-stage codegen") {
     import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
     // a range source (not a local relation, which the optimizer folds)
