@@ -108,21 +108,22 @@ object S2Joins {
     * reference defaults; s2region_term_indexer.cc:155-175). */
   def docIndexTerms(docs: DataFrame, indexer: S2TermIndexer,
                     latCol: String = "lat", lngCol: String = "lng"): DataFrame =
-    docIndexTerms(docs, indexer, latCol, lngCol, None)
+    docs.withColumn("term", explode(pointTerms(col(latCol), col(lngCol), indexer, None)))
 
-  /** [[docIndexTerms]] restricted to the cells of `keep` (sorted ids). */
-  private def docIndexTerms(docs: DataFrame, indexer: S2TermIndexer, latCol: String,
-                            lngCol: String, keep: Option[Array[Long]]): DataFrame = {
+  /** A point's index terms, restricted to the cells of `keep` (sorted ids)
+    * when given. */
+  private def pointTerms(lat: Column, lng: Column, indexer: S2TermIndexer,
+                         keep: Option[Array[Long]]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    docs.withColumn("term", explode(toCol(graft.functions.S2PointIndexTermsExpr(
-      toExpr(col(latCol).cast("double")), toExpr(col(lngCol).cast("double")), indexer, keep))))
+    toCol(graft.functions.S2PointIndexTermsExpr(
+      toExpr(lat.cast("double")), toExpr(lng.cast("double")), indexer, keep))
   }
 
-  /** The most distinct plain query terms [[termPolygonJoin]] prunes the
-    * doc terms to. The set rides the task binary of every doc-term task
-    * as sorted cell ids: 32768 × 8 B = 256 KiB, a quarter of the 1000 KiB
-    * task binary above which Spark's DAGScheduler warns. A larger query
-    * side keeps every doc term. */
+  /** The most plain query terms (counted per polygon) [[termPolygonJoin]]
+    * prunes the doc terms to. The set rides the task binary of every
+    * doc-term task as sorted cell ids: 32768 × 8 B = 256 KiB, a quarter
+    * of the 1000 KiB task binary above which Spark's DAGScheduler warns.
+    * A larger query side keeps every doc term. */
   private val TermPruneBound = 1 << 15
 
   /** Full term-join pipeline for polygon regions given as text: emits
@@ -151,7 +152,7 @@ object S2Joins {
     * defaults 5 and 256 MB); a split changes task sizes, never rows.
     *
     * Data-induced prune: when called, it runs ONE small job that collects
-    * the distinct plain (unmarked) query terms of `polys`, at most
+    * the plain (unmarked) query terms of `polys`, at most
     * [[TermPruneBound]] + 1 of them. Within the bound, each doc emits
     * only the terms in that set before the term shuffle: a doc term no
     * query shares cannot join, so the rows are the same. Above the bound
@@ -169,16 +170,17 @@ object S2Joins {
     val ix = S2SpatialKernels.indexer
     val q = polys.select(col(qidCol), col(polyTextCol),
       explode(S2.polygonQueryTerms(col(polyTextCol))).as("term"))
-    val plain = q.select("term").where(!col("term").startsWith(ix.marker)).distinct()
+    // no distinct: it would add an exchange and a job; polygons sharing
+    // terms only reach the bound sooner
+    val plain = q.select("term").where(!col("term").startsWith(ix.marker))
       .limit(pruneBound + 1).collect()
     val keep =
       if (plain.length > pruneBound) None
-      else Some(plain.map(r => S2CellId.fromToken(r.getString(0))).sorted)
+      else Some(plain.map(r => S2CellId.fromToken(r.getString(0))).distinct.sorted)
     val slim = docs.select(col("doc_id"),
       col("lat").cast("double").as("lat"), col("lng").cast("double").as("lng"))
-    val d = docIndexTerms(slim, ix, "lat", "lng", keep)
+    val d = slim.withColumn("term", explode(pointTerms(col("lat"), col("lng"), ix, keep)))
     val matches = d.join(q, "term")
-      .drop("term")
       // no (doc, qid) dedup: a point doc's plain ancestor tokens meet a
       // region query's plain tokens (its DISJOINT covering cells) at most
       // once, so each candidate pair arrives exactly once — the invariant
