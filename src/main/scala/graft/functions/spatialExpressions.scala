@@ -51,9 +51,6 @@ object S2SpatialKernels {
   private def toArrayData(terms: Array[String]): ArrayData =
     new GenericArrayData(terms.map(t => UTF8String.fromString(t).asInstanceOf[Any]))
 
-  def pointIndexTerms(ix: S2TermIndexer, lat: Double, lng: Double): ArrayData =
-    pointIndexTerms(ix, null, lat, lng)
-
   def pointIndexTerms(ix: S2TermIndexer, keep: Array[Long], lat: Double, lng: Double): ArrayData = {
     val p = V3.fromLatLngDegrees(lat, lng)
     toArrayData(ix.indexTermsForPoint(p.x, p.y, p.z, keep))
@@ -123,9 +120,9 @@ case class S2PointIndexTermsExpr(left: Expression, right: Expression,
       lat.asInstanceOf[Double], lng.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ix = ctx.addReferenceObj("indexer", indexer, classOf[S2TermIndexer].getName)
-    val args = keep.fold(ix)(k => s"$ix, ${ctx.addReferenceObj("keep", k, "long[]")}")
+    val k = ctx.addReferenceObj("keep", keep.orNull, "long[]")
     defineCodeGen(ctx, ev, (la, ln) =>
-      s"graft.functions.S2SpatialKernels.pointIndexTerms($args, $la, $ln)")
+      s"graft.functions.S2SpatialKernels.pointIndexTerms($ix, $k, $la, $ln)")
   }
   override protected def stringArgs: Iterator[Any] =
     children.iterator ++ keep.map(k => s"keep=${k.length}")
